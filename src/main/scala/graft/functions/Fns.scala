@@ -101,10 +101,6 @@ object Fns {
     dotD(ad, bd) / (sqrt(dotD(ad, ad)) * sqrt(dotD(bd, bd)))
   }
 
-  /** Cosine given precomputed L2 norms (avoids recomputing norms per pair). */
-  def cosineWithNorms(a: Column, b: Column, normA: Column, normB: Column): Column =
-    dotD(a, b) / (normA * normB)
-
   def l2Norm(a: Column): Column = sqrt(dotD(a, a))
 
   /** Word n-grams (as "w1 w2 ... wn" strings) from a token array; docs with

@@ -777,9 +777,11 @@ object Dedup extends org.apache.spark.internal.Logging {
   def jaccardPairsShared(s: SparkSession, d: String,
       maxDf: Long = MaxShingleDf): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "jacpairs",
-      s"$d/documents.parquet",
-      Seq(JacPairsBaseE4, maxDf, JacPairsVersion))(
+      s"$d/documents.parquet", jacPairsParams(maxDf))(
       pairProductBuild(s, d, maxDf, wantJac = true))
+
+  private def jacPairsParams(maxDf: Long): Seq[Any] =
+    Seq(JacPairsBaseE4, maxDf, JacPairsVersion)
 
   /** The BUILDER both pair products share (guide §5: shared build
     * intermediates): jacpairs and contpairs run the IDENTICAL df-capped
@@ -787,9 +789,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     * dominant cost) and differ only in the final score projection. When
     * the requested product's SIBLING is also absent, the core computes
     * once (persisted), the sibling is derived from it and published
-    * directly (its own manifest/key — consumers and eviction see exactly
-    * the product its own builder would have written; identical rows: the
-    * score tails are pure projections of the same overlap frame), and the
+    * through its own [[graft.sources.ArtifactCache.getOrBuildDir]] (its
+    * own key — consumers and eviction see exactly the product its own
+    * builder would have written; identical rows: the score tails are
+    * pure projections of the same overlap frame), and the
     * requested frame is returned for getOrBuild's normal publish. A cold
     * pipeline thus pays ONE overlap scan for both pair tables. When the
     * sibling already exists, this is the plain single-product build. */
@@ -798,36 +801,24 @@ object Dedup extends org.apache.spark.internal.Logging {
     import graft.sources.ArtifactCache
     val keyFile = s"$d/documents.parquet"
     val (sibName, sibParams) =
-      if (wantJac) ("contpairs", Seq[Any](ContainmentThrE4, maxDf, ContPairsVersion))
-      else ("jacpairs", Seq[Any](JacPairsBaseE4, maxDf, JacPairsVersion))
-    val sibDir = ArtifactCache.path(sibName, keyFile, sibParams)
+      if (wantJac) ("contpairs", contPairsParams(maxDf))
+      else ("jacpairs", jacPairsParams(maxDf))
     val (ov0, sh) = pairOverlapFromShingles(
       shingles(Tables.documents(s, d)), maxDf)
-    def jacOf(ov: DataFrame) = jacScored(ov, JacPairsBaseE4)
-    def contOf(ov: DataFrame) = contScored(ov, ContainmentThrE4)
-    if (ArtifactCache.exists(sibDir))
-      graft.functions.Caching.releaseAfterAction(
-        if (wantJac) jacOf(ov0) else contOf(ov0), sh)
+    def scored(ov: DataFrame, jac: Boolean) =
+      if (jac) jacScored(ov, JacPairsBaseE4) else contScored(ov, ContainmentThrE4)
+    if (ArtifactCache.exists(ArtifactCache.path(sibName, keyFile, sibParams)))
+      graft.functions.Caching.releaseAfterAction(scored(ov0, wantJac), sh)
     else {
       val ov = ov0.persist(StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      val tmp = ArtifactCache.newTmpDir(sibDir)
-      try {
-        (if (wantJac) contOf(ov) else jacOf(ov))
-          .write.mode("overwrite").parquet(tmp)
-        ArtifactCache.writeManifest(tmp,
-          ArtifactCache.keyString(sibName, keyFile, sibParams))
-      } catch { case e: Throwable => ArtifactCache.rmTree(tmp); throw e }
-      ArtifactCache.publish(tmp, sibDir)
       // The sibling's products entry prices its marginal write; the
       // shared core is inside the requester's getOrBuild timing.
-      ArtifactCache.recordBuild(ArtifactCache.baseName(sibDir),
-        (System.nanoTime() - t0) / 1e9)
+      ArtifactCache.getOrBuildDir(s, sibName, keyFile, sibParams)(tmp =>
+        scored(ov, !wantJac).write.mode("overwrite").parquet(tmp)): Unit
       // Registered AFTER the sibling's write action, so the next
       // completed action — getOrBuild's own parquet write of the
       // returned frame — releases the shared core.
-      graft.functions.Caching.releaseAfterAction(
-        if (wantJac) jacOf(ov) else contOf(ov), ov, sh)
+      graft.functions.Caching.releaseAfterAction(scored(ov, wantJac), ov, sh)
     }
   }
 
@@ -946,9 +937,11 @@ object Dedup extends org.apache.spark.internal.Logging {
   def containmentPairsShared(s: SparkSession, d: String,
       maxDf: Long = MaxShingleDf): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "contpairs",
-      s"$d/documents.parquet",
-      Seq(ContainmentThrE4, maxDf, ContPairsVersion))(
+      s"$d/documents.parquet", contPairsParams(maxDf))(
       pairProductBuild(s, d, maxDf, wantJac = false))
+
+  private def contPairsParams(maxDf: Long): Seq[Any] =
+    Seq(ContainmentThrE4, maxDf, ContPairsVersion)
 
   def containmentPairs(s: SparkSession, d: String,
       minContE4: Long = ContainmentThrE4,
@@ -1102,12 +1095,11 @@ object Dedup extends org.apache.spark.internal.Logging {
       minJacE4: Long = 100L): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "dedupcc",
       s"$d/documents.parquet",
-      // The pair product's version and base are part of THIS key too:
-      // the build consumes jacpairs, so a pair-construction change
-      // must invalidate the assignment mechanically, not by a
-      // remember-to-double-bump convention.
-      Seq(minJacE4, MaxShingleDf, ClustersVersion,
-        JacPairsBaseE4, JacPairsVersion))(
+      // The build consumes jacpairs, so the pair product's content
+      // address is part of THIS key: any change to it (corpus, base,
+      // df cap, version) moves the assignment's key mechanically.
+      Seq(minJacE4, ClustersVersion, graft.sources.ArtifactCache.address(
+        "jacpairs", s"$d/documents.parquet", jacPairsParams(MaxShingleDf))))(
       // The build itself consumes the SHARED pair product (filtered at
       // this assignment's threshold — monotone above the base, so rows
       // are identical to the self-contained Df path), so the two cached

@@ -202,8 +202,14 @@ object Graph {
     * unchanged. */
   def coSupplyEdgesShared(s: SparkSession, d: String): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "cosupply",
-      s"$d/lineitem.parquet",
-      Seq(TriEdgesPerNode, CoSupplyVersion))(coSupplyEdges(s, d))
+      s"$d/lineitem.parquet", coSupplyParams)(coSupplyEdges(s, d))
+
+  private def coSupplyParams: Seq[Any] = Seq(TriEdgesPerNode, CoSupplyVersion)
+
+  /** The cosupply product's address — part of every key built FROM it. */
+  private def coSupplyAddress(d: String): String =
+    graft.sources.ArtifactCache.address("cosupply", s"$d/lineitem.parquet",
+      coSupplyParams)
 
   /** Algorithm version of the co-supply edge product — part of the cache
     * key (like the IVF-PQ index's IvfPqIndexVersion): bump whenever
@@ -265,9 +271,9 @@ object Graph {
     * engine) used to re-run inside BOTH [[componentsQuery]] and
     * [[modularityEval]]. The supplier-dim-complete (s_suppkey,
     * component_id) labeling now publishes once per corpus through the
-    * content-addressed cache (keyed on the lineitem identity + the edge
-    * budget + both algorithm versions, the cosupply/knngraph pattern) and
-    * every consumer scans the stored labels. Identical rows to the inline
+    * content-addressed cache (keyed on the cosupply product's address +
+    * its own algorithm version) and every consumer scans the stored
+    * labels. Identical rows to the inline
     * computation by construction, so consumers' oracles are unchanged.
     * The build reads TWO sources — lineitem (edges) and the supplier dim
     * (the left-join completion) — so the supplier file's identity rides
@@ -276,7 +282,7 @@ object Graph {
   def componentLabelsShared(s: SparkSession, d: String): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "cclabels",
       s"$d/lineitem.parquet",
-      Seq(TriEdgesPerNode, CoSupplyVersion, CcLabelsVersion,
+      Seq(coSupplyAddress(d), CcLabelsVersion,
         graft.sources.ArtifactCache.fileIdentity(s"$d/supplier.parquet"))) {
       val comp = graft.operators.Dedup.components(
         coSupplyEdgesShared(s, d).select(col("a").as("d1"), col("b").as("d2")))
@@ -435,19 +441,19 @@ object Graph {
     * [[componentLabelsShared]]: the fixed-round synchronous propagation
     * used to re-run inside both [[lpaQuery]] and [[modularityEval]]. The
     * (node, community) table publishes once per corpus (keyed on the
-    * lineitem identity + edge budget + round count + versions); community
+    * cosupply product's address + round count + version); community
     * sizes are a label-sized aggregate each consumer derives. */
   def lpaLabelsShared(s: SparkSession, d: String): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "lpalabels",
       s"$d/lineitem.parquet",
-      Seq(TriEdgesPerNode, CoSupplyVersion, LpaRounds, LpaLabelsVersion))(
+      Seq(coSupplyAddress(d), LpaRounds, LpaLabelsVersion))(
       lpaDf(coSupplyEdgesShared(s, d)).select("node", "community"))
 
   /** Same, over any canonical undirected edge list (a, b), a < b
     * (planted tests). Scale shape per round: one edge⋈label join keyed on
     * the neighbor, one (node, label) count aggregate, one per-node argmax
-    * as a min-struct aggregate (the assignCells shape — no window), with
-    * the label table checkpointed per round so the plan stays O(1) like
+    * as a min-struct aggregate (no window), with the label table
+    * checkpointed per round so the plan stays O(1) like
     * the other iterative engines. Per-round shuffle is edge-sized — the
     * standard LPA bound. */
   /** The LPA engine's cached undirected edge frame — PRE-PARTITIONED on

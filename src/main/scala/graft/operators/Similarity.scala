@@ -291,7 +291,7 @@ object Similarity {
   /** IVF (inverted-file) approximate top-k — the cell-partitioned ANN scale
     * path, complementing the hash-bucketed `lshTopK`:
     *  1. assign every corpus vector to its nearest centroid by cosine
-    *     (argmax over nCells broadcast centroids; ties break on lower cell
+    *     (argmax over nCells driver-held centroids; ties break on lower cell
     *     id; comparisons use e4-rounded similarity so both engines order
     *     identically);
     *  2. each query probes its nProbe nearest cells;
@@ -308,34 +308,27 @@ object Similarity {
     val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
     val cents = c.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val assign = assignCells(c, cents)
     graft.functions.Caching.releaseAfterAction(
-      probeAndScore(c, cents, assign, nQueries, k, nProbe), c)
+      probeAndScore(c, cents, stubAssignment(c, nCells), nQueries, k, nProbe),
+      c)
+  }
+
+  /** The stub quantizer's coarse assignment (vec_id, cell_id): the
+    * centroids are the first `nCells` corpus vectors, collected to the
+    * driver (nCells × Dim numbers) and unrolled by [[withAssignedCell]]
+    * — the one cell-assignment kernel every IVF path shares. */
+  private def stubAssignment(c: DataFrame, nCells: Int): DataFrame = {
+    val cents = c.filter(col("vec_id") < nCells).select("vec_id", "v")
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+    withAssignedCell(c, cents).select("vec_id", "cell_id")
   }
 
   /** Coarse assignment: one row per corpus vector — argmax over the
-    * broadcast centroids by e4-rounded cosine, ties to the lower cell id
-    * (identical ordering on both engines). The one-pass
-    * broadcast-centroids scan is the production IVF indexing shape; the
-    * argmax is a map-side-combining min over (−sim, cell) struct pairs,
-    * not a window sort (same plan shape as the trained-PQ encode). */
-  private def assignCells(c: DataFrame, cents: DataFrame): DataFrame =
-    assignCellsSim(c, cents).select("vec_id", "cell_id")
-
-  /** [[assignCells]] keeping the winning e4 cosine — the form the full
-    * clustering product emits. */
-  private def assignCellsSim(c: DataFrame, cents: DataFrame): DataFrame =
-    c.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cell_id"),
-        e4(dotD(col("v"), col("cv")) / (col("nrm") * col("cnrm"))).as("csim_e4"))
-      .groupBy("vec_id")
-      .agg(min(struct(negate(col("csim_e4")).as("ns"), col("cell_id").as("cell_id"))).as("mn"))
-      .select(col("vec_id"), col("mn.cell_id").as("cell_id"),
-        negate(col("mn.ns")).as("sim_e4"))
-
-  /** Coarse assignment as a PURE PROJECTION for DRIVER-HELD centroids —
-    * every trained path (the Lloyd loops hold the centroid table as a
-    * Seq between iterations): the per-cell cosines unroll to literal
+    * centroids by e4-rounded cosine, ties to the lower cell id
+    * (identical ordering on both engines), as a PURE PROJECTION over
+    * DRIVER-HELD centroids (the stub quantizer collects its nCells
+    * vectors; the Lloyd loops hold the centroid table as a Seq between
+    * iterations): the per-cell cosines unroll to literal
     * expressions and the argmax is one least() over (−sim_e4, cell_id)
     * structs appended to the input frame. Replaces the r16 shape
     * (crossJoin ×nCells expansion → per-vector argmin AGGREGATE → a
@@ -344,13 +337,13 @@ object Similarity {
     * partial-aggregate map-side straight off this projection, so a Lloyd
     * iteration shuffles nCells rows per task instead of the corpus
     * (guide §2.3 "aggregate before you shuffle", §1.2 step 1).
-    * Ordering and arithmetic are IDENTICAL to [[assignCellsSim]]:
-    * struct least() is the same (−e4 cosine, cell id) lexicographic
-    * comparison as the min-struct aggregate, and the centroid norm is
-    * driver-computed with the same sequential accumulation order as the
-    * codegen dot product (acc += x_i·x_i, then Math.sqrt — both engines'
-    * sqrt is the correctly-rounded IEEE one), so the e4 cosine is
-    * bit-identical and the oracle is unchanged. */
+    * Ordering and arithmetic are IDENTICAL to the oracle's argmin
+    * aggregate: struct least() is the same (−e4 cosine, cell id)
+    * lexicographic comparison as a min-struct aggregate, and the
+    * centroid norm is driver-computed with the same sequential
+    * accumulation order as the codegen dot product (acc += x_i·x_i,
+    * then Math.sqrt — both engines' sqrt is the correctly-rounded IEEE
+    * one), so the e4 cosine is bit-identical. */
   private def withAssignedCell(c: DataFrame,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
     require(cents.nonEmpty, "withAssignedCell needs at least one centroid")
@@ -772,7 +765,7 @@ object Similarity {
     val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
     val cents = c.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val assign = assignCells(c, cents)
+    val assign = stubAssignment(c, nCells)
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val wProbe = Window.partitionBy("qid").orderBy(desc("csim_e4"), asc("cell_id"))
@@ -1086,11 +1079,11 @@ object Similarity {
   /** Resolve (and build on miss) the persisted index for corpus `d`:
     * returns the index directory, content-addressed unless the caller
     * passes an explicit one. Shared by the batch served query and the
-    * served streaming ingest. The miss path builds FIRST-WINS
-    * (`replace = false`): two consumers cold-starting concurrently both
-    * train, the first publish sticks, the loser discards its complete
-    * copy — a just-published live index is never deleted under the
-    * winner's readers.
+    * served streaming ingest. The content-addressed default is a plain
+    * [[graft.sources.ArtifactCache.getOrBuildDir]] product; an explicit
+    * (or swap-managed) directory builds FIRST-WINS through the same
+    * publish protocol (`replace = false`), so a just-published live index
+    * is never deleted under a concurrent winner's readers.
     *
     * Every HIT validates the index manifest against the corpus identity
     * and training parameters THIS caller requested and fails loudly on
@@ -1104,19 +1097,22 @@ object Similarity {
       indexDir: Option[String], nCells: Int = IvfCells, m: Int = PqM,
       kCents: Int = PqK, ivfIters: Int = IvfKmeansIters,
       pqIters: Int = PqKmeansIters, eta: Int = PqEta): String = {
-    val dir = ivfPqResolveDir(indexDir.getOrElse(
-      ivfPqIndexDir(d, nCells, m, kCents, ivfIters, pqIters, eta)))
-    if (!graft.sources.ArtifactCache.exists(s"$dir/index")) {
-      val t0 = System.nanoTime()
-      ivfPqWriteIndex(s, d, dir, nCells, m, kCents, ivfIters, pqIters, eta,
-        replace = false)
-      graft.sources.ArtifactCache.recordBuild(
-        graft.sources.ArtifactCache.baseName(dir),
-        (System.nanoTime() - t0) / 1e9)
+    import graft.sources.ArtifactCache
+    val base = indexDir.getOrElse(
+      ivfPqIndexDir(d, nCells, m, kCents, ivfIters, pqIters, eta))
+    val dir = ivfPqResolveDir(base)
+    if (indexDir.isEmpty && dir == base)
+      ArtifactCache.getOrBuildDir(s, "ivfpq", s"$d/embeddings.parquet",
+        ivfPqParams(nCells, m, kCents, ivfIters, pqIters, eta))(tmp =>
+        ivfPqWriteTables(s, d, tmp, nCells, m, kCents, ivfIters, pqIters, eta))
+    else {
+      if (!ArtifactCache.exists(s"$dir/index"))
+        ivfPqWriteIndex(s, d, dir, nCells, m, kCents, ivfIters, pqIters, eta,
+          replace = false)
+      ArtifactCache.validateManifest(dir,
+        ivfPqManifestKey(d, nCells, m, kCents, ivfIters, pqIters, eta))
+      dir
     }
-    graft.sources.ArtifactCache.validateManifest(dir,
-      ivfPqManifestKey(d, nCells, m, kCents, ivfIters, pqIters, eta))
-    dir
   }
 
   /** The live index under a version-pointer BASE directory: if
@@ -1139,7 +1135,11 @@ object Similarity {
       ivfIters: Int, pqIters: Int, eta: Int): String =
     graft.sources.ArtifactCache.keyString("ivfpq",
       s"$d/embeddings.parquet",
-      Seq(nCells, m, kCents, ivfIters, pqIters, eta, IvfPqIndexVersion))
+      ivfPqParams(nCells, m, kCents, ivfIters, pqIters, eta))
+
+  private def ivfPqParams(nCells: Int, m: Int, kCents: Int, ivfIters: Int,
+      pqIters: Int, eta: Int): Seq[Any] =
+    Seq(nCells, m, kCents, ivfIters, pqIters, eta, IvfPqIndexVersion)
 
   /** REBUILD-UNDER-READERS: build a fresh index VERSION under `baseDir`
     * and atomically flip the `CURRENT` pointer to it — the index swap the
@@ -1297,7 +1297,7 @@ object Similarity {
       pqIters: Int = PqKmeansIters, eta: Int = PqEta): String =
     graft.sources.ArtifactCache.path("ivfpq",
       s"$d/embeddings.parquet",
-      Seq(nCells, m, kCents, ivfIters, pqIters, eta, IvfPqIndexVersion))
+      ivfPqParams(nCells, m, kCents, ivfIters, pqIters, eta))
 
   /** BUILD-AND-PERSIST the trained IVF-PQ index — the production split's
     * offline half (what [[ivfPqTrainedCodes]] computes, written out): runs
@@ -1308,47 +1308,35 @@ object Similarity {
     *  - `centroids/`  (cell_id, cv) — nCells rows;
     *  - `codebook/`   (m, j, cm) — M×K rows.
     *
-    * The write is crash-safe: tables land under `dir.tmp` and an atomic
-    * rename publishes them, so a killed build never leaves a half-index a
-    * reader could mistake for complete. On a cluster, `index/` would be
-    * written bucketed by cell_id (the probe join's key); local mode keeps
-    * the plain layout. */
+    * Published through [[graft.sources.ArtifactCache.buildAt]], so
+    * a killed build never leaves a half-index. `replace` (the default)
+    * REBUILDS in place — coordinating live readers is the caller's
+    * concern, as with any index swap. On a cluster, `index/` would be
+    * written bucketed by cell_id (the probe join's key). */
   def ivfPqWriteIndex(s: SparkSession, d: String, dir: String,
       nCells: Int = IvfCells, m: Int = PqM, kCents: Int = PqK,
       ivfIters: Int = IvfKmeansIters, pqIters: Int = PqKmeansIters,
-      eta: Int = PqEta, replace: Boolean = true): Unit = {
+      eta: Int = PqEta, replace: Boolean = true): Unit =
+    graft.sources.ArtifactCache.buildAt(dir,
+      ivfPqManifestKey(d, nCells, m, kCents, ivfIters, pqIters, eta),
+      replace)(tmp =>
+      ivfPqWriteTables(s, d, tmp, nCells, m, kCents, ivfIters, pqIters, eta))
+
+  /** Train the model and write the index's three tables under `out`. */
+  private def ivfPqWriteTables(s: SparkSession, d: String, out: String,
+      nCells: Int, m: Int, kCents: Int, ivfIters: Int, pqIters: Int,
+      eta: Int): Unit = {
     import s.implicits._
     val (cents, cb, full, nv, af, rsubs) =
       ivfPqTrainedModel(s, d, nCells, m, kCents, ivfIters, pqIters, eta)
     try {
       val codes = residualEncode(rsubs, cbDf(s, cb), eta)
-      // Private tmp dir: concurrent builders never touch each other's
-      // in-flight part files (ArtifactCache.newTmpDir). A failed write
-      // cleans its own tmp tree (unique names are not self-healing).
-      val tmp = graft.sources.ArtifactCache.newTmpDir(dir)
-      try {
-        trainedIndexDf(af, codes, m)
-          .write.mode("overwrite").parquet(s"$tmp/index")
-        cents.toDF("cell_id", "cv")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
-        cbDf(s, cb)
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/codebook")
-        // The read-time proof this directory serves THIS corpus at THESE
-        // knobs (ensureIvfPqIndex demands it — the explicit-dir
-        // production mode must fail loudly on a stale/mismatched index).
-        graft.sources.ArtifactCache.writeManifest(tmp,
-          ivfPqManifestKey(d, nCells, m, kCents, ivfIters, pqIters, eta))
-      } catch { case e: Throwable =>
-        graft.sources.ArtifactCache.rmTree(tmp); throw e
-      }
-      // Replace semantics (the default): this API REBUILDS an index in
-      // place — coordinating against live readers is the caller's
-      // deployment concern, as with any index swap. The build-on-miss
-      // path (ensureIvfPqIndex) passes replace = false instead: losing a
-      // concurrent cold-start race discards this copy and keeps the
-      // winner's, so a just-published live index is never deleted.
-      if (replace) graft.sources.ArtifactCache.rmTree(dir)
-      graft.sources.ArtifactCache.publish(tmp, dir)
+      trainedIndexDf(af, codes, m)
+        .write.mode("overwrite").parquet(s"$out/index")
+      cents.toDF("cell_id", "cv")
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/centroids")
+      cbDf(s, cb)
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/codebook")
     } finally
       // Release the model-sized corpus frames even when a write fails —
       // the library must not rely on the caller's clearCache hygiene.
@@ -1763,19 +1751,22 @@ object Similarity {
     * the content-addressed cache, and every search/monitor/sweep query
     * SCANS the stored edges instead of re-banding the corpus. Same rows
     * as [[knnGraph]] by construction, so consumers' oracles are
-    * unchanged. `rows` = 0 (the default) resolves the band-geometry
-    * rule from the corpus count; the RESOLVED value is in the product
-    * key (4 at every contract corpus — keys unchanged). */
+    * unchanged. */
   def knnGraphShared(s: SparkSession, d: String, k: Int = KnnK,
       bands: Int = 8, rows: Int = 0,
-      bucketCap: Long = KnnBucketCap): DataFrame = {
-    val r = if (rows > 0) rows
-      else bandRowsFor(Tables.embeddings(s, d).count())
+      bucketCap: Long = KnnBucketCap): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
-      s"$d/embeddings.parquet",
-      Seq(k, bands, r, bucketCap, KnnGraphVersion))(
-      knnGraphDf(Tables.embeddings(s, d), k, bands, r, bucketCap))
-  }
+      s"$d/embeddings.parquet", knnGraphParams(k, bands, rows, bucketCap))(
+      knnGraphDf(Tables.embeddings(s, d), k, bands, rows, bucketCap))
+
+  /** The knngraph key's params — ONE definition for both builders and
+    * [[navGraphShared]]'s key. `rows` = 0 keys the [[bandRowsFor]] rule
+    * itself: its input, the corpus count, is pinned by the source
+    * identity, so the key needs no count job (a rule change bumps
+    * [[KnnGraphVersion]]). */
+  private def knnGraphParams(k: Int, bands: Int, rows: Int,
+      bucketCap: Long): Seq[Any] =
+    Seq(k, bands, rows, bucketCap, KnnGraphVersion)
 
   /** Same, over any (vec_id, embedding: array<float|double>) DataFrame
     * (planted tests). `rows` = 0 resolves [[bandRowsFor]] on the
@@ -2282,13 +2273,14 @@ object Similarity {
   def navGraphShared(s: SparkSession, d: String): DataFrame =
     graft.sources.ArtifactCache.getOrBuild(s, "navgraph",
       s"$d/embeddings.parquet",
-      // KnnBucketCap joined the key in v4: the banded up/highway stages
-      // consume it DIRECTLY (eligibility rule), so a cap change must
-      // rebuild this product too, not just the knngraph it consumes —
-      // the same silent-staleness class the NavMirrorCap omission was
-      // (r14, commit 697318f).
-      Seq(KnnK, CoarseMod, NavHighwayK, NavDownCap, NavMirrorCap,
-        KnnBucketCap, KnnGraphVersion, NavGraphVersion))(navGraphBuild(s, d))
+      // The build consumes the knngraph product: its content address
+      // carries KnnK, the band geometry, KnnBucketCap (which the banded
+      // up/highway stages here also apply) and its version, so a change
+      // to any of them rebuilds this product too.
+      Seq(graft.sources.ArtifactCache.address("knngraph",
+          s"$d/embeddings.parquet", knnGraphParams(KnnK, 8, 0, KnnBucketCap)),
+        CoarseMod, NavHighwayK, NavDownCap, NavMirrorCap, NavGraphVersion))(
+      navGraphBuild(s, d))
 
   // private[graft] so PlanSpec can pin the BUILD's plan shape (no
   // broadcast of a non-constant-bounded frame) without a product write.
@@ -2314,12 +2306,11 @@ object Similarity {
     // The knngraph product this build consumes runs the IDENTICAL
     // corpus/keys/eligibility chain — on a COLD run its builder reuses
     // the frames persisted above (one corpus scan + one projection pass
-    // for both products, guide §5); the key is byte-identical to
-    // [[knnGraphShared]]'s, so a warm run scans the stored edges and the
-    // closure never evaluates.
+    // for both products, guide §5); the key is [[knnGraphShared]]'s
+    // default one, so a warm run scans the stored edges and the closure
+    // never evaluates.
     val knnRanked = graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
-        s"$d/embeddings.parquet",
-        Seq(KnnK, 8, rowsN, KnnBucketCap, KnnGraphVersion))(
+        s"$d/embeddings.parquet", knnGraphParams(KnnK, 8, 0, KnnBucketCap))(
         knnGraphFromCapped(c, ck, KnnK))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val knn = knnRanked.select("src", "dst")
@@ -2330,7 +2321,7 @@ object Similarity {
       .select(col("dst").as("src"), col("src").as("dst"))
     val ckCoarse = ck.filter(col("vec_id") % CoarseMod === 0)
     // Up-links: argmax over the BUCKET-MATE coarse candidates
-    // (assignCells aggregate shape, no window); `cs` is carried so the
+    // (min-struct aggregate, no window); `cs` is carried so the
     // down-link cap can rank members.
     val upBest = ck.as("a")
       .join(ckCoarse.as("b").select(col("vec_id").as("cc"),
@@ -3630,7 +3621,7 @@ object Similarity {
       .select("qid", "cell_id", "pr")
     // Each candidate carries the probe depth at which it first appears
     // (one row per (qid, cid): a vector is assigned to exactly one cell).
-    val cand = assignCells(c, cents).join(broadcast(probeRanks), "cell_id")
+    val cand = stubAssignment(c, nCells).join(broadcast(probeRanks), "cell_id")
       .select(col("qid"), col("vec_id").as("cid"), col("pr"))
     // cand is occupancy × nprobe × nQueries rows at any corpus size —
     // broadcast it so the vector join-back streams the corpus instead of

@@ -168,13 +168,19 @@ object ArtifactCache {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
 
+  /** The CONTENT ADDRESS `<name>-<16-hex-key>` (the product dir's
+    * basename). A product built FROM another product puts its
+    * dependency's address in its own `params`, so any change to the
+    * dependency moves the dependent's key too. */
+  def address(name: String, keyFile: String, params: Seq[Any]): String =
+    s"$name-${sha8(keyString(name, keyFile, params))}"
+
   /** Content-addressed directory for product `name` derived from
-    * `keyFile` under `params`: `<root>/<name>-<16-hex-key>`. Touches the
+    * `keyFile` under `params`: `<root>/<address>`. Touches the
     * filesystem only to read the key file's metadata and ensure the
     * root. */
   def path(name: String, keyFile: String, params: Seq[Any]): String =
-    new Path(root, s"$name-${sha8(keyString(name, keyFile, params))}")
-      .toString
+    new Path(root, address(name, keyFile, params)).toString
 
   // ---- small FS helpers (shared with the persisted-index machinery,
   //      which manages versioned directories outside getOrBuild) ----
@@ -245,8 +251,8 @@ object ArtifactCache {
   private val ManifestName = "_GRAFT_MANIFEST"
 
   /** Record `key` as the manifest of the (still-private) build dir —
-    * called by builders after the tables land, before publish. The
-    * leading underscore keeps it out of Spark's input listing. */
+    * [[buildAt]] calls it after the tables land, before publish.
+    * The leading underscore keeps it out of Spark's input listing. */
   def writeManifest(buildDir: String, key: String): Unit = {
     val d = new Path(buildDir); val fs = fsOf(d)
     fs.mkdirs(d): Unit
@@ -318,16 +324,12 @@ object ArtifactCache {
     }
   }
 
-  /** Build seconds recorded by [[getOrBuild]] misses (and by the IVF-PQ
-    * index builder), keyed by the product directory's basename — the
-    * bench drains this after its cold pass so one-time build costs are
-    * PRICED in the artifact instead of hidden by min-of-2 over a
-    * persistent cache (the round-10 measurement gap). */
+  /** Build seconds recorded by [[buildAt]], keyed by the product
+    * directory's basename — the bench drains this after its cold pass so
+    * one-time build costs are PRICED in the artifact instead of hidden by
+    * min-of-2 over a persistent cache (the round-10 measurement gap). */
   private val buildSecs =
     scala.collection.concurrent.TrieMap.empty[String, Double]
-
-  def recordBuild(dirName: String, sec: Double): Unit =
-    buildSecs.put(dirName, sec): Unit
 
   /** Drain (return and clear) the recorded build timings. */
   def drainBuildTimes(): Map[String, Double] = {
@@ -336,30 +338,43 @@ object ArtifactCache {
     snap
   }
 
-  /** Read the single-table product `name` keyed by (`keyFile`, `params`),
-    * building and publishing it first if absent. Concurrent builders each
-    * build into a PRIVATE tmp dir and race only on the atomic publish —
-    * first wins, losers discard their complete copy, every reader sees
-    * one complete product. A build that THROWS cleans its own tmp dir.
-    * Every hit validates the manifest (see [[validateManifest]]). */
-  def getOrBuild(s: SparkSession, name: String, keyFile: String,
-      params: Seq[Any])(build: => DataFrame): DataFrame = {
+  /** THE publish protocol, written only here: `write` fills a PRIVATE
+    * build dir with the product's tables, the manifest `key` lands next
+    * to them, and an atomic rename publishes the dir as `dir` (first
+    * wins, see [[publish]]; `replace` first deletes a live `dir` — the
+    * explicit index rebuild only). A write that THROWS cleans its tmp
+    * dir and drops the root memo (a failed write may mean a vanished or
+    * re-owned root, so the next [[root]] re-verifies). */
+  def buildAt(dir: String, key: String, replace: Boolean)(
+      write: String => Unit): Unit = {
+    val t0 = System.nanoTime()
+    val tmp = newTmpDir(dir)
+    try {
+      write(tmp)
+      writeManifest(tmp, key)
+    } catch { case e: Throwable =>
+      invalidateRoot(); rmTree(tmp); throw e
+    }
+    // OUTSIDE the cleanup catch: a genuine publish failure keeps the
+    // completed tmp build on disk and names it in the error — deleting
+    // it here would destroy the recoverable copy the message points at.
+    if (replace) rmTree(dir)
+    publish(tmp, dir)
+    buildSecs.put(baseName(dir), (System.nanoTime() - t0) / 1e9): Unit
+  }
+
+  /** The directory of product `name` keyed by (`keyFile`, `params`),
+    * built first through [[buildAt]] if absent (`write` may lay down
+    * any number of tables). Concurrent builders race only on the atomic
+    * publish; every reader sees one complete product. Every hit
+    * validates the manifest (see [[validateManifest]]). */
+  def getOrBuildDir(s: SparkSession, name: String, keyFile: String,
+      params: Seq[Any])(write: String => Unit): String = {
     val key = keyString(name, keyFile, params)
     val dir = path(name, keyFile, params)
     def buildIfAbsent(): Unit = if (!exists(dir)) {
       autoGc(s)
-      val t0 = System.nanoTime()
-      val tmp = newTmpDir(dir)
-      try {
-        build.write.mode("overwrite").parquet(tmp)
-        writeManifest(tmp, key)
-      } catch { case e: Throwable =>
-        invalidateRoot() // the failed write may mean a vanished/re-owned
-        // root — the next root() re-verifies instead of trusting the memo
-        rmTree(tmp); throw e
-      }
-      publish(tmp, dir)
-      recordBuild(baseName(dir), (System.nanoTime() - t0) / 1e9)
+      buildAt(dir, key, replace = false)(write)
     }
     buildIfAbsent()
     try validateManifest(dir, key)
@@ -373,8 +388,15 @@ object ArtifactCache {
         buildIfAbsent()
         validateManifest(dir, key)
     }
-    s.read.parquet(dir)
+    dir
   }
+
+  /** Read the one-table product `name` ([[getOrBuildDir]] with `build`
+    * as its table). */
+  def getOrBuild(s: SparkSession, name: String, keyFile: String,
+      params: Seq[Any])(build: => DataFrame): DataFrame =
+    s.read.parquet(getOrBuildDir(s, name, keyFile, params)(tmp =>
+      build.write.mode("overwrite").parquet(tmp)))
 
   /** AUTOMATIC retention, run BEFORE each miss-path build when the
     * session opts in: `spark.graft.products.gc.maxBytes` and/or

@@ -242,8 +242,8 @@ object VectorStreams {
         transform(col("v"), x => round(x / col("nrm") * lit(10000.0))).as("ve"))
       .withColumn("vn", l2Norm(col("ve")))
     // Coarse argmax = min over (−e4cosine, cell_id) structs — the same
-    // ordering as the batch assignCells aggregate, one struct per literal
-    // centroid.
+    // ordering as the batch cell-assignment kernel (withAssignedCell), one
+    // struct per literal centroid.
     val simStructs = ordered.map { case (cellId, cv) =>
       val cvLit = typedlit(cv)
       struct(

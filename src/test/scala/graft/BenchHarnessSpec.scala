@@ -426,4 +426,65 @@ class BenchHarnessSpec extends AnyFunSuite {
       }.as[(Long, Long)].collect().toSeq === Seq((1L, 10L)))
     }
   }
+
+  test("getOrBuild: two threads missing the same key at once publish one product") {
+    // The same-JVM form of the first-wins contract: both threads pass the
+    // existence check, each builds a private copy (the latch holds each
+    // build until the other is in flight too) and they race on the
+    // atomic publish. Exactly one product dir may appear, no tmp build may
+    // be left behind, and both callers must read the winner's rows.
+    withTempRoot { root =>
+      val f = java.nio.file.Files.createTempFile("graft-thr-key", ".parquet").toFile
+      val inFlight = new java.util.concurrent.CountDownLatch(2)
+      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+      def caller(tag: Long) = graft.functions.Par.async {
+        org.apache.spark.sql.SparkSession.setActiveSession(spark)
+        ArtifactCache.getOrBuild(spark, "thrrace", f.getAbsolutePath, Seq(1)) {
+          builds.incrementAndGet(): Unit
+          inFlight.countDown()
+          inFlight.await(30, java.util.concurrent.TimeUnit.SECONDS): Unit
+          Seq((tag, tag * 10L)).toDF("a", "b")
+        }.as[(Long, Long)].collect().toSeq
+      }
+      val (a, b) = (caller(1L), caller(2L))
+      val (rowsA, rowsB) = (a(), b())
+      assert(builds.get === 2, "the two callers did not race on the build")
+      assert(rowsA === rowsB, "the callers read different products")
+      assert(rowsA === Seq((1L, 10L)) || rowsA === Seq((2L, 20L)))
+      val kids = root.listFiles().map(_.getName).toSeq
+      assert(kids.count(_.startsWith("thrrace-")) === 1,
+        s"expected exactly one published product dir: $kids")
+      assert(!kids.exists(_.contains(".tmp-")), s"a tmp build was left behind: $kids")
+    }
+  }
+
+  test("dependent products key on their dependency's current content address") {
+    // dedupcc is built from jacpairs, cclabels and lpalabels from
+    // cosupply, navgraph from knngraph: each dependent's manifest must
+    // carry the address (`<name>-<16hex>`) of the dependency dir it was
+    // built from, so any change to the dependency moves its key.
+    withTempRoot { _ =>
+      val d = TestSpark.sf
+      graft.operators.Dedup.clusterAssignmentsShared(spark, d).count(): Unit
+      graft.operators.Graph.componentLabelsShared(spark, d).count(): Unit
+      graft.operators.Graph.lpaLabelsShared(spark, d).count(): Unit
+      graft.operators.Similarity.navGraphShared(spark, d).count(): Unit
+      val dirs = ArtifactCache.registry(spark).collect()
+        .map(r => r.getString(0) -> r.getString(2)).toSeq
+      def only(name: String): String = {
+        val ds = dirs.filter(_._1 == name).map(_._2)
+        assert(ds.size === 1, s"expected one $name product: $dirs")
+        ds.head
+      }
+      for ((dependent, dependency) <- Seq("dedupcc" -> "jacpairs",
+          "cclabels" -> "cosupply", "lpalabels" -> "cosupply",
+          "navgraph" -> "knngraph")) {
+        val fields = ArtifactCache.readManifest(only(dependent)).get.split('|')
+        val addr = ArtifactCache.baseName(only(dependency))
+        assert(fields.contains(addr),
+          s"$dependent's key lacks $dependency's address $addr: ${fields.toSeq}")
+      }
+      spark.catalog.clearCache()
+    }
+  }
 }
