@@ -52,8 +52,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    stable) and merges the children's JSON; each child runs the full
   *    warm + cold + warm protocol for its chunk. Reported times are
   *    therefore ISOLATED FLOORS — comparable across rounds regardless of
-  *    how large the contract grows. `SPARK_GRAFT_ISOLATED=0` forces the
-  *    legacy single-JVM mode; `SPARK_GRAFT_ONLY=a,b` (the dev loop) also
+  *    how large the contract grows. `SPARK_GRAFT_ONLY=a,b` (the dev loop)
   *    runs in-process. Fork-capability failure (the spawn itself throws,
   *    TWICE — once can be a transient EAGAIN on this shared box) falls
   *    the rest of the run back to the legacy mode; a chunk whose child
@@ -100,9 +99,7 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val forked = sys.env.get("SPARK_GRAFT_FORKED")
       .map(_.split(",").map(_.trim).toSet)
-    val isolated = forked.isEmpty && only.isEmpty &&
-      sys.env.getOrElse("SPARK_GRAFT_ISOLATED", "1") != "0"
-    if (isolated) runIsolated()
+    if (forked.isEmpty && only.isEmpty) runIsolated()
     else {
       val subset = forked.orElse(only)
       // The dev loop (SPARK_GRAFT_ONLY) owns its whole run, so it evicts

@@ -2,108 +2,86 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.PlanReads
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Release discipline for operators that persist shared intermediates.
+/** Release discipline for operators that persist or checkpoint
+  * intermediates.
   *
-  * Several operators cache a frame that feeds two or more downstream
-  * branches of ONE query (a fingerprint table probed twice, a tf table
-  * feeding both model training and scoring). The result is returned
-  * lazily, so the operator cannot unpersist before returning — the cache
-  * must survive until the CALLER's terminal action. Without cleanup those
-  * blocks outlive the query: a long-lived session running many operators
-  * would accumulate every query's intermediates until the executors'
-  * storage pool evicts them (harnesses mask this with
-  * `catalog.clearCache()` between queries, but a library must not rely on
-  * its caller's hygiene).
+  * Operators cache frames that feed several branches of ONE query (a
+  * fingerprint table probed twice, a tf table feeding both training and
+  * scoring) and checkpoint the states of their driver-paced loops. The
+  * result is returned lazily, so the operator cannot free them before
+  * returning: they must survive until the CALLER's terminal action. A
+  * long-lived session must not accumulate every query's intermediates
+  * either, and a library cannot rely on its caller's `clearCache()`.
   *
-  * [[releaseAfterAction]] closes the gap: it registers a one-shot
-  * QueryExecutionListener that unpersists the intermediates as soon as the
-  * RIGHT completed action fires and then unregisters itself. Which action
-  * is "right" depends on what was cached:
+  * [[releaseAfterAction]] applies ONE rule to every frame it is given:
   *
-  *  - plain `persist`ed frames release after the NEXT completed action on
-  *    the session (success or failure). In the intended pattern — build
-  *    the query, run its terminal action — that next action IS the
-  *    query's own. If a caller interleaves an unrelated action first, the
-  *    intermediates are released early and the query transparently
-  *    recomputes them — a deterministic-correctness no-op, never a wrong
-  *    answer (the same contract `unpersist()` itself gives);
-  *  - `localCheckpoint`ed frames have TRUNCATED lineage — early release
-  *    cannot recompute, it fails. For those, release waits for a
-  *    completed action whose plan actually REFERENCES one of the
-  *    checkpoint RDDs (matched by RDD id on the plan's LogicalRDD
-  *    leaves), so unrelated session actions — concurrent threads, another
-  *    operator's internal collect() — can never strand the result.
+  *  - a frame the result's plan does not read is freed at once;
+  *  - the others are freed together by the first completed action (success
+  *    or failure) whose plan reads one of them.
   *
-  * One contract limit remains for checkpoint-backed results: the FIRST
-  * action on the result releases the checkpoint, so such results are
-  * single-use — run one terminal action (write/collect), not several.
-  * Measured Spark 4.1 semantics of a violation (pinned by
-  * PipelineSpec's single-use-contract test): re-acting on the SAME
-  * Dataset serves byte-identical rows from its materialized AQE
-  * shuffle stages, and a FRESH execution over the released plan fails
-  * loudly (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) — a violation can never
-  * return silently different rows.
+  * "Reads" is decided on plans, never on timing: a persisted frame is read
+  * when the plan holds its InMemoryRelation (matched by cache builder), a
+  * checkpoint frame when the plan holds one of its LogicalRDD leaves
+  * (matched by RDD id), and a frame is also read when a cache the plan
+  * reads still has to be filled from it. So an action on another thread or
+  * another query's action never frees a query's intermediates. The kind of
+  * frame decides only HOW it is freed: `unpersist` for a persisted frame,
+  * [[org.apache.spark.sql.graft.Checkpoints.release]] for a checkpoint (so
+  * pass a checkpoint itself, not only a cache built on it).
+  *
+  * Two contract limits remain. A result that is never acted on keeps its
+  * read frames until `clearCache` or the end of the session. A
+  * checkpoint-backed result is SINGLE-USE: its first action frees the
+  * checkpoint, so run one terminal action (write/collect), or
+  * `localCheckpoint(true)` the result first when several must follow.
+  * Measured Spark 4.1 semantics of a violation (pinned by PipelineSpec's
+  * single-use-contract test): re-acting on the SAME Dataset serves
+  * byte-identical rows from its materialized AQE shuffle stages, and a
+  * FRESH execution over the released plan fails loudly
+  * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) — never silently different rows.
   * The callback runs on the listener bus thread; `unpersist(blocking =
   * false)` and listener self-removal are both thread-safe.
   */
 object Caching {
 
-  /** MULTI-ACTION alternative to [[releaseAfterAction]] for
-    * checkpoint-backed results: eagerly re-`localCheckpoint` `result` so it
-    * is backed by its OWN blocks, release every `cached` input immediately,
-    * and return the materialized frame. The returned frame supports any
-    * number of terminal actions (the single-use limit above does not
-    * apply); the caller owns its lifetime — call
-    * `Checkpoints.release(frame)` when done, or let the ContextCleaner
-    * collect it. Costs one extra materialization of the result (typically
-    * node-sized for the iterative operators that need this), which is why
-    * it is opt-in rather than the default. */
-  def materialize(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(eager = true)
-    cached.foreach { df =>
-      try df.unpersist(false) catch { case _: Throwable => () }
-      try org.apache.spark.sql.graft.Checkpoints.release(df)
-      catch { case _: Throwable => () }
-    }
-    out
-  }
-
-  /** Return `result` with `cached` scheduled for release after the next
-    * completed action that can no longer need it (see object doc). */
+  /** Return `result` with `cached` released by the rule in the object doc. */
   def releaseAfterAction(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val manager = result.sparkSession.listenerManager
-    // RDD ids of the localCheckpoint leaves backing the cached frames; an
-    // action is "the result's own" iff its plan reads one of these.
-    val ckptIds: Set[Int] = cached.flatMap(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }).toSet
-    val listener: QueryExecutionListener = new QueryExecutionListener {
-      private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      private def release(qe: QueryExecution): Unit = {
-        val ours = ckptIds.isEmpty || qe.analyzed.exists {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            ckptIds.contains(lr.rdd.id)
-          case _ => false
-        }
-        if (ours && done.compareAndSet(false, true)) {
-          cached.foreach { df =>
-            try df.unpersist(false) catch { case _: Throwable => () }
-            // localCheckpoint'd frames persist at the RDD level, which
-            // Dataset.unpersist cannot see — free those blocks too.
-            try org.apache.spark.sql.graft.Checkpoints.release(df)
-            catch { case _: Throwable => () }
+    val resultReads = PlanReads.walk(result.queryExecution.withCachedData, throughFilled = false)
+    val (kept, unread) = cached.map(df => (df, PlanReads.of(df)))
+      .partition(_._2.sharesWith(resultReads))
+    unread.foreach(free)
+    if (kept.nonEmpty) {
+      val manager = result.sparkSession.listenerManager
+      val listener: QueryExecutionListener = new QueryExecutionListener {
+        private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+        private def release(qe: QueryExecution): Unit = {
+          // The action has just filled the caches it read, so look through
+          // every nested cache, filled or not.
+          val actionReads = scala.util.Try(PlanReads.walk(qe.withCachedData, throughFilled = true))
+          if (actionReads.toOption.exists(r => kept.exists(_._2.sharesWith(r))) &&
+              done.compareAndSet(false, true)) {
+            kept.foreach(free)
+            manager.unregister(this)
           }
-          manager.unregister(this)
         }
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit = release(qe)
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = release(qe)
       }
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = release(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = release(qe)
+      manager.register(listener)
     }
-    manager.register(listener)
     result
   }
+
+  /** Free a frame by its kind: unpersist a persisted frame, release a
+    * checkpoint's RDD-level storage. */
+  private def free(frame: (DataFrame, PlanReads)): Unit =
+    try {
+      if (frame._2.caches.nonEmpty) frame._1.unpersist(false)
+      else org.apache.spark.sql.graft.Checkpoints.release(frame._1)
+    } catch { case _: Throwable => () }
 }

@@ -815,9 +815,8 @@ object Dedup extends org.apache.spark.internal.Logging {
       // shared core is inside the requester's getOrBuild timing.
       ArtifactCache.getOrBuildDir(s, sibName, keyFile, sibParams)(tmp =>
         scored(ov, !wantJac).write.mode("overwrite").parquet(tmp)): Unit
-      // Registered AFTER the sibling's write action, so the next
-      // completed action — getOrBuild's own parquet write of the
-      // returned frame — releases the shared core.
+      // The returned frame reads the shared core, so getOrBuild's own
+      // parquet write of it releases the core.
       graft.functions.Caching.releaseAfterAction(scored(ov, wantJac), ov, sh)
     }
   }

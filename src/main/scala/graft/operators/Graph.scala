@@ -96,19 +96,17 @@ object Graph {
     * for `checkpoint` with a reliable dir to keep fault tolerance.
     * Returns (node_id, rank_e12) at the fixed point.
     *
-    * The default result is checkpoint-backed and SINGLE-USE (its blocks
-    * release after the caller's first terminal action — the library-wide
-    * contract). Pass `materialize = true` to get a multi-action frame
-    * instead: the ranks re-checkpoint into their own blocks
-    * ([[graft.functions.Caching.materialize]]) and the caller owns the
-    * release. */
+    * The result is checkpoint-backed and SINGLE-USE (its blocks release
+    * after the caller's first terminal action — the library-wide
+    * contract); a caller that needs several actions runs
+    * `localCheckpoint(true)` on it and owns the copy. */
   def pagerankConvergedDf(edges: DataFrame, epsE12: Long = 1000000L,
-      maxRounds: Int = 100, materialize: Boolean = false): DataFrame =
-    pagerankConvergedRaw(edges, epsE12, maxRounds, materialize)._1
+      maxRounds: Int = 100): DataFrame =
+    pagerankConvergedRaw(edges, epsE12, maxRounds)._1
 
   /** Same, also returning the round count (spec surface). */
   private[graft] def pagerankConvergedRaw(edges: DataFrame, epsE12: Long,
-      maxRounds: Int, materialize: Boolean = false): (DataFrame, Int) = {
+      maxRounds: Int): (DataFrame, Int) = {
     val outW = edges.groupBy("src").agg(sum("cnt").as("wout"))
     // Persist PRE-PARTITIONED on src: every round's contribution join is
     // keyed on src, so the edge list (the corpus-sized side) shuffles once
@@ -145,17 +143,9 @@ object Graph {
       ranks = next.select("node_id", "rank_e12")
       rounds += 1
     }
-    e.unpersist(false); nodes.unpersist(false)
-    // The converged ranks are checkpoint-backed: by default schedule the
-    // blocks for release after the caller's terminal action
-    // (checkpoint-aware — unrelated actions don't fire it; see Caching) —
-    // a single-use result, like every checkpoint-backed frame in this
-    // library. With `materialize` the ranks re-checkpoint into caller-owned
-    // blocks instead, so any number of actions may follow.
-    if (materialize)
-      (graft.functions.Caching.materialize(ranks, ranks), rounds)
-    else
-      (graft.functions.Caching.releaseAfterAction(ranks, ranks), rounds)
+    // The ranks do not read the edge caches, so those go at once; the
+    // converged checkpoint goes after the caller's terminal action.
+    (graft.functions.Caching.releaseAfterAction(ranks, ranks, e, nodes), rounds)
   }
 
   /** Edge budget per node for the co-supply graph: the construction keeps
@@ -256,9 +246,8 @@ object Graph {
     for ((c, m) <- hist if !over) {
       if (acc + m <= budget) { acc += m; thr = c } else over = true
     }
-    os.unpersist(false)
     graft.functions.Caching.releaseAfterAction(
-      e0.filter(col("cnt") >= thr).select("a", "b"), e0)
+      e0.filter(col("cnt") >= thr).select("a", "b"), e0, os)
   }
 
   /** Algorithm version of the component-label product — bump whenever the
@@ -398,14 +387,13 @@ object Graph {
     }
     require(converged, s"k-core peeling did not stabilize within " +
       s"$KCoreMaxRounds rounds — inspect the edge construction")
-    states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
     val coreDeg = degreeOver(alive)
     graft.functions.Caching.releaseAfterAction(
       d0.join(coreDeg.withColumnRenamed("dg", "core_deg"), Seq("u"), "left")
         .select(col("u").as("node"), col("degree"),
           col("core_deg").isNotNull.cast("long").as("in_core"),
           coalesce(col("core_deg"), lit(0L)).as("core_deg")),
-      und, d0)
+      (Seq(und, d0) ++ states): _*)
   }
 
   /** Fixed label-propagation round count — SYNCHRONOUS updates, so unlike
@@ -490,12 +478,11 @@ object Graph {
       states += next
       labels = next
     }
-    states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("csize"))
     graft.functions.Caching.releaseAfterAction(
       labels.join(sizes, "lbl")
         .select(col("u").as("node"), col("lbl").as("community"), col("csize")),
-      und)
+      (und +: states.toSeq): _*)
   }
 
   /** COMMUNITY-QUALITY DECISION TABLE — Newman–Girvan modularity

@@ -1531,15 +1531,13 @@ object Pipeline {
     val (ranked, ckpt, _) = keyedExclusivePrefixSum(
       admitted.withColumn("one", lit(1L)),
       Seq("source"), Seq("h", "doc_id"), "one")
-    admitted.unpersist() // the prefix sum's localCheckpoint is eager — the
-    // admitted cache has served its two consumers (short check + checkpoint)
     graft.functions.Caching.releaseAfterAction(
       ranked
         .withColumn("rn", col("prefix") + lit(1L))
         .filter(col("rn") <= col("target"))
         .select(col("doc_id"), col("source"), col("rn"))
         .orderBy("doc_id"),
-      ckpt)
+      ckpt, admitted)
   }
 
   /** Same, over any (doc_id, source) DataFrame (planted tests).

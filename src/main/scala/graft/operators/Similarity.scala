@@ -1072,8 +1072,7 @@ object Similarity {
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= k)
         .orderBy("qid", "rn")
-    if (cached.isEmpty) ranked
-    else graft.functions.Caching.releaseAfterAction(ranked, cached: _*)
+    graft.functions.Caching.releaseAfterAction(ranked, cached: _*)
   }
 
   /** Resolve (and build on miss) the persisted index for corpus `d`:
@@ -2056,8 +2055,8 @@ object Similarity {
 
   /** The MMR build shared by the query and its diversity evaluation:
     * returns the selected picks, the candidate-pair similarity table
-    * (the ILS evidence), and the persisted inputs the caller releases
-    * after its terminal action. */
+    * (the ILS evidence), and the persisted inputs and round states the
+    * caller hands to releaseAfterAction. */
   private def mmrCore(embeddings: DataFrame, nQueries: Int,
       depth: Int, k: Int): (DataFrame, (DataFrame, DataFrame), Seq[DataFrame]) = {
     val c = embeddings
@@ -2129,11 +2128,7 @@ object Similarity {
       selected = selected.unionByName(pick).localCheckpoint(true)
       rounds += selected
     }
-    // The final checkpoint IS the result's data; the intermediate round
-    // states are dead the moment the next round materialized — free
-    // their blocks now, release the shared inputs after the action.
-    rounds.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
-    (selected, (cands, pairs), Seq(c, cands, pairs))
+    (selected, (cands, pairs), Seq(c, cands, pairs) ++ rounds)
   }
 
   /** DIVERSIFICATION EVALUATION (`eval_mmr_diversity`) — the table read
@@ -2654,7 +2649,6 @@ object Similarity {
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
         count(lit(1)).as("n_brute"))
     val edgeCounts = edges.groupBy("gs").agg(count(lit(1)).as("n_edges"))
-    states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
       hits.join(edgeCounts, "gs")
         .select(col("gs").as("graph_state"), col("hits"), col("n_brute"),
@@ -2662,7 +2656,7 @@ object Similarity {
             .as("recall_e4"),
           col("n_edges"))
         .orderBy("graph_state"),
-      c, edges, states.last)
+      (Seq(c, edges) ++ states): _*)
   }
 
   /** Batch count of the SEQUENTIAL insert eval. */
@@ -2748,11 +2742,10 @@ object Similarity {
           keysByR(geos(b - 1)).filter(col("vec_id") < p), cutB, p)
         (df.select("src", "dst").withColumn("fb", lit(b.toLong)), caches)
       }
-      Some(graft.functions.Caching.materialize(
-        parts.map(_._1).reduce(_ unionAll _), parts.flatMap(_._2): _*))
+      Some(graft.functions.Caching.releaseAfterAction(
+        parts.map(_._1).reduce(_ unionAll _).localCheckpoint(true),
+        (parts.flatMap(_._2) ++ keysByR.values): _*))
     }
-    // The keys frames serve only the delta builds above — release now.
-    keysByR.values.foreach(_.unpersist(false))
     // ONE distinct over (edge → first batch containing it) replaces the
     // per-state cumulative union + distinct (state b's edge set is
     // exactly {fb <= b}), so the base graph is scanned once, not once
@@ -2814,8 +2807,6 @@ object Similarity {
       .select(col("gs"), col("n_edges"), col("max_out_deg"),
         round(col("n_edges") * lit(10000.0) / col("n_src")).cast("long")
           .as("mean_deg_e4"))
-    walkStates.dropRight(1)
-      .foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
       hits.join(degs, "gs")
         .select(col("gs").as("batch"), col("n_edges"), col("hits"),
@@ -2824,7 +2815,7 @@ object Similarity {
             .as("recall_e4"),
           col("max_out_deg"), col("mean_deg_e4"))
         .orderBy("batch"),
-      (Seq(c, edges, walkStates.last) ++ inPlanDeltas.toSeq): _*)
+      (Seq(c, edges) ++ walkStates ++ inPlanDeltas.toSeq): _*)
   }
 
   /** NAVIGABILITY AUDIT (`eval_graph_connectivity`) — the structural
@@ -2951,15 +2942,13 @@ object Similarity {
     val walk = graphWalk(s, d, nQueries, beam, rounds) { (q, _) =>
       q.select(col("qid")).withColumn("cid", lit(GraphEntry))
     }
-    walk.states.dropRight(1)
-      .foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
       walk.states.last
         .filter(col("cid") % NavDeleteMod =!= NavDeleteRes)
         .withColumn("rn", row_number().over(walk.w).cast("long"))
         .filter(col("rn") <= k)
         .orderBy("qid", "rn"),
-      walk.caches: _*)
+      (walk.caches ++ walk.states): _*)
   }
 
   /** Coarse-layer stride: every CoarseMod-th vector forms the upper
@@ -3405,14 +3394,11 @@ object Similarity {
           round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
             .as("recall_e4"))
     }
-    // Release only the rounds NO strategy reads as its prefix — the
-    // budget states stay alive until the consumer's terminal action.
-    val needed = budgets.values.toSet
-    states.zipWithIndex.collect { case (st, i) if !needed.contains(i) => st }
-      .foreach(org.apache.spark.sql.graft.Checkpoints.release)
+    // The rounds no strategy reads as its prefix go at once; the budget
+    // states stay alive until the consumer's terminal action.
     graft.functions.Caching.releaseAfterAction(
       rows.reduce(_ unionAll _).orderBy("strategy"),
-      (Seq(c, edges, brute) ++ needed.toSeq.sorted.map(states(_))): _*)
+      (Seq(c, edges, brute) ++ states): _*)
   }
 
   /** The walk's full trace: per-round beam states (index 0 = the scored
@@ -3434,7 +3420,9 @@ object Similarity {
     * beam is checkpointed per round — without it the declarative plan
     * doubles per round (measured: rounds ≥ 8 ran minutes instead of
     * seconds). Same O(1)-plan recipe as the k-core/LPA loops. Every
-    * per-round state is returned ALIVE; callers release what they keep. */
+    * per-round state is returned ALIVE; callers pass them all to
+    * releaseAfterAction, which frees at once the ones their result does
+    * not read. */
   private def graphWalk(s: SparkSession, d: String, nQueries: Int,
       beam: Int, rounds: Int)(
       entries: (DataFrame, DataFrame) => DataFrame): GraphWalkTrace = {
@@ -3475,19 +3463,17 @@ object Similarity {
     GraphWalkTrace(states.toIndexedSeq, cands.toIndexedSeq, w, Seq(c, edges))
   }
 
-  /** Search tail over [[graphWalk]]: release every non-final state
-    * eagerly, rank the final beam, top-k. */
+  /** Search tail over [[graphWalk]]: rank the final beam, top-k. */
   private def graphSearchFrom(s: SparkSession, d: String, nQueries: Int,
       k: Int, beam: Int, rounds: Int)(
       entries: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val walk = graphWalk(s, d, nQueries, beam, rounds)(entries)
-    walk.states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
       walk.states.last
         .withColumn("rn", row_number().over(walk.w).cast("long"))
         .filter(col("rn") <= k)
         .orderBy("qid", "rn"),
-      walk.caches: _*)
+      (walk.caches ++ walk.states): _*)
   }
 
   /** The round budgets the beam sweep prices (ascending; max sets the

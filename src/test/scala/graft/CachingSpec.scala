@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.storage.StorageLevel
 import graft.functions.Caching
 
-/** Release discipline: operators that persist shared intermediates hand
-  * them to [[Caching.releaseAfterAction]], which unpersists them after the
-  * caller's terminal action — so a long-lived session does not accumulate
+/** Release discipline: operators that persist or checkpoint intermediates
+  * hand them to [[Caching.releaseAfterAction]], which frees each one at
+  * once when the result never reads it, else after the first completed
+  * action that reads it — so a long-lived session does not accumulate
   * every query's cached blocks (the round-7 advisory). The listener fires
   * on the async listener bus, so assertions poll for the level change. */
 class CachingSpec extends AnyFunSuite {
@@ -31,6 +32,13 @@ class CachingSpec extends AnyFunSuite {
     while (df.storageLevel != StorageLevel.NONE && System.nanoTime() < deadline)
       Thread.sleep(50)
     df.storageLevel == StorageLevel.NONE
+  }
+
+  /** Poll `live` until it reads 0 (the listener fires on the async bus). */
+  private def awaitNone(live: => Int): Boolean = {
+    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    while (live > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    live == 0
   }
 
   test("releaseAfterAction: cached frame is unpersisted after the result's action") {
@@ -93,26 +101,72 @@ class CachingSpec extends AnyFunSuite {
     }
   }
 
-  test("materialize: pagerankConvergedDf survives TWO terminal actions") {
+  test("pagerankConvergedDf: localCheckpoint(true) frees the loop checkpoint, 3 actions") {
     drainForeignPersists()
-    // The round-9 verdict's missing contract: checkpoint-backed results are
-    // single-use by default — a library consumer that needs several actions
-    // opts into `materialize`, which re-checkpoints the result into its own
-    // blocks and releases the loop's internal checkpoints immediately.
+    // Checkpoint-backed results are single-use: their first action frees
+    // the loop's checkpoint. A consumer that needs several actions
+    // checkpoints the result into its own blocks — that checkpoint action
+    // reads the loop's checkpoint, so it is the one that frees it.
     val edges = Seq((1L, 2L, 1L), (2L, 1L, 1L), (2L, 3L, 1L), (3L, 2L, 1L))
       .toDF("src", "dst", "cnt")
     val ranks = operators.Graph.pagerankConvergedDf(
-      edges, epsE12 = 1000000L, maxRounds = 50, materialize = true)
-    val first = ranks.orderBy("node_id").collect()
-    val second = ranks.orderBy("node_id").collect() // would throw on released blocks
+      edges, epsE12 = 1000000L, maxRounds = 50)
+    val loopRdds = ranks.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    assert(loopRdds.nonEmpty && loopRdds.forall(_.getStorageLevel != StorageLevel.NONE))
+    val own = ranks.localCheckpoint(true)
+    assert(awaitNone(loopRdds.count(_.getStorageLevel != StorageLevel.NONE)),
+      "the checkpoint action left the loop's checkpoint blocks alive")
+    val first = own.orderBy("node_id").collect()
+    val second = own.orderBy("node_id").collect() // would throw on released blocks
     assert(first.toSeq === second.toSeq)
     assert(first.length === 3)
-    assert(ranks.count() === 3L) // and a third, differently-shaped action
-    org.apache.spark.sql.graft.Checkpoints.release(ranks) // caller-owned release
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    def live = spark.sparkContext.getPersistentRDDs.size
-    while (live > 0 && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(live === 0, s"$live persistent RDDs survived the caller's release")
+    assert(own.count() === 3L) // and a third, differently-shaped action
+    org.apache.spark.sql.graft.Checkpoints.release(own) // caller-owned copy
+    assert(awaitNone(spark.sparkContext.getPersistentRDDs.size),
+      "persistent RDDs survived the caller's release")
+  }
+
+  test("releaseAfterAction: unread frames go at once; another thread's action frees none") {
+    drainForeignPersists()
+    val read = Seq(1L, 2L, 3L).toDF("x").persist(StorageLevel.MEMORY_AND_DISK)
+    val unread = Seq(7L).toDF("y").persist(StorageLevel.MEMORY_AND_DISK)
+    read.count(); unread.count()
+    val result = Caching.releaseAfterAction(
+      read.groupBy().sum("x").withColumnRenamed("sum(x)", "s"), read, unread)
+    // a passed frame the result never reads is freed with no action at all
+    assert(awaitReleased(unread), "a frame the result does not read stayed cached")
+    // an unrelated action on a Par.async thread must not free `read`
+    graft.functions.Par.async {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      Seq(9L).toDF("z").count()
+    }(): Unit
+    Thread.sleep(500) // give the listener bus time to (wrongly) fire
+    assert(read.storageLevel != StorageLevel.NONE,
+      "another thread's action released a frame the result still reads")
+    // the result's own action — a Parquet write — releases it
+    val out = java.nio.file.Files.createTempDirectory("graft-release").toString + "/out"
+    result.write.parquet(out)
+    assert(spark.read.parquet(out).collect().map(_.getLong(0)).toSeq === Seq(6L))
+    assert(awaitReleased(read), "the result's own action left its frame cached")
+  }
+
+  test("kcoreDf, lpaDf and graphTopK free their final loop states after the action") {
+    drainForeignPersists()
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (1L, 5L), (2L, 5L), (5L, 6L)).toDF("a", "b")
+    // Held in vals: a leaked checkpoint stays strongly reachable through
+    // the result's plan, so the ContextCleaner cannot hide the leak.
+    val kcore = operators.Graph.kcoreDf(edges, k = 3L)
+    val lpa = operators.Graph.lpaDf(edges)
+    val graph = operators.Similarity.graphTopK(spark, TestSpark.sf)
+    assert(kcore.collect().length === 6)
+    assert(lpa.collect().length === 6)
+    assert(graph.collect().nonEmpty)
+    assert(awaitNone(spark.sparkContext.getPersistentRDDs.size),
+      s"${spark.sparkContext.getPersistentRDDs.size} persistent RDDs " +
+        "survived the three results' actions")
   }
 
   test("operator-level: substringDup's window cache self-releases after its action") {
