@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Caching.{drop, hold}
 
 /** MEASURED layout comparison on REAL written files — the end-to-end
   * companion to the modeled bucket audits (`layout_zorder` /
@@ -33,9 +34,8 @@ object LayoutMeasure {
 
     // One source frame for all writers (the builder LayoutRowGroups
     // shares, so the two tools' numbers stay comparable).
-    val events = graft.operators.Events
-      .layoutMeasureSource(graft.sources.Tables.events(spark, sfDir))
-      .persist()
+    val events = hold(graft.operators.Events
+      .layoutMeasureSource(graft.sources.Tables.events(spark, sfDir)))
     events.count(): Unit
 
     // Hadoop FS, not java.io.File: the out dir may live on a DFS — the
@@ -67,9 +67,9 @@ object LayoutMeasure {
     val timeProbes = graft.operators.Events.layoutTimeProbes(events)
 
     def fracs(sub: String): (Long, Long, Long, Long) = {
-      val audit = graft.operators.Events.fileLayoutAuditDf(
+      val audit = hold(graft.operators.Events.fileLayoutAuditDf(
         spark.read.parquet(s"$outDir/$sub"),
-        Seq("user_id", "ts_us", "c")).persist()
+        Seq("user_id", "ts_us", "c")))
       val files = audit.count()
       def e4(df: DataFrame) = df.collect().head.getAs[Long]("scan_e4")
       val up = e4(graft.operators.Events
@@ -78,7 +78,7 @@ object LayoutMeasure {
         .fileSkipFractionDf(audit, typeProbes, "c"))
       val tr = e4(graft.operators.Events
         .fileRangeScanFractionDf(audit, timeProbes, "ts_us"))
-      audit.unpersist(): Unit
+      drop(audit)
       (files, up, tr, tp)
     }
     val out = Seq("linear", "zorder2", "zorder3", "hilbert").map { sub =>

@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.functions.Caching.{drop, hold}
 
 /** ROW-GROUP-level skip measurement — the last link in the layout
   * family's evidence chain. `graft.LayoutMeasure` prices pruning at FILE
@@ -43,9 +44,8 @@ object LayoutRowGroups {
     val conf = spark.sparkContext.hadoopConfiguration
 
     // Source frame: the SAME builder LayoutMeasure uses.
-    val events = graft.operators.Events
-      .layoutMeasureSource(graft.sources.Tables.events(spark, sfDir))
-      .persist()
+    val events = hold(graft.operators.Events
+      .layoutMeasureSource(graft.sources.Tables.events(spark, sfDir)))
     events.count(): Unit
 
     val outPath = new Path(outDir)
@@ -112,14 +112,14 @@ object LayoutRowGroups {
     val timeProbes = graft.operators.Events.layoutTimeProbes(events)
 
     def fracs(audit: DataFrame): (Long, Long, Long) = {
-      val a = audit.persist()
+      val a = hold(audit)
       val units = a.count()
       def e4(df: DataFrame) = df.collect().head.getAs[Long]("scan_e4")
       val up = e4(graft.operators.Events
         .fileSkipFractionDf(a, userProbes, "user_id"))
       val tr = e4(graft.operators.Events
         .fileRangeScanFractionDf(a, timeProbes, "ts_us"))
-      a.unpersist(): Unit
+      drop(a)
       (units, up, tr)
     }
     val out = Seq("linear", "zorder2", "zorder3", "hilbert").map { sub =>

@@ -81,11 +81,9 @@ object Report {
     val docsPath = new org.apache.hadoop.fs.Path(s"$in/documents.parquet")
     val docsExist = docsPath
       .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(docsPath)
-    val counts =
-      if (docsExist)
-        TextAnalytics.wordCounts(Tables.documents(spark, in))
-      else wordcountTextDir(spark, in)
-    counts.cache()
+    val counts = graft.functions.Caching.hold(
+      if (docsExist) TextAnalytics.wordCounts(Tables.documents(spark, in))
+      else wordcountTextDir(spark, in))
     val unique = counts.count()
     println("\n" + formatTopK(counts))
     writeTsv(counts, out)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Caching.{drop, hold}
 import graft.operators.Pipeline
 import graft.sources.Tables
 
@@ -63,29 +64,29 @@ object Ship {
     * your readers want, e.g. 128 MB row groups at real scale). */
   def shipCompacted(spark: SparkSession, sfDir: String, outDir: String,
       targetBytes: Long = 64L << 20, nearDup: Boolean = true): Map[String, Long] = {
-    val frame = shipFrame(spark, sfDir, nearDup)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = frame.groupBy("split")
-      .agg(sum(octet_length(col("text"))).as("bytes"), count(lit(1)).as("rows"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(outPath))
-      fs.listStatus(outPath)
-        .filter(st => st.getPath.getName.startsWith("split=") ||
-          st.getPath.getName == "_SUCCESS")
-        .foreach(st => fs.delete(st.getPath, true))
-    val fileCounts =
-      for ((split, bytes, rows) <- sizes) yield {
-        val files = math.min(rows,
-          math.max(1L, (bytes + targetBytes - 1) / targetBytes))
-        frame.filter(col("split") === split).drop("split")
-          .repartition(files.toInt)
-          .write.mode("overwrite").parquet(s"$outDir/split=$split")
-        split -> files
-      }
-    frame.unpersist()
-    fileCounts.toMap
+    val frame = hold(shipFrame(spark, sfDir, nearDup))
+    try {
+      val sizes = frame.groupBy("split")
+        .agg(sum(octet_length(col("text"))).as("bytes"), count(lit(1)).as("rows"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val outPath = new org.apache.hadoop.fs.Path(outDir)
+      val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(outPath))
+        fs.listStatus(outPath)
+          .filter(st => st.getPath.getName.startsWith("split=") ||
+            st.getPath.getName == "_SUCCESS")
+          .foreach(st => fs.delete(st.getPath, true))
+      val fileCounts =
+        for ((split, bytes, rows) <- sizes) yield {
+          val files = math.min(rows,
+            math.max(1L, (bytes + targetBytes - 1) / targetBytes))
+          frame.filter(col("split") === split).drop("split")
+            .repartition(files.toInt)
+            .write.mode("overwrite").parquet(s"$outDir/split=$split")
+          split -> files
+        }
+      fileCounts.toMap
+    } finally drop(frame)
   }
 
   def main(args: Array[String]): Unit = {

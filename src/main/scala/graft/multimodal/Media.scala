@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables
+import graft.functions.Caching.hold
 
 /** Multimodal-column plumbing: image/audio/video payloads ride through the
   * engine as opaque `binary` columns plus a typed metadata struct, exactly
@@ -573,8 +574,7 @@ object Media {
   def phashPairsDf(media: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming < graft.operators.Dedup.SimBands,
       "pigeonhole guarantee needs maxHamming < SimBands")
-    val fp = phashRaw(media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fp = hold(phashRaw(media))
     val bands = fp.select(col("doc_id"), col("phash"),
         explode(graft.operators.Dedup.simhashBandStructs(col("phash"))).as("bb"))
       .select(col("doc_id"), col("phash"),

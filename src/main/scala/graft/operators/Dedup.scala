@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.Fns._
+import graft.functions.Caching.{drop, hold}
 import graft.sources.Tables
 
 /** Deduplication operators for LLM-data pipelines: exact, MinHash+LSH,
@@ -60,8 +60,7 @@ object Dedup extends org.apache.spark.internal.Logging {
   def exactNormalizedDf(docs: DataFrame): DataFrame = {
     val norm = trim(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))
-    val t = docs.select(col("doc_id"), norm.as("norm"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val t = hold(docs.select(col("doc_id"), norm.as("norm")))
     val groups = t.groupBy("norm")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
     graft.functions.Caching.releaseAfterAction(
@@ -169,7 +168,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     // The signature table feeds the band self-join (both sides) AND the two
     // join-backs below — persist it so the shingle→hash→32-min aggregate runs
     // once, not four times; released after the caller's terminal action.
-    val sigs = minhashSignatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    val sigs = hold(minhashSignatures(docs))
     val bands = minhashBandsFromSigs(sigs)
     val cand = bands.as("a")
       .join(bands.as("b"),
@@ -319,7 +318,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     // can agree on several bands) runs AFTER the Hamming filter — hamming is
     // a pure function of the pair, so filtering first is equivalent and
     // shrinks the distinct.
-    val fp = simhashFp(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    val fp = hold(simhashFp(docs))
     val bands = fp
       .select(col("doc_id"), col("simhash"), explode(simhashBandStructs(col("simhash"))).as("bb"))
       .select(col("doc_id"), col("simhash"),
@@ -427,7 +426,7 @@ object Dedup extends org.apache.spark.internal.Logging {
         explode(simhashBandStructs(col("simhash"))).as("bb"))
       .select(col("doc_id"), col("simhash"),
         col("bb.band_idx").as("band_idx"), col("bb.band_bits").as("band_bits"))
-    val bfp = simhashFp(batch).persist(StorageLevel.MEMORY_AND_DISK)
+    val bfp = hold(simhashFp(batch))
     val bBands = bandsOf(bfp).select(col("doc_id").as("bid"),
       col("simhash").as("bfp"), col("band_idx"), col("band_bits"))
     val corpusHits = bandsOf(simhashFp(corpus))
@@ -510,12 +509,11 @@ object Dedup extends org.apache.spark.internal.Logging {
     * equals scoring tokens(text). */
   private[graft] def substringDupFromToks(tokd: DataFrame,
       window: Int = SubstrWindow): DataFrame = {
-    val wins = tokd
+    val wins = hold(tokd
       .select(col("doc_id"), explode(wordNgrams(col("tk"), window)).as("win"))
       .select(col("doc_id"),
         polyHash57(col("win"), 31).as("h1"),
-        polyHash57(col("win"), 37).as("h2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        polyHash57(col("win"), 37).as("h2")))
     val counts = wins.groupBy("h1", "h2").agg(count(lit(1)).as("occ"))
     val perDoc = wins.join(counts, Seq("h1", "h2"))
       .groupBy("doc_id")
@@ -568,18 +566,16 @@ object Dedup extends org.apache.spark.internal.Logging {
     // fingerprinted windows, and the per-doc token count (guide §1.2
     // step 1; the r16 shape ran the tokenize regex three times: toks,
     // wins, and the final n_tokens projection each re-tokenized).
-    val tokd = docs
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tokd = hold(docs
+      .select(col("doc_id"), tokens(col("text")).as("tk")))
     val toks = tokd
       .select(col("doc_id"), posexplode(col("tk")))
       .withColumnRenamed("col", "tok")
-    val wins = tokd
+    val wins = hold(tokd
       .select(col("doc_id"), posexplode(wordNgrams(col("tk"), window)))
       .select(col("doc_id"), col("pos"),
         polyHash57(col("col"), 31).as("h1"),
-        polyHash57(col("col"), 37).as("h2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        polyHash57(col("col"), 37).as("h2")))
     val firsts = wins.groupBy("h1", "h2")
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"))
     // Redundant occurrence = not the fingerprint's lexicographic-first.
@@ -634,11 +630,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     val lines = docs
       .select(col("doc_id"), posexplode(split(col("text"), "\n")))
       .withColumnRenamed("col", "line")
-    val fp = lines.filter(col("line") =!= "")
+    val fp = hold(lines.filter(col("line") =!= "")
       .select(col("doc_id"), col("pos"),
         polyHash57(col("line"), 31).as("h1"),
-        polyHash57(col("line"), 37).as("h2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        polyHash57(col("line"), 37).as("h2")))
     val firsts = fp.groupBy("h1", "h2")
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"))
     val drops = fp.join(firsts, Seq("h1", "h2"))
@@ -810,7 +805,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     if (ArtifactCache.exists(ArtifactCache.path(sibName, keyFile, sibParams)))
       graft.functions.Caching.releaseAfterAction(scored(ov0, wantJac), sh)
     else {
-      val ov = ov0.persist(StorageLevel.MEMORY_AND_DISK)
+      val ov = hold(ov0)
       // The sibling's products entry prices its marginal write; the
       // shared core is inside the requester's getOrBuild timing.
       ArtifactCache.getOrBuildDir(s, sibName, keyFile, sibParams)(tmp =>
@@ -873,7 +868,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     // `sh` feeds two consumers (per-doc counts, the pair groups); persist it
     // so the upstream scan→shingle pipeline runs once instead of twice;
     // released after the caller's terminal action.
-    val sh = shinglesDf.persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = hold(shinglesDf)
     val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // Pair generation WITHOUT a self-join AND without a separate df-count
     // pass: ONE groupBy collects each shingle's doc ids through the
@@ -987,10 +982,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     * propagation join key (guide §2.4); private[graft] so PlanSpec can
     * pin that every round's join actually REUSES this partitioning. */
   private[graft] def ccEdgeCache(pairs: DataFrame): DataFrame =
-    pairs.select(col("d1").as("a"), col("d2").as("b"))
+    hold(pairs.select(col("d1").as("a"), col("d2").as("b"))
       .unionAll(pairs.select(col("d2").as("a"), col("d1").as("b")))
-      .repartition(col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("b")))
 
   /** One propagation round over the cached edges: min-label from the
     * neighbors, then one pointer jump. Returns the next label frame
@@ -1012,11 +1006,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     // frame twice within ONE job, so a lazy cache computes it once while
     // skipping the standalone materialization job per round — lineage
     // stays shallow (labels is checkpointed by the loop).
-    val propagated = labels
+    val propagated = hold(labels
       .join(neighborMin.withColumnRenamed("a", "id"), Seq("id"), "left")
       .select(col("id"), col("label").as("old"),
-        least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
     // Pointer jump: label ← label's label. A label is always a node id in
     // the same component with a ≤ label, so the left join hits unless the
     // label is already a root; least() keeps monotone descent.
@@ -1047,7 +1040,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     while (changed > 0) {
       val (roundDf, propagated) = ccRound(edges, labels)
       val jumped = roundDf.localCheckpoint(true)
-      propagated.unpersist()
+      drop(propagated)
       changed = jumped.filter(col("label") =!= col("old")).count()
       // The superseded round's checkpoint blocks are invisible to
       // Dataset.unpersist — release them at the RDD level.
@@ -1056,7 +1049,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       rounds += 1
     }
     logInfo(s"components converged in $rounds rounds")
-    edges.unpersist()
+    drop(edges)
     labels
   }
 
@@ -1277,12 +1270,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     // verify join-backs; the banded keys (36 codegen'd 64-dim dot products
     // per vector) sit on both sides of the candidate self-join. Persist both
     // so that work runs once — previously it ran 3-4×.
-    val v = Tables.embeddings(s, d)
+    val v = hold(Tables.embeddings(s, d)
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val keys = Similarity.bandedKeys(v.select("vec_id", "v"), EmbBands, EmbRowsPerBand)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nrm", l2Norm(col("v"))))
+    val keys = hold(Similarity.bandedKeys(v.select("vec_id", "v"), EmbBands, EmbRowsPerBand))
     val cand = keys.as("a")
       .join(keys.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -1358,7 +1349,7 @@ object Dedup extends org.apache.spark.internal.Logging {
 
   private def minhashBandsPrCore(exactPairs: DataFrame,
       docs: DataFrame): DataFrame = {
-    val sigs = minhashSignatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    val sigs = hold(minhashSignatures(docs))
     // One band frame per geometry, tagged and unioned — the join below
     // runs once over all four, keyed by (bands, band_idx, band_key).
     val bandsAll = BandSweep.map { case (b, r) =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Fns.cents
+import graft.functions.Caching.hold
 import graft.sources.Tables
 
 /** Batch event-time analytics over the events table. These are the batch
@@ -86,8 +87,7 @@ object Events {
 
   /** Same, over any (user_id, event_type, ts_us) DataFrame (planted tests). */
   def funnelDf(events: DataFrame): DataFrame = {
-    val e = events.select(col("user_id"), col("event_type"), col("ts_us"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = hold(events.select(col("user_id"), col("event_type"), col("ts_us")))
     val t1 = e.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("ts_us").as("t1"))
     val t2 = e.filter(col("event_type") === "click")
@@ -129,8 +129,7 @@ object Events {
   /** Same, over any (user_id, event_type, ts_us) DataFrame. */
   def funnelWindowedDf(events: DataFrame,
       windowUs: Long = FunnelWindowUs): DataFrame = {
-    val e = events.select(col("user_id"), col("event_type"), col("ts_us"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = hold(events.select(col("user_id"), col("event_type"), col("ts_us")))
     val t1 = e.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("ts_us").as("t1"))
     val t2 = e.filter(col("event_type") === "click")
@@ -175,10 +174,9 @@ object Events {
 
   /** Same, over any (user_id, ts_us) DataFrame (planted tests). */
   def retentionDf(events: DataFrame): DataFrame = {
-    val days = events
+    val days = hold(events
       .select(col("user_id"), expr(s"ts_us div $DayUs").as("day"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val cohort = days.groupBy("user_id").agg(min("day").as("cohort_day"))
     val act = days.join(cohort, "user_id")
       .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
@@ -226,8 +224,7 @@ object Events {
     * persisted because it feeds both the per-type moment aggregate and
     * the final join (mirrors retentionDf's shared-frame persist). */
   def anomalyHourlyDf(hourlyIn: DataFrame): DataFrame = {
-    val hourly = hourlyIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hourly = hold(hourlyIn)
     graft.functions.Caching.releaseAfterAction(
       zFlagged(hourly.join(broadcast(momentsOf(hourly)), "event_type"))
         .orderBy("event_type", "hour_idx"),
@@ -292,8 +289,7 @@ object Events {
 
   /** Same, over any (event_type, ts_us) DataFrame (planted tests). */
   def anomalyDenseDf(events: DataFrame): DataFrame = {
-    val hourly = hourlyCounts(events)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hourly = hold(hourlyCounts(events))
     val bounds = hourly.agg(min("hour_idx").as("lo"), max("hour_idx").as("hi"))
     val hours = bounds
       .select(explode(sequence(col("lo"), col("hi"))).as("hour_idx"))
@@ -654,7 +650,7 @@ object Events {
     // Unrolled Morton sum (codegen) instead of the interpreted HOF fold;
     // nrm persists so the scan + normalization runs once for the two
     // layout branches instead of once per branch (guide §1.2 step 2, §5).
-    val nrmP = nrm.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nrmP = hold(nrm)
     val z = nrmP.select(col("u"), col("t"),
       expr(s"shiftright(${mortonFlatExpr(Seq("ua", "ta"), ZorderBits)}, " +
         s"$shift)").as("bucket"))
@@ -785,7 +781,7 @@ object Events {
     // codegen where the aggregate() HOF is interpreted per row; nrm
     // persists so the scan + normalization runs once for the three
     // layout branches (guide §1.2 step 2, §5).
-    val nrmP = nrm.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nrmP = hold(nrm)
     val h = withHilbertKey(nrmP.select(col("u"), col("t"), col("ua"),
         col("ta")), "bucket", shift)
       .select("u", "t", "bucket")
@@ -1121,11 +1117,9 @@ object Events {
     val codes = eventTypeCodes(e)
     // rows feeds the audit AND both data-derived probe sets — persist so
     // the events scan + type-code join runs once, not four times
-    val rows = e.join(broadcast(codes), "event_type")
-      .select(col("user_id").as("u"), col("ts_us").as("t"), col("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val audit = zorderLayoutNDf(rows, Seq("u", "t", "c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = hold(e.join(broadcast(codes), "event_type")
+      .select(col("user_id").as("u"), col("ts_us").as("t"), col("c")))
+    val audit = hold(zorderLayoutNDf(rows, Seq("u", "t", "c")))
     val nProbes = ZorderSkipProbes
     val nb = 1L << ZorderBucketsLog2
     val userProbes = rows.select(col("u").as("pv"))
@@ -1372,10 +1366,9 @@ object Events {
     * whose EVERY shared bin is hot are lost, asserted in the planted
     * hot-hour spec. */
   def intervalAllPairsDf(events: DataFrame, perBinCap: Long = 0L): DataFrame = {
-    val sess = sessionizeDf(events)
+    val sess = hold(sessionizeDf(events)
       .select(col("user_id"), col("session_id"), col("start_us"),
-        col("end_us"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("end_us")))
     val binnedAll = sess.withColumn("bin",
       explode(sequence(expr(s"start_us div $HourUs"),
         expr(s"end_us div $HourUs"))))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables._
+import graft.functions.Caching.{drop, hold}
 
 /** Graph analytics beyond the connected components the dedup family runs
   * ([[Dedup.components]]): link-style importance scoring, the measure crawl
@@ -59,14 +60,13 @@ object Graph {
     // aggregate (the query's dominant scan) evaluated FOUR times inside
     // the one cache-fill action (guide §5; r17 job profile). Cached, it
     // runs once and the union/outW branches scan the cache.
-    val edgesRaw = orders(s, d)
+    val edgesRaw = hold(orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"))
       .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_custkey", "l_suppkey").agg(count(lit(1)).as("cnt"))
       .select((col("o_custkey") * 2).as("cnode"),
-        (col("l_suppkey") * 2 + 1).as("snode"), col("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (col("l_suppkey") * 2 + 1).as("snode"), col("cnt")))
     val edges = edgesRaw
       .select(col("cnode").as("src"), col("snode").as("dst"), col("cnt"))
       .unionAll(edgesRaw.select(col("snode").as("src"),
@@ -112,15 +112,13 @@ object Graph {
     // keyed on src, so the edge list (the corpus-sized side) shuffles once
     // at cache fill, and each round moves only the node-sized rank table
     // (guide §2.4).
-    val e = edges.join(outW, "src")
+    val e = hold(edges.join(outW, "src")
       .select(col("src"), col("dst"), col("cnt"), col("wout"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
+    val nodes = hold(e.select(col("src").as("node_id")).distinct())
     val n = nodes.count()
     if (n == 0) {
-      e.unpersist(false); nodes.unpersist(false)
+      drop(e, nodes)
       return (nodes.select(col("node_id"), lit(0L).as("rank_e12")).limit(0), 0)
     }
     val teleport = lit((PrDampDen - PrDampNum) * (PrScale / n) / PrDampDen)
@@ -220,14 +218,12 @@ object Graph {
     * the build-once [[coSupplyEdgesShared]] by [[triangles]] and
     * [[componentsQuery]]. */
   def coSupplyEdges(s: SparkSession, d: String): DataFrame = {
-    val os = lineitem(s, d).select(col("l_orderkey").as("o"), col("l_suppkey").as("sk"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val e0 = os.as("x")
+    val os = hold(lineitem(s, d).select(col("l_orderkey").as("o"), col("l_suppkey").as("sk"))
+      .distinct())
+    val e0 = hold(os.as("x")
       .join(os.as("y"), col("x.o") === col("y.o") && col("x.sk") < col("y.sk"))
       .groupBy(col("x.sk").as("a"), col("y.sk").as("b"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("cnt")))
     // The two driver actions — the node-count for the budget and the
     // shared-count histogram — are independent; overlap them (guide
     // §2.6). The histogram side fills the e0 persist (distinct +
@@ -349,10 +345,9 @@ object Graph {
     * on u, the key of every round's first join (guide §2.4);
     * private[graft] for PlanSpec's partitioning-reuse pin. */
   private[graft] def kcoreEdgeCache(edges: DataFrame): DataFrame =
-    edges.select(col("a").as("u"), col("b").as("v"))
+    hold(edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("u")))
 
   /** One peeling round's degree count over the survivors — the u-side
     * join must reuse the cached hash(u) partitioning (no edge-side
@@ -368,8 +363,7 @@ object Graph {
     // the undirected edge list shuffles once at cache fill, not per round
     // (guide §2.4; pinned by PlanSpec through kcoreEdgeCache/kcoreDegree).
     val und = kcoreEdgeCache(edges)
-    val d0 = und.groupBy("u").agg(count(lit(1)).as("degree"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d0 = hold(und.groupBy("u").agg(count(lit(1)).as("degree")))
     def degreeOver(alive: DataFrame): DataFrame = kcoreDegree(und, alive)
     var alive = d0.filter(col("degree") >= k).select("u").localCheckpoint(true)
     var aliveCount = alive.count()
@@ -448,10 +442,9 @@ object Graph {
     * v, the key of every propagation round's join (guide §2.4);
     * private[graft] for PlanSpec's partitioning-reuse pin. */
   private[graft] def lpaEdgeCache(edges: DataFrame): DataFrame =
-    edges.select(col("a").as("u"), col("b").as("v"))
+    hold(edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("v")))
 
   /** One synchronous propagation round (pre-checkpoint): edge⋈label join
     * keyed on the neighbor — the edge side must reuse the cached hash(v)
@@ -514,15 +507,13 @@ object Graph {
     // the CC fixpoint and the LPA rounds back to back — two driver loops
     // whose jobs overlap cleanly (guide §2.6). Warm runs hit both products
     // on disk and the join point returns immediately.
-    val edges = coSupplyEdgesShared(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = hold(coSupplyEdgesShared(s, d))
     val lpaJoin = graft.functions.Par.async(lpaLabelsShared(s, d))
     val compProduct = componentLabelsShared(s, d)
     val lpaProduct = lpaJoin()
-    val deg = edges.select(col("a").as("u"))
+    val deg = hold(edges.select(col("a").as("u"))
       .unionAll(edges.select(col("b").as("u")))
-      .groupBy("u").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("u").agg(count(lit(1)).as("deg")))
     val compLabels = deg.select(col("u"))
       .join(compProduct
           .select(col("s_suppkey").as("u"), col("component_id").as("lbl")),
@@ -560,7 +551,7 @@ object Graph {
     * a < b, no duplicates. Returns (node, n_tri) for nodes in ≥ 1
     * triangle, unordered. */
   def trianglesDf(edges: DataFrame): DataFrame = {
-    val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = hold(edges)
     val deg = e.select(col("a").as("v"))
       .unionAll(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("dg"))
@@ -569,13 +560,12 @@ object Graph {
     // Persisted: the wedge self-join below reads it twice and the plan
     // gets no ReusedExchange (both sides broadcast) — unpersisted, the
     // degree joins ran twice (r16 plan audit, guide §5).
-    val oriented = e
+    val oriented = hold(e
       .join(deg.select(col("v").as("a"), col("dg").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("dg").as("db")), "b")
       .select(
         when(col("da") <= col("db"), col("a")).otherwise(col("b")).as("u"),
-        when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("w")))
     // Wedges at u over out-neighbors (v < x by key → the closing edge is
     // exactly the canonical (v, x) row); one hash join closes them.
     val tri = oriented.as("e1")
@@ -599,15 +589,13 @@ object Graph {
     // keyed on src, so the edge list (the corpus-sized side) shuffles once
     // at cache fill, and each round moves only the node-sized rank table
     // (guide §2.4).
-    val e = edges.join(outW, "src")
+    val e = hold(edges.join(outW, "src")
       .select(col("src"), col("dst"), col("cnt"), col("wout"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
+    val nodes = hold(e.select(col("src").as("node_id")).distinct())
     val n = nodes.count()
     if (n == 0) { // degenerate input: no nodes → empty ranks, not a div-by-0
-      e.unpersist(false); nodes.unpersist(false)
+      drop(e, nodes)
       return nodes.select(col("node_id"), lit(0L).as("rank_e12")).limit(0)
     }
     val base = lit(PrScale / n)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
+import graft.functions.Caching.{drop, hold}
 import graft.sources.Tables
 
 /** Training-data pipeline composition: the end-to-end operators a corpus
@@ -305,9 +306,8 @@ object Pipeline {
     // gates (guide §1.2 step 1; the r16 shape tokenized the corpus twice).
     // The exact-dup survivor grouping still reads the raw text — it needs
     // the full string, not tokens.
-    val tokd = docs
-      .select(col("doc_id"), col("lang"), tokens(col("text")).as("__toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tokd = hold(docs
+      .select(col("doc_id"), col("lang"), tokens(col("text")).as("__toks")))
     val spans = Dedup.substringDupFromToks(
         tokd.select(col("doc_id"), col("__toks").as("tk")))
       .select(col("doc_id"),
@@ -386,13 +386,12 @@ object Pipeline {
 
   /** Same, over any (text, cohort_a: boolean) DataFrame (planted tests). */
   def corpusDriftDf(docs: DataFrame, k: Int = DriftTopK): DataFrame = {
-    val counts = driftCounts(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = hold(driftCounts(docs))
     val tot = counts.agg(sum("cnt_a"), sum("cnt_b")).head()
     // Empty corpus or a one-cohort corpus: drift is undefined — empty
     // report, never an NPE or a divide-by-zero NaN ranking.
     if (tot.isNullAt(0) || tot.getLong(0) == 0L || tot.getLong(1) == 0L) {
-      counts.unpersist(false)
+      drop(counts)
       return counts.select(col("word"), col("cnt_a"), col("cnt_b"),
         lit(0L).as("diff_e6")).limit(0)
     }
@@ -528,8 +527,7 @@ object Pipeline {
   /** Same, over any (doc_id, text) DataFrame (planted-contamination tests). */
   def decontaminateDf(docs: DataFrame): DataFrame = {
     val sp = splitAssign(docs).select("doc_id", "split")
-    val sh = Dedup.shingles(docs).join(sp, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = hold(Dedup.shingles(docs).join(sp, "doc_id"))
     val evalSh = sh.filter(col("split") === "test").select("sh").distinct()
     val shared = sh.filter(col("split") =!= "test")
       .join(broadcast(evalSh), "sh")
@@ -568,16 +566,14 @@ object Pipeline {
   /** Same, over any (vec_id, embedding: array<float>) DataFrame. */
   def decontaminateSemanticDf(embeddings: DataFrame,
       minSimE4: Long = 3500L): DataFrame = {
-    val v = embeddings
+    val v = hold(embeddings
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nrm", l2Norm(col("v"))))
     val sp = splitAssign(v.select(col("vec_id").as("doc_id")))
       .select(col("doc_id").as("vec_id"), col("split"))
-    val keys = Similarity
+    val keys = hold(Similarity
       .bandedKeys(v.select("vec_id", "v"), Dedup.EmbBands, Dedup.EmbRowsPerBand)
-      .join(sp, "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(sp, "vec_id"))
     val testKeys = keys.filter(col("split") === "test")
       .select(col("vec_id").as("tid"), col("band_idx"), col("band_key"))
     val cand = keys.filter(col("split") =!= "test")
@@ -677,16 +673,14 @@ object Pipeline {
     val m = BloomBits
     def probe(salt: String) = saltedBucket(salt, col("sh"), m)
     val sp = splitAssign(docs).select("doc_id", "split")
-    val sh = Dedup.shingles(docs).join(sp, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = hold(Dedup.shingles(docs).join(sp, "doc_id"))
     // Distinct eval shingles feed BOTH the bit build and the verify join.
-    val evalSh = sh.filter(col("split") === "test").select("sh").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val evalSh = hold(sh.filter(col("split") === "test").select("sh").distinct())
     val bits = bloomBitsFrom(evalSh)
     val corpus = sh.filter(col("split") =!= "test")
       .withColumn("p1", probe("b1#"))
       .withColumn("p2", probe("b2#"))
-    val hit = corpus
+    val hit = hold(corpus
       .join(broadcast(bits.select(col("w").as("w1"), col("bits").as("bits1"))),
         expr("p1 div 64") === col("w1"), "left")
       .join(broadcast(bits.select(col("w").as("w2"), col("bits").as("bits2"))),
@@ -695,8 +689,7 @@ object Pipeline {
         (col("bits1").isNotNull && col("bits2").isNotNull &&
           expr("(shiftright(bits1, CAST(p1 % 64 AS INT)) & 1) = 1") &&
           expr("(shiftright(bits2, CAST(p2 % 64 AS INT)) & 1) = 1")).cast("long"))
-      .select("doc_id", "sh", "is_cand")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("doc_id", "sh", "is_cand"))
     // Exact verify runs on the FILTERED candidate stream only, through an
     // UNHINTED join: the planner broadcasts the eval strings while they
     // fit and shuffles the (small) candidate stream against them when
@@ -1171,8 +1164,7 @@ object Pipeline {
     val counts = base.groupBy("lang").agg(count(lit(1)).as("n"))
     val thr = least(lit(StratP),
       ceil(lit(overAdmit * StratCap) * lit(StratP.toDouble) / col("n")).cast("long"))
-    val admitted = base.join(broadcast(counts), "lang").filter(col("h") <= thr)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val admitted = hold(base.join(broadcast(counts), "lang").filter(col("h") <= thr))
     // Under-admit guard — the "one tiny aggregate" re-run check: a stratum
     // is WRONG (not just small) if it admitted fewer than min(cap, n)
     // rows, because some non-admitted row then belongs in the true
@@ -1507,9 +1499,8 @@ object Pipeline {
       .withColumn("thr", least(lit(StratP),
         ceil(lit(overAdmit) * col("target") * lit(StratP.toDouble) / col("n_source"))
           .cast("long")))
-    val admitted = base.join(broadcast(targets), "source")
-      .filter(col("h") <= col("thr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val admitted = hold(base.join(broadcast(targets), "source")
+      .filter(col("h") <= col("thr")))
     val adm = admitted.groupBy("source").agg(count(lit(1)).as("adm"))
     val short = targets.join(adm, Seq("source"), "left")
       .filter(coalesce(col("adm"), lit(0L)) < col("target"))

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.Fns._
+import graft.functions.Caching.{drop, hold}
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor / similarity search over the embeddings table.
@@ -87,7 +87,8 @@ object Similarity {
       .drop("bb")
   }
 
-  private def corpus(s: SparkSession, d: String): DataFrame =
+  // private[graft] so CachingSpec can look up the corpus cache entry.
+  private[graft] def corpus(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
       .withColumn("nrm", l2Norm(col("v")))
@@ -305,7 +306,7 @@ object Similarity {
   def ivfTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       nCells: Int = IvfCells, nProbe: Int = IvfProbe): DataFrame = {
     // Corpus feeds assignment, scoring, and the query/centroid subsets.
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     val cents = c.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell_id"), col("v").as("cv"), col("nrm").as("cnrm"))
     graft.functions.Caching.releaseAfterAction(
@@ -432,7 +433,7 @@ object Similarity {
   private def trainCoarse(s: SparkSession, d: String, nCells: Int,
       iters: Int): (DataFrame, DataFrame, Seq[(Long, Seq[Double])]) = {
     import s.implicits._
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     // e6 fixed-point view for the exact-integer centroid sums.
     val ve6 = transform(col("v"), x => round(x * lit(1000000.0)).cast("long"))
     var cents: Seq[(Long, Seq[Double])] = c.filter(col("vec_id") < nCells)
@@ -503,9 +504,8 @@ object Similarity {
   private def kmeansClustersRaw(s: SparkSession, d: String, nCells: Int,
       iters: Int): DataFrame = {
     val (c, _, centsRaw) = trainCoarse(s, d, nCells, iters)
-    val asgn = withAssignedCell(c, centsRaw)
-      .select(col("vec_id"), col("cell_id").as("cluster_id"), col("sim_e4"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val asgn = hold(withAssignedCell(c, centsRaw)
+      .select(col("vec_id"), col("cell_id").as("cluster_id"), col("sim_e4")))
     val sizes = asgn.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     graft.functions.Caching.releaseAfterAction(
       asgn.join(broadcast(sizes), "cluster_id")
@@ -576,9 +576,8 @@ object Similarity {
   def pqTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       m: Int = PqM, kCents: Int = PqK): DataFrame = {
     val sub = PqSubDim
-    val c = corpus(s, d)
-      .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("vn"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d)
+      .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("vn")))
     // (vec_id, m, xm): the M sub-vectors of each normalized vector.
     def subVectors(df: DataFrame, idCol: String): DataFrame =
       df.select(col("vec_id"), posexplode(
@@ -685,11 +684,10 @@ object Similarity {
       kCents: Int = PqK): DataFrame = {
     val s = c0.sparkSession
     import s.implicits._
-    val cn = c0
+    val cn = hold(c0
       .withColumn("nrm", l2Norm(toDoubleArr(col("v"))))
       .select(col("vec_id"),
-        transform(toDoubleArr(col("v")), x => x / col("nrm")).as("vn"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        transform(toDoubleArr(col("v")), x => x / col("nrm")).as("vn")))
     val alloc = opqSnakeAllocation(cn, m)
     val dim = alloc.size
     // When dim % m != 0 the natural layout's contiguous slices would cover
@@ -762,7 +760,7 @@ object Similarity {
       nCells: Int = IvfCells, nProbe: Int = IvfProbe,
       m: Int = PqM, kCents: Int = PqK, rerank: Int = PqRerank): DataFrame = {
     val sub = PqSubDim
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     val cents = c.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell_id"), col("v").as("cv"), col("nrm").as("cnrm"))
     val assign = stubAssignment(c, nCells)
@@ -877,9 +875,9 @@ object Similarity {
         DataFrame) = {
     import s.implicits._
     val sub = PqSubDim
-    val full = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val full = hold(corpus(s, d))
     // e4-quantized normalized corpus; its own L2 norm feeds e4 cosine.
-    val nv = e4Normalized(full).persist(StorageLevel.MEMORY_AND_DISK)
+    val nv = hold(e4Normalized(full))
     // ---- stage 1: trained coarse quantizer (Lloyd, e4 integer domain).
     var cents: Seq[(Long, Seq[Double])] = nv.filter(col("vec_id") < nCells)
       .select("vec_id", "v").orderBy("vec_id").collect()
@@ -910,21 +908,19 @@ object Similarity {
     // Final assignment feeds BOTH the residual computation (via rsubs) and
     // the candidate join in the terminal action — persist it so the
     // corpus-×-centroids argmin runs once, not twice.
-    val af = withAssignedCell(nv, cents).select("vec_id", "cell_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val af = hold(withAssignedCell(nv, cents).select("vec_id", "cell_id"))
     // ---- stage 2: residuals + their e3 anisotropy direction sub-vectors.
     val resid = nv.join(af, "vec_id")
       .join(broadcast(ct.select("cell_id", "cv")), "cell_id")
       .select(col("vec_id"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"), col("v"))
-    val rsubs = resid.select(col("vec_id"), posexplode(
+    val rsubs = hold(resid.select(col("vec_id"), posexplode(
         array((0 until m).map(i => struct(
           slice(col("r"), i * sub + 1, sub).as("rm"),
           transform(slice(col("v"), i * sub + 1, sub),
             x => round(x / lit(10.0))).as("xq"))): _*)))
       .select(col("vec_id"), col("pos").as("m"),
-        col("col.rm").as("rm"), col("col.xq").as("xq"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col("col.rm").as("rm"), col("col.xq").as("xq")))
     var cb: Seq[(Long, Long, Seq[Double])] = rsubs.filter(col("vec_id") < kCents)
       .select("vec_id", "m", "rm").orderBy("vec_id", "m").collect()
       .map(r => (r.getInt(1).toLong, r.getLong(0), r.getSeq[Double](2).toSeq)).toSeq
@@ -1339,8 +1335,7 @@ object Similarity {
     } finally
       // Release the model-sized corpus frames even when a write fails —
       // the library must not rely on the caller's clearCache hygiene.
-      Seq(full, nv, af, rsubs).foreach(f =>
-        try f.unpersist(false) catch { case _: Throwable => () })
+      drop(full, nv, af, rsubs)
   }
 
   /** SERVE top-k from the PERSISTED trained index — the production split's
@@ -1511,12 +1506,11 @@ object Similarity {
     val c = corpus(s, d)
       .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("vn"))
     // (vec_id, m, xm): e4-quantized sub-vectors, integral doubles.
-    val subs = c.select(col("vec_id"), posexplode(
+    val subs = hold(c.select(col("vec_id"), posexplode(
         array((0 until m).map(i => transform(
           slice(col("vn"), i * sub + 1, sub),
           x => round(x * lit(10000.0)).cast("double"))): _*)))
-      .toDF("vec_id", "m", "xm")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .toDF("vec_id", "m", "xm"))
     var cb: Seq[(Long, Long, Seq[Double])] = subs.filter(col("vec_id") < kCents)
       .orderBy("vec_id", "m").collect()
       .map(r => (r.getInt(1).toLong, r.getLong(0), r.getSeq[Double](2).toSeq)).toSeq
@@ -1773,13 +1767,11 @@ object Similarity {
   def knnGraphDf(embeddings: DataFrame, k: Int = KnnK,
       bands: Int = 8, rows: Int = 0,
       bucketCap: Long = KnnBucketCap): DataFrame = {
-    val c = embeddings
+    val c = hold(embeddings
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nrm", l2Norm(col("v"))))
     val rowsN = if (rows > 0) rows else bandRowsFor(c.count())
-    val keys = bandedKeys(c.select("vec_id", "v"), bands, rowsN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val keys = hold(bandedKeys(c.select("vec_id", "v"), bands, rowsN))
     // The bucket registry is bands × 2^rows rows — small enough that
     // Catalyst auto-broadcasts the eligibility side at these knobs, and a
     // size-based shuffle join takes over if `rows` ever grows past the
@@ -1846,9 +1838,8 @@ object Similarity {
     // both so the projection work runs once — unpersisted this plan redid
     // 3-4× the dot products and was slower than the brute-force baseline.
     // Released after the caller's terminal action.
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-    val keys = bandedKeys(c.select("vec_id", "v"), bands, rows)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
+    val keys = hold(bandedKeys(c.select("vec_id", "v"), bands, rows))
     val qKeys = keys.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("band_idx"), col("band_key"))
     val cand = keys.join(broadcast(qKeys), Seq("band_idx", "band_key"))
@@ -1979,9 +1970,8 @@ object Similarity {
     * (planted tests). */
   def sqTopKDf(embeddings: DataFrame, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
-    val c = embeddings
-      .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(embeddings
+      .select(col("vec_id"), toDoubleArr(col("embedding")).as("v")))
     val (mns, steps) = sqModel(c)
     // code_i = round((x_i − mn_i)/step_i) — exact 0..255 integers; the
     // codes frame IS the index (1 byte/dim at rest; long here because
@@ -2059,21 +2049,19 @@ object Similarity {
     * caller hands to releaseAfterAction. */
   private def mmrCore(embeddings: DataFrame, nQueries: Int,
       depth: Int, k: Int): (DataFrame, (DataFrame, DataFrame), Seq[DataFrame]) = {
-    val c = embeddings
+    val c = hold(embeddings
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nrm", l2Norm(col("v"))))
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
-    val cands = c.crossJoin(broadcast(q))
+    val cands = hold(c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cid"),
         e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= depth)
-      .drop("rn")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .drop("rn"))
     // Pairwise candidate similarities (depth² per query, both directions —
     // the greedy penalty lookup). Selected ⊆ candidates, so every
     // remaining candidate meets every selected one here.
@@ -2087,11 +2075,10 @@ object Similarity {
       .filter(col("pd") =!= col("ps"))
     val pairsD = broadcast(pairKeys)
       .join(c.select(col("vec_id").as("pd"), col("v").as("dv"), col("nrm").as("dn")), "pd")
-    val pairs = broadcast(pairsD)
+    val pairs = hold(broadcast(pairsD)
       .join(c.select(col("vec_id").as("ps"), col("v").as("sv"), col("nrm").as("sn")), "ps")
       .select(col("qid"), col("pd"), col("ps"),
-        e4(dotD(col("dv"), col("sv")) / (col("dn") * col("sn"))).as("ds_e4"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        e4(dotD(col("dv"), col("sv")) / (col("dn") * col("sn"))).as("ds_e4")))
     // Round 1: pure relevance (empty-set penalty 0 ⇒ mmr2x = sim).
     // Each round's accumulator is an EAGER localCheckpoint: round i+1
     // consumes `selected` twice (penalty join + remaining anti-join), so
@@ -2280,7 +2267,7 @@ object Similarity {
   // private[graft] so PlanSpec can pin the BUILD's plan shape (no
   // broadcast of a non-constant-bounded frame) without a product write.
   private[graft] def navGraphBuild(s: SparkSession, d: String): DataFrame = {
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     // Banded candidate chain for the up/highway stages — the identical
     // keys + celebrity-cap rule as [[knnGraphDf]] (8 bands × rule rows,
     // [[KnnBucketCap]] over FULL-corpus occupancy), derived here because
@@ -2291,8 +2278,7 @@ object Similarity {
     // this product consumes (the rule input — the corpus count — is
     // pinned by the source-file identity already in the product key).
     val rowsN = bandRowsFor(c.count())
-    val keys = bandedKeys(c.select("vec_id", "v"), 8, rowsN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val keys = hold(bandedKeys(c.select("vec_id", "v"), 8, rowsN))
     val eligible = keys.groupBy("band_idx", "band_key")
       .agg(count(lit(1)).as("occ"))
       .filter(col("occ") <= KnnBucketCap)
@@ -2304,10 +2290,9 @@ object Similarity {
     // for both products, guide §5); the key is [[knnGraphShared]]'s
     // default one, so a warm run scans the stored edges and the closure
     // never evaluates.
-    val knnRanked = graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
+    val knnRanked = hold(graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
         s"$d/embeddings.parquet", knnGraphParams(KnnK, 8, 0, KnnBucketCap))(
-        knnGraphFromCapped(c, ck, KnnK))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        knnGraphFromCapped(c, ck, KnnK)))
     val knn = knnRanked.select("src", "dst")
     val wMir = Window.partitionBy("dst").orderBy(desc("sim_e4"), asc("src"))
     val mirror = knnRanked
@@ -2347,7 +2332,7 @@ object Similarity {
       .crossJoin(broadcast(entryVec))
       .select(col("vec_id").as("src"), lit(GraphEntry).as("dst"),
         e4(dotD(col("v"), col("ev")) / (col("nrm") * col("en"))).as("cs"))
-    val up = upBest.unionAll(upMiss).persist(StorageLevel.MEMORY_AND_DISK)
+    val up = hold(upBest.unionAll(upMiss))
     val wDown = Window.partitionBy("dst").orderBy(desc("cs"), asc("src"))
     val down = up
       .withColumn("rn", row_number().over(wDown))
@@ -2443,16 +2428,14 @@ object Similarity {
   /** Same, over any (vec_id, embedding) frame (planted tests). */
   def navInsertDf(embeddings: DataFrame,
       batch: Long = NavInsertBatch): DataFrame = {
-    val c = embeddings
+    val c = hold(embeddings
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("nrm", l2Norm(col("v"))))
     val cut = c.agg(max("vec_id")).head().getLong(0) - batch + 1L
     // Same band-geometry rule as the build: the visible corpus (this
     // frame) sets the rows-per-band, so an insert's candidate chain
     // matches the graph it attaches to at any n.
-    val keys = bandedKeys(c.select("vec_id", "v"), 8, bandRowsFor(c.count()))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val keys = hold(bandedKeys(c.select("vec_id", "v"), 8, bandRowsFor(c.count())))
     val (delta, caches) = navInsertDeltaOver(c, keys, cut, Long.MaxValue)
     graft.functions.Caching.releaseAfterAction(delta,
       (Seq(c, keys) ++ caches): _*)
@@ -2494,10 +2477,9 @@ object Similarity {
       .filter(col("src") =!= col("dst"))
       .select("src", "dst").distinct()
     val wSrc = Window.partitionBy("src").orderBy(desc("sim_e4"), asc("dst"))
-    val knnNew = scored(knnCand)
+    val knnNew = hold(scored(knnCand)
       .withColumn("rn", row_number().over(wSrc))
-      .filter(col("rn") <= KnnK)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("rn") <= KnnK))
     val wMir = Window.partitionBy("dst").orderBy(desc("sim_e4"), asc("src"))
     val mirror = knnNew
       .withColumn("mrn", row_number().over(wMir))
@@ -2529,7 +2511,7 @@ object Similarity {
       .crossJoin(broadcast(entryVec))
       .select(col("vec_id").as("src"), lit(GraphEntry).as("dst"),
         e4(dotD(col("v"), col("ev")) / (col("nrm") * col("en"))).as("cs"))
-    val up = upBest.unionAll(upMiss).persist(StorageLevel.MEMORY_AND_DISK)
+    val up = hold(upBest.unionAll(upMiss))
     val wDown = Window.partitionBy("dst").orderBy(desc("cs"), asc("src"))
     val down = up
       .withColumn("rn", row_number().over(wDown))
@@ -2590,7 +2572,7 @@ object Similarity {
     // §2.6); a warm run joins immediately on the published product.
     val navDeltaJoin = graft.functions.Par.async(
       navInsert(s, d, batch).select("src", "dst"))
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     val cut = c.agg(max("vec_id")).head().getLong(0) - batch + 1L
     val stored = navGraphShared(s, d).select("src", "dst")
     val base = stored.filter(col("src") < cut && col("dst") < cut)
@@ -2604,9 +2586,8 @@ object Similarity {
     // sequential jobs (measured: halves the eval's wall clock). Each
     // keyed slice is EXACTLY the per-graph walk — partitioned windows
     // and the gs-keyed edge join cannot leak candidates across graphs.
-    val edges = base.withColumn("gs", lit("base"))
-      .unionAll(post.withColumn("gs", lit("post_insert")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = hold(base.withColumn("gs", lit("base"))
+      .unionAll(post.withColumn("gs", lit("post_insert"))))
     val gsLabels = Seq("base", "post_insert").toDF("gs")
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
@@ -2697,7 +2678,7 @@ object Similarity {
     // materialization (guide §2.6). Warm runs join immediately.
     val navDeltaJoin = graft.functions.Par.async(
       navInsert(s, d, size).select("src", "dst"))
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     val cut0 = c.agg(max("vec_id")).head().getLong(0) - batches * size + 1L
     val stored = navGraphShared(s, d).select("src", "dst")
     val base = stored.filter(col("src") < cut0 && col("dst") < cut0)
@@ -2724,8 +2705,7 @@ object Similarity {
       }
     val geos = prefixEnds.indices.map(i => bandRowsFor(pre.getLong(2 * i)))
     val keysByR = geos.distinct.map { r =>
-      r -> bandedKeys(c.select("vec_id", "v"), 8, r)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      r -> hold(bandedKeys(c.select("vec_id", "v"), 8, r))
     }.toMap
     // ALL in-plan deltas are MATERIALIZED eagerly in ONE action (r17; the
     // r16 shape paid one sequential materialization job per prefix): the
@@ -2751,11 +2731,10 @@ object Similarity {
     // exactly {fb <= b}), so the base graph is scanned once, not once
     // per state, and the walk probes a frame 1/(B+1) the size
     // (guide §2.3, §2.4).
-    val edges = (Seq(base.withColumn("fb", lit(0L))) ++ inPlanDeltas.toSeq :+
+    val edges = hold((Seq(base.withColumn("fb", lit(0L))) ++ inPlanDeltas.toSeq :+
         navDeltaJoin().withColumn("fb", lit(batches.toLong)))
       .reduce(_ unionAll _)
-      .groupBy("src", "dst").agg(min("fb").as("fb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy("src", "dst").agg(min("fb").as("fb")))
     val gsLabels = (0L to batches.toLong).toDF("gs")
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
@@ -2838,9 +2817,8 @@ object Similarity {
     // key, so each hop's equi-join reuses the cached partitioning and
     // shuffles only the (node-sized) reachable set, never the edges
     // (guide §2.4: two operations keyed the same way share one exchange).
-    val edges = navGraphShared(s, d).select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = hold(navGraphShared(s, d).select(col("src"), col("dst"))
+      .repartition(col("src")))
     val total = corpus(s, d).agg(count(lit(1)).as("n_nodes"))
     var reach = Seq(GraphEntry).toDF("node").localCheckpoint(true)
     val states = scala.collection.mutable.ArrayBuffer(reach)
@@ -3305,9 +3283,8 @@ object Similarity {
     val layeredBeam = if (beam > 0) beam else graphBeamFor(nCorpus)
     val layeredRounds =
       if (beam > 0) LayeredRounds else layeredRoundsFor(nCorpus)
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = navGraphShared(s, d).select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
+    val edges = hold(navGraphShared(s, d).select(col("src"), col("dst")))
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val coarse = c.filter(col("vec_id") % CoarseMod === 0)
@@ -3379,8 +3356,7 @@ object Similarity {
         .localCheckpoint(true)
       states += beamDf
     }
-    val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val brute = hold(bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid")))
     val rows = budgets.toSeq.sortBy(_._1).map { case (st, r) =>
       val sel = states(r).filter(col("st") === st)
         .withColumn("rn", row_number().over(w))
@@ -3426,9 +3402,8 @@ object Similarity {
   private def graphWalk(s: SparkSession, d: String, nQueries: Int,
       beam: Int, rounds: Int)(
       entries: (DataFrame, DataFrame) => DataFrame): GraphWalkTrace = {
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = navGraphShared(s, d).select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
+    val edges = hold(navGraphShared(s, d).select(col("src"), col("dst")))
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     // The beam/candidate side of every per-round join is BOUNDED
@@ -3591,7 +3566,7 @@ object Similarity {
       k: Int = 5, nCells: Int = IvfCells,
       sweep: Seq[Long] = NprobeSweep): DataFrame = {
     val maxP = sweep.max.toInt
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     val cents = c.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell_id"), col("v").as("cv"),
         col("nrm").as("cnrm"))
@@ -3619,10 +3594,9 @@ object Similarity {
         e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
     // Fan the scored candidates out to every sweep setting that reaches
     // their entry depth, then rank per (nprobe, qid).
-    val expanded = scored
+    val expanded = hold(scored
       .withColumn("nprobe", explode(typedlit(sweep)))
-      .filter(col("pr") <= col("nprobe"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("pr") <= col("nprobe")))
     val wSel = Window.partitionBy("nprobe", "qid").orderBy(desc("sim_e4"), asc("cid"))
     val sel = expanded
       .withColumn("rn", row_number().over(wSel))
@@ -3668,7 +3642,7 @@ object Similarity {
     * across geometries; membership fans out by config. */
   def lshPlanesEval(s: SparkSession, d: String, nQueries: Int = 10,
       k: Int = 5, sweep: Seq[(Int, Int)] = LshPlaneSweep): DataFrame = {
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     // One packed-sign projection pass serves every sweep geometry
     // (bit-identical keys — see bandedKeysSweep): the r16 shape ran the
     // full 32-dot-product corpus pass once PER geometry via unionAll.
@@ -3679,12 +3653,11 @@ object Similarity {
     // The query-side key set is |sweep| × bands × nQueries rows at any
     // corpus size — broadcast it so the corpus-sized key frame never
     // shuffles on the band key (guide §3.1).
-    val cand = keysAll
+    val cand = hold(keysAll
       .join(broadcast(qk), Seq("bands", "bits_per_band", "band_idx", "band_key"))
       .select(col("bands"), col("bits_per_band"), col("qid"),
         col("vec_id").as("cid"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // Exact-score each DISTINCT pair once, whatever geometries found it.
     // The candidate-pair side is occupancy-bounded — broadcast it and
     // stream the corpus for the vector join-back.
@@ -3791,7 +3764,7 @@ object Similarity {
   }
 
   def embeddingHealth(s: SparkSession, d: String): DataFrame = {
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val c = hold(corpus(s, d))
     val (meanDir, deadDims) = meanDirection(c)
     val mv = typedlit(meanDir)
     val perVec = healthScoreCols(c, meanDir)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
+import graft.functions.Caching.{drop, hold}
 import graft.sources.Tables
 
 /** Text operators: the reference engine's entire production query surface
@@ -396,9 +397,8 @@ object TextAnalytics {
   /** Same, over any (doc_id, text) DataFrame and any vocab (planted tests). */
   def tokenizeWordpieceDf(docs: DataFrame,
       vocab: Seq[String] = WordPieceVocab): DataFrame = {
-    val occ = docTokensText(docs)
-      .select(col("doc_id"), explode(col("toks")).as("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val occ = hold(docTokensText(docs)
+      .select(col("doc_id"), explode(col("toks")).as("word")))
     val np = occ.select("word").distinct()
       .withColumn("n_pieces",
         size(org.apache.spark.sql.graft.StringExprs
@@ -605,8 +605,7 @@ object TextAnalytics {
     def cellOf(j: Int) = struct(lit(j).as("j"),
       graft.functions.Fns.saltedBucket(s"c$j#", col("word"), width).as("ccol"))
     val cellsOf = explode(array((0 until depth).map(cellOf): _*)).as("p")
-    val words = docs.select(explode(tokens(col("text"))).as("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val words = hold(docs.select(explode(tokens(col("text"))).as("word")))
     val exact = words.groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("word")).limit(k)
     val cells = words.select(col("word"), cellsOf)
@@ -671,10 +670,9 @@ object TextAnalytics {
     * also forced persisting `terms` for two consumers, which tf-reuse makes
     * unnecessary. */
   private def termFrequencies(docs: DataFrame): (DataFrame, Long) = {
-    val tf = docTokensText(docs)
+    val tf = hold(docTokensText(docs)
       .select(col("doc_id"), explode(col("toks")).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     val df_ = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = docs.count() // one scalar; the scan is cheap relative to the explode
     (graft.functions.Caching.releaseAfterAction(tf.join(df_, "word"), tf), n)
@@ -728,8 +726,7 @@ object TextAnalytics {
   /** Same, over any (doc_id, text) DataFrame (planted-corpus tests). */
   def bm25Df(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = bm25Tf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = hold(bm25Tf(docs))
     val (q, nd, avgdl) = bm25ModelOf(tf, docs.count())
     val qterms = docs.sparkSession.createDataFrame(q).toDF("word", "df")
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -787,11 +784,8 @@ object TextAnalytics {
     * Delegates to [[bm25ModelOf]] — the same derivation [[bm25Df]]
     * consumes. */
   private[graft] def bm25Stats(docs: DataFrame): (Seq[(String, Long)], Double, Double) = {
-    val tf = bm25Tf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r = bm25ModelOf(tf, docs.count())
-    tf.unpersist(false)
-    r
+    val tf = hold(bm25Tf(docs))
+    try bm25ModelOf(tf, docs.count()) finally drop(tf)
   }
 
   /** docTokens without the lang column (works on any (doc_id, text) frame). */
@@ -887,8 +881,7 @@ object TextAnalytics {
     // identical array in O(len) (FnsParitySpec pins the parity).
     val tgs = org.apache.spark.sql.graft.StringExprs
       .charNgrams(lower(col("text")), 3)
-    val base = docs.select(col("doc_id"), col("lang"), tgs.as("tgs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = hold(docs.select(col("doc_id"), col("lang"), tgs.as("tgs")))
     val profiles = base.select(col("lang"), explode(col("tgs")).as("tg"))
       .groupBy("lang", "tg").agg(count(lit(1)).as("c"))
       .withColumn("rn", row_number().over(
@@ -997,21 +990,19 @@ object TextAnalytics {
 
   /** Same, over any (doc_id, text) DataFrame (planted tests). */
   def dsirScoreDf(docs: DataFrame): DataFrame = {
-    val tf = docTokensText(docs)
+    val tf = hold(docTokensText(docs)
       .select(col("doc_id"), explode(col("toks")).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     val target = qualityDf(docs).filter(col("ok") === 1L).select("doc_id")
     // Source and target counts from ONE word-keyed aggregate (left-mark
     // target membership, conditional sum) instead of two shuffles + a
     // word join; ns/v/nt from ONE scalar action instead of two. c_t is
     // NULL exactly where the old inner-join ct frame had no row, so the
     // coalesce below is unchanged (r16, guide §2.4/§1.2).
-    val counts = tf
+    val counts = hold(tf
       .join(target.withColumn("is_t", lit(1L)), Seq("doc_id"), "left")
       .groupBy("word").agg(sum("tf").as("c_s"),
-        sum(when(col("is_t") === 1L, col("tf"))).as("c_t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(when(col("is_t") === 1L, col("tf"))).as("c_t")))
     val totRow = counts
       .agg(sum("c_s").as("ns"), count(lit(1)).as("v"), sum("c_t").as("nt"))
       .head()
@@ -1257,13 +1248,11 @@ object TextAnalytics {
     // Persisted: referenced by the tf labeling join AND the final
     // projection — unpersisted, the whole Gopher-rule corpus pass ran
     // twice (r16, guide §5).
-    val labels = qualityDf(docs).select(col("doc_id"), col("ok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tf = docTokensText(docs)
+    val labels = hold(qualityDf(docs).select(col("doc_id"), col("ok")))
+    val tf = hold(docTokensText(docs)
       .select(col("doc_id"), explode(col("toks")).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .join(labels, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(labels, "doc_id"))
     val classTotals = tf.agg(
       // coalesce: sum over an EMPTY corpus is null, and the model must
       // stay defined (smoothing handles the rest of the degenerate cases).
@@ -1444,9 +1433,8 @@ object TextAnalytics {
     * so it is persisted (the harness clears the cache per query). */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val terms = docTokensText(docs)
-      .select(col("doc_id"), explode(col("toks")).as("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val terms = hold(docTokensText(docs)
+      .select(col("doc_id"), explode(col("toks")).as("word")))
     val vocab = terms.groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("word")).limit(VocabSize)
       .select(col("word"), lit(1L).as("in_v"))
@@ -1540,12 +1528,10 @@ object TextAnalytics {
     // guide §1.2-step-1 double-pass this family's tf/df kit already
     // avoids), and V stays IN-PLAN as a one-row broadcast instead of a
     // sequential driver action — same arithmetic, one job.
-    val toks = docTokensText(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tf = toks
+    val toks = hold(docTokensText(docs))
+    val tf = hold(toks
       .select(col("doc_id"), explode(wordNgrams(col("toks"), 2)).as("bigram"))
-      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("tf")))
     val biCounts = tf.groupBy("bigram").agg(sum("tf").as("c_bi"))
       .withColumn("hist", substring_index(col("bigram"), " ", 1))
     val histCounts = biCounts.groupBy("hist").agg(sum("c_bi").as("c_hist"))
@@ -1725,8 +1711,7 @@ object TextAnalytics {
   def phrasesDf(docs: DataFrame): DataFrame = {
     // ONE tokenize pass feeds both count branches (r17; the unigram and
     // bigram aggregates each re-tokenized the corpus — guide §1.2 step 1).
-    val toks = docTokensText(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = hold(docTokensText(docs))
     val uni = toks
       .select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))

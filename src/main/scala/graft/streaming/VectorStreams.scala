@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Fns._
+import graft.functions.Caching.{drop, hold}
 import graft.operators.Similarity
 
 /** Streaming twins for the vector/ANN family: the trained IVF-PQ index
@@ -65,7 +66,7 @@ object VectorStreams {
       Similarity.ivfPqTrainedModel(spark, staticDir)
     // Batch-side training frames are not needed for serving — release now
     // (the artifacts live on as literals).
-    Seq(full, nv, af, rsubs).foreach(_.unpersist(false))
+    drop(full, nv, af, rsubs)
     ivfPqEncodeColumns(embeddingStream(spark, path, maxFilesPerTrigger),
       cents, cb)
   }
@@ -151,10 +152,9 @@ object VectorStreams {
     // scan+projection runs once, exactly as the batch knnGraph persists
     // its keys. The cache lives for the stream's lifetime (it IS the
     // serving table); the stream's owner releases it at stream stop.
-    val allKeys = Similarity.bandedKeysCarry(corpus, bands, rows)
+    val allKeys = hold(Similarity.bandedKeysCarry(corpus, bands, rows)
       .select(col("band_idx"), col("band_key"), col("vec_id").as("dst"),
-        col("v").as("dv"), col("nrm").as("dn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("v").as("dv"), col("nrm").as("dn")))
     // Same celebrity-bucket occupancy cap as the batch knnGraph: buckets
     // holding > bucketCap corpus vectors are dropped from the probe table,
     // so an arriving vector can never fan out quadratically into a dense

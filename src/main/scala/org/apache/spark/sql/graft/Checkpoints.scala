@@ -43,12 +43,17 @@ final case class PlanReads(caches: List[AnyRef], rdds: Set[Int]) {
 object PlanReads extends AdaptiveSparkPlanHelper {
 
   /** `df`'s own cache when it is persisted, else its checkpoint RDDs. */
-  def of(df: DataFrame): PlanReads =
-    df.sparkSession.sharedState.cacheManager.lookupCachedData(df) match {
-      case Some(cd) => PlanReads(List(cd.cachedRepresentation.cacheBuilder), Set.empty[Int])
-      case None => PlanReads(Nil,
-        df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet)
-    }
+  def of(df: DataFrame): PlanReads = cacheEntry(df) match {
+    case Some(b) => PlanReads(List(b), Set.empty[Int])
+    case None => PlanReads(Nil,
+      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet)
+  }
+
+  /** The cache builder of the session's current cache entry for `df`'s
+    * plan, if it is persisted. */
+  def cacheEntry(df: DataFrame): Option[AnyRef] =
+    df.sparkSession.sharedState.cacheManager.lookupCachedData(df)
+      .map(_.cachedRepresentation.cacheBuilder)
 
   /** Walk `plan` and, through each cache it reads, the physical plan that
     * fills that cache — only while the cache is not yet filled, unless

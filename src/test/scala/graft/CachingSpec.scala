@@ -1,15 +1,21 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graft.PlanReads
 import org.apache.spark.storage.StorageLevel
 import graft.functions.Caching
 
-/** Release discipline: operators that persist or checkpoint intermediates
-  * hand them to [[Caching.releaseAfterAction]], which frees each one at
-  * once when the result never reads it, else after the first completed
-  * action that reads it — so a long-lived session does not accumulate
-  * every query's cached blocks (the round-7 advisory). The listener fires
-  * on the async listener bus, so assertions poll for the level change. */
+/** Release discipline: operators cache frames only through
+  * [[Caching.hold]], which counts owners per cache entry, and hand them to
+  * [[Caching.releaseAfterAction]], which frees each one at once when the
+  * result never reads it, else after the first completed action that
+  * reads all the frames the result reads — so a long-lived session does
+  * not accumulate every query's
+  * cached blocks (the round-7 advisory), and a nested build holding the
+  * same plan cannot free its caller's frame. The listener fires on the
+  * async listener bus, so assertions poll for the level change. */
 class CachingSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
@@ -27,7 +33,7 @@ class CachingSpec extends AnyFunSuite {
       try r.unpersist(blocking = true) catch { case _: Throwable => () })
   }
 
-  private def awaitReleased(df: org.apache.spark.sql.DataFrame): Boolean = {
+  private def awaitReleased(df: DataFrame): Boolean = {
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
     while (df.storageLevel != StorageLevel.NONE && System.nanoTime() < deadline)
       Thread.sleep(50)
@@ -42,7 +48,7 @@ class CachingSpec extends AnyFunSuite {
   }
 
   test("releaseAfterAction: cached frame is unpersisted after the result's action") {
-    val cached = Seq(1L, 2L, 3L).toDF("x").persist(StorageLevel.MEMORY_AND_DISK)
+    val cached = Caching.hold(Seq(1L, 2L, 3L).toDF("x"))
     cached.count() // materialize
     assert(cached.storageLevel != StorageLevel.NONE)
     val result = Caching.releaseAfterAction(
@@ -130,8 +136,8 @@ class CachingSpec extends AnyFunSuite {
 
   test("releaseAfterAction: unread frames go at once; another thread's action frees none") {
     drainForeignPersists()
-    val read = Seq(1L, 2L, 3L).toDF("x").persist(StorageLevel.MEMORY_AND_DISK)
-    val unread = Seq(7L).toDF("y").persist(StorageLevel.MEMORY_AND_DISK)
+    val read = Caching.hold(Seq(1L, 2L, 3L).toDF("x"))
+    val unread = Caching.hold(Seq(7L).toDF("y"))
     read.count(); unread.count()
     val result = Caching.releaseAfterAction(
       read.groupBy().sum("x").withColumnRenamed("sum(x)", "s"), read, unread)
@@ -183,5 +189,75 @@ class CachingSpec extends AnyFunSuite {
     def live = spark.sparkContext.getPersistentRDDs.size
     while (live > 0 && System.nanoTime() < deadline) Thread.sleep(50)
     assert(live === 0, s"$live persistent RDDs survived the terminal action")
+  }
+
+  test("hold/drop: owners of one plan keep its entry until the last drops") {
+    drainForeignPersists()
+    def plan(): DataFrame = spark.range(0, 1000).selectExpr("id * 3 AS y")
+    def cached(): Boolean = PlanReads.cacheEntry(plan()).nonEmpty
+    val main = Caching.hold(plan())
+    val other = graft.functions.Par.async(Caching.hold(plan()))()
+    assert(main.count() === 1000L)
+    assert(PlanReads.cacheEntry(main).get eq PlanReads.cacheEntry(other).get,
+      "two holds of one plan did not share its cache entry")
+    Caching.drop(main)
+    assert(cached(), "dropping one owner freed the entry under the other")
+    Caching.drop(main)
+    assert(cached(), "dropping the same instance twice counted it twice")
+    Caching.drop(other)
+    assert(!cached(), "the last owner's drop left the entry cached")
+    // An owner from before clearCache() is stale: dropping it must not
+    // free the fresh entry a later hold of the same plan made.
+    val stale = Caching.hold(plan())
+    spark.catalog.clearCache()
+    val fresh = Caching.hold(plan())
+    Caching.drop(stale, main)
+    assert(cached(), "a stale owner freed the fresh entry")
+    Caching.drop(fresh)
+    assert(!cached(), "the fresh owner's drop left the entry cached")
+  }
+
+  test("releaseAfterAction: another owner's action on a shared entry frees nothing") {
+    drainForeignPersists()
+    def plan(): DataFrame = spark.range(0, 1000).selectExpr("id * 5 AS y")
+    val caller = Caching.hold(plan())
+    val shared = Caching.hold(plan())
+    val own = Caching.hold(shared.selectExpr("y + 1 AS z"))
+    val result = Caching.releaseAfterAction(own.crossJoin(shared.limit(1)), shared, own)
+    assert(caller.count() === 1000L) // reads the shared entry only
+    Thread.sleep(500) // give the listener bus time to (wrongly) fire
+    assert(own.storageLevel != StorageLevel.NONE,
+      "an action on the shared entry freed the result's own frame")
+    assert(result.count() === 1000L)
+    assert(awaitReleased(own), "the result's own action left its frame cached")
+    assert(caller.storageLevel != StorageLevel.NONE,
+      "the result's release freed the entry its caller still holds")
+    Caching.drop(caller)
+  }
+
+  test("cold evalNavInsert keeps its corpus cached through the nested builds") {
+    drainForeignPersists()
+    // An empty products root makes the navgraph (main thread) and navdelta
+    // (Par.async) builds run cold; both hold the same corpus plan as the
+    // eval and release it after their own writes.
+    val root = java.nio.file.Files.createTempDirectory("graft-acroot").toFile
+    spark.conf.set("spark.graft.products.dir", root.getAbsolutePath)
+    val t0 = System.nanoTime()
+    try {
+      val result = operators.Similarity.evalNavInsert(spark, TestSpark.sf)
+      Thread.sleep(500) // let the listener bus drain the builds' releases
+      assert(PlanReads.cacheEntry(operators.Similarity.corpus(spark, TestSpark.sf)).nonEmpty,
+        "a nested build's release uncached the eval's corpus")
+      val caches = result.queryExecution.withCachedData
+        .collectWithSubqueries { case r: InMemoryRelation => r.cacheBuilder }.distinct
+      assert(caches.size === 2, "the result should read the corpus and edges caches")
+      assert(result.collect().length === 2)
+      assert(awaitNone(spark.sparkContext.getPersistentRDDs.size),
+        "persistent RDDs survived the eval's own action")
+    } finally {
+      spark.conf.unset("spark.graft.products.dir")
+      graft.sources.ArtifactCache.rmTree(root.getAbsolutePath)
+      info(f"cold evalNavInsert probe: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    }
   }
 }

@@ -29,4 +29,27 @@ class ContractSpec extends AnyFunSuite {
       assert(sql.trim.nonEmpty && sql.length > 40, s"$name oracle looks vestigial")
     }
   }
+
+  test("only Caching persists or unpersists a frame under src/main/scala") {
+    // Caching.hold/drop count owners per cache entry; a direct persist or
+    // unpersist elsewhere would bypass the count. Checkpoints.scala's
+    // unpersist is on a checkpoint's RDD, not on a Dataset.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val allowed = Set("graft/functions/Caching.scala",
+      "org/apache/spark/sql/graft/Checkpoints.scala")
+    val direct = """\.persist\(|\.cache\(\)|\.unpersist\(""".r
+    val files = java.nio.file.Files.walk(root)
+    val hits = try {
+      import scala.jdk.CollectionConverters._
+      files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString -> p)
+        .filterNot { case (rel, _) => allowed(rel) }
+        .flatMap { case (rel, p) =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if direct.findFirstIn(line).nonEmpty => s"$rel:${i + 1}: ${line.trim}"
+          }
+        }.toList
+    } finally files.close()
+    assert(hits.isEmpty, s"direct cache calls outside Caching:\n${hits.mkString("\n")}")
+  }
 }

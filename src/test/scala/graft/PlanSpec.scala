@@ -578,7 +578,7 @@ class PlanSpec extends AnyFunSuite {
         .localCheckpoint(true)
       val (ccNext, ccProp) = graft.operators.Dedup.ccRound(ccEdges, labels0)
       check("components round", ccNext, Set("a", "b"), minClean = 1)
-      ccProp.unpersist(false)
+      graft.functions.Caching.drop(ccProp)
 
       // k-core: the peeling round's FIRST join is keyed on u over hash(u).
       val und = graft.operators.Graph.kcoreEdgeCache(abEdges)

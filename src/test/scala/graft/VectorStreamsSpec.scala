@@ -329,7 +329,7 @@ class VectorStreamsSpec extends AnyFunSuite {
     // stream harness.
     val (cents, cb, full, nv, af, rsubs) =
       Similarity.ivfPqTrainedModel(spark, TestSpark.sf)
-    Seq(full, nv, af, rsubs).foreach(_.unpersist(false))
+    graft.functions.Caching.drop(full, nv, af, rsubs)
     val viaColumns = VectorStreams.ivfPqEncodeColumns(
         graft.sources.Tables.embeddings(spark, TestSpark.sf), cents, cb)
       .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long, Long)]
