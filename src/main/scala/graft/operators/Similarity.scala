@@ -1772,17 +1772,24 @@ object Similarity {
       .withColumn("nrm", l2Norm(col("v"))))
     val rowsN = if (rows > 0) rows else bandRowsFor(c.count())
     val keys = hold(bandedKeys(c.select("vec_id", "v"), bands, rowsN))
-    // The bucket registry is bands × 2^rows rows — small enough that
-    // Catalyst auto-broadcasts the eligibility side at these knobs, and a
-    // size-based shuffle join takes over if `rows` ever grows past the
-    // broadcast threshold (no forced broadcast() here, deliberately).
+    graft.functions.Caching.releaseAfterAction(
+      knnGraphFromCapped(c, cappedBuckets(keys, bucketCap), k), c, keys)
+  }
+
+  /** THE celebrity-bucket cap: the `keys` rows (band_idx, band_key, ...)
+    * whose bucket holds at most `cap` rows. Shared by the knngraph,
+    * navgraph and navdelta builds and the streaming kNN probe, so every
+    * banded candidate chain drops the same buckets. The bucket registry
+    * is bands × 2^rows rows — small enough that Catalyst auto-broadcasts
+    * the eligibility side at these knobs, and a size-based shuffle join
+    * takes over if `rows` ever grows past the broadcast threshold (no
+    * forced broadcast() here, deliberately). */
+  private[graft] def cappedBuckets(keys: DataFrame, cap: Long): DataFrame = {
     val eligible = keys.groupBy("band_idx", "band_key")
       .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") <= bucketCap)
+      .filter(col("occ") <= cap)
       .select("band_idx", "band_key")
-    val capped = keys.join(eligible, Seq("band_idx", "band_key"))
-    graft.functions.Caching.releaseAfterAction(
-      knnGraphFromCapped(c, capped, k), c, keys)
+    keys.join(eligible, Seq("band_idx", "band_key"))
   }
 
   /** The kNN edge build DOWNSTREAM of the capped band-key chain — split
@@ -2279,11 +2286,7 @@ object Similarity {
     // pinned by the source-file identity already in the product key).
     val rowsN = bandRowsFor(c.count())
     val keys = hold(bandedKeys(c.select("vec_id", "v"), 8, rowsN))
-    val eligible = keys.groupBy("band_idx", "band_key")
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") <= KnnBucketCap)
-      .select("band_idx", "band_key")
-    val ck = keys.join(eligible, Seq("band_idx", "band_key"))
+    val ck = cappedBuckets(keys, KnnBucketCap)
     // The knngraph product this build consumes runs the IDENTICAL
     // corpus/keys/eligibility chain — on a COLD run its builder reuses
     // the frames persisted above (one corpus scan + one projection pass
@@ -2456,11 +2459,7 @@ object Similarity {
     * action. */
   private def navInsertDeltaOver(c: DataFrame, keys: DataFrame,
       cut: Long, pEnd: Long): (DataFrame, Seq[DataFrame]) = {
-    val eligible = keys.groupBy("band_idx", "band_key")
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") <= KnnBucketCap)
-      .select("band_idx", "band_key")
-    val ck = keys.join(eligible, Seq("band_idx", "band_key"))
+    val ck = cappedBuckets(keys, KnnBucketCap)
     val ckNew = ck.filter(col("vec_id") >= cut)
     def scored(cand: DataFrame): DataFrame = cand
       .join(c.select(col("vec_id").as("src"), col("v").as("sv"),
@@ -2558,10 +2557,11 @@ object Similarity {
     * the post-insert graph the delta's knn + mirror edges make them
     * searchable and reachable, and recall returns to the full-build
     * level. One row per graph state: (graph_state, hits, n_brute,
-    * recall_e4, n_edges). Same walk (shared [[graphWalk]] loop, fixed
-    * entry, [[GraphRounds]] rounds, beam [[GraphBeam]]) — the ONLY
-    * difference between the rows is the edge set, so the recall delta
-    * is attributable to the insert alone. */
+    * recall_e4, n_edges). Both states walk as one gs-keyed
+    * [[graphWalk]] (fixed entry, [[GraphRounds]] rounds, beam
+    * [[GraphBeam]]), each along its own edges — the ONLY difference
+    * between the rows is the edge set, so the recall delta is
+    * attributable to the insert alone. */
   def evalNavInsert(s: SparkSession, d: String,
       batch: Long = NavInsertBatch, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
@@ -2580,64 +2580,21 @@ object Similarity {
     // two stored-table scans + a distinct — no banded recompute in-plan.
     val post = base.unionAll(navDeltaJoin())
       .distinct()
-    // ONE walk over BOTH graphs: the beam state is keyed by
-    // (graph_state, qid), so the two graphs' walks share every round's
-    // scheduling and checkpoint instead of paying 2 × GraphRounds
-    // sequential jobs (measured: halves the eval's wall clock). Each
-    // keyed slice is EXACTLY the per-graph walk — partitioned windows
-    // and the gs-keyed edge join cannot leak candidates across graphs.
     val edges = hold(base.withColumn("gs", lit("base"))
       .unionAll(post.withColumn("gs", lit("post_insert"))))
     val gsLabels = Seq("base", "post_insert").toDF("gs")
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // NO beam-side broadcast hints here, unlike [[graphWalk]]: measured
-    // A/B (r16, bench protocol, 2×2 interleave) put the hinted form at
-    // 5.0-5.9 s vs 3.5-3.7 s unhinted — the gs-keyed walk runs TWO graph
-    // states through every round, and forcing a driver-collected
-    // broadcast build per round serializes work AQE otherwise overlaps.
-    // The per-round join keys stay bounded either way (beam × |gs|).
-    def score(cand: DataFrame): DataFrame = cand
-      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("gs"), col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("gs", "qid").orderBy(desc("sim_e4"), asc("cid"))
-    var beam = score(q.select(col("qid")).crossJoin(broadcast(gsLabels))
-        .withColumn("cid", lit(GraphEntry)))
-      .localCheckpoint(true)
-    val states = scala.collection.mutable.ArrayBuffer(beam)
-    for (_ <- 1 to GraphRounds) {
-      val nbrs = beam.select(col("gs"), col("qid"), col("cid").as("src"))
-        .join(edges, Seq("gs", "src"))
-        .select(col("gs"), col("qid"), col("dst").as("cid"))
-      val cand = beam.select("gs", "qid", "cid").unionAll(nbrs).distinct()
-      beam = score(cand)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= GraphBeam)
-        .select("gs", "qid", "cid", "sim_e4")
-        .localCheckpoint(true)
-      states += beam
+    val walk = graphWalk(s, d, nQueries, lit(GraphBeam), GraphRounds,
+        key = Seq("gs"), step = Some(_.join(edges, Seq("gs", "src"))),
+        held = Some(c)) {
+      fixedEntry(_, _).crossJoin(broadcast(gsLabels))
     }
-    val sel = beam
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("gs"), col("qid"), col("cid"), lit(1L).as("hit"))
-    val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
-    val hits = brute.crossJoin(broadcast(gsLabels))
-      .join(sel, Seq("gs", "qid", "cid"), "left")
-      .groupBy("gs")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-        count(lit(1)).as("n_brute"))
     val edgeCounts = edges.groupBy("gs").agg(count(lit(1)).as("n_edges"))
     graft.functions.Caching.releaseAfterAction(
-      hits.join(edgeCounts, "gs")
+      stateRecall(s, d, walk, gsLabels, nQueries, k).join(edgeCounts, "gs")
         .select(col("gs").as("graph_state"), col("hits"), col("n_brute"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"),
-          col("n_edges"))
+          col("recall_e4"), col("n_edges"))
         .orderBy("graph_state"),
-      (Seq(c, edges) ++ states): _*)
+      (edges +: (walk.caches ++ walk.states)): _*)
   }
 
   /** Batch count of the SEQUENTIAL insert eval. */
@@ -2659,8 +2616,7 @@ object Similarity {
     * batch), so max_out_deg(b) ≤ max_out_deg(b−1) + 32 — pinned in
     * NavInsertSeqSpec, with recall non-degrading as batches land.
     *
-    * One (graph_state, qid)-keyed walk serves every row (the
-    * [[evalNavInsert]] recipe at B+1 states); each delta is an EAGER
+    * One gs-keyed [[graphWalk]] serves all B+1 states; each delta is an EAGER
     * localCheckpoint so the cumulative unions scan materialized edges
     * instead of re-running the banded delta once per containing state.
     * The FINAL batch's prefix is the full corpus, which makes its delta
@@ -2736,44 +2692,12 @@ object Similarity {
       .reduce(_ unionAll _)
       .groupBy("src", "dst").agg(min("fb").as("fb")))
     val gsLabels = (0L to batches.toLong).toDF("gs")
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // NO beam-side broadcast hints in the multi-state walk — same
-    // measured A/B as [[evalNavInsert]]: per-round broadcast builds over
-    // |gs| graph states serialize work AQE otherwise overlaps.
-    def score(cand: DataFrame): DataFrame = cand
-      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("gs"), col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("gs", "qid").orderBy(desc("sim_e4"), asc("cid"))
-    var beam = score(q.select(col("qid")).crossJoin(broadcast(gsLabels))
-        .withColumn("cid", lit(GraphEntry)))
-      .localCheckpoint(true)
-    val walkStates = scala.collection.mutable.ArrayBuffer(beam)
-    for (_ <- 1 to GraphRounds) {
-      val nbrs = beam.select(col("gs"), col("qid"), col("cid").as("src"))
-        .join(edges, Seq("src"))
-        .filter(col("fb") <= col("gs"))
-        .select(col("gs"), col("qid"), col("dst").as("cid"))
-      val cand = beam.select("gs", "qid", "cid").unionAll(nbrs).distinct()
-      beam = score(cand)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= GraphBeam)
-        .select("gs", "qid", "cid", "sim_e4")
-        .localCheckpoint(true)
-      walkStates += beam
+    val walk = graphWalk(s, d, nQueries, lit(GraphBeam), GraphRounds,
+        key = Seq("gs"),
+        step = Some(_.join(edges, Seq("src")).filter(col("fb") <= col("gs"))),
+        held = Some(c)) {
+      fixedEntry(_, _).crossJoin(broadcast(gsLabels))
     }
-    val sel = beam
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("gs"), col("qid"), col("cid"), lit(1L).as("hit"))
-    val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
-    val hits = brute.crossJoin(broadcast(gsLabels))
-      .join(sel, Seq("gs", "qid", "cid"), "left")
-      .groupBy("gs")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-        count(lit(1)).as("n_brute"))
     // Per-state degree stats from the tagged frame: state gs's edge set
     // is {fb <= gs}, so one small cross join against the B+1 labels
     // reproduces the old per-state-copy aggregate exactly.
@@ -2787,14 +2711,12 @@ object Similarity {
         round(col("n_edges") * lit(10000.0) / col("n_src")).cast("long")
           .as("mean_deg_e4"))
     graft.functions.Caching.releaseAfterAction(
-      hits.join(degs, "gs")
+      stateRecall(s, d, walk, gsLabels, nQueries, k).join(degs, "gs")
         .select(col("gs").as("batch"), col("n_edges"), col("hits"),
-          col("n_brute"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"),
-          col("max_out_deg"), col("mean_deg_e4"))
+          col("n_brute"), col("recall_e4"), col("max_out_deg"),
+          col("mean_deg_e4"))
         .orderBy("batch"),
-      (Seq(c, edges) ++ walkStates ++ inPlanDeltas.toSeq): _*)
+      (edges +: (walk.caches ++ walk.states ++ inPlanDeltas.toSeq)): _*)
   }
 
   /** NAVIGABILITY AUDIT (`eval_graph_connectivity`) — the structural
@@ -2877,9 +2799,7 @@ object Similarity {
     * sim_knn_graph plus the shared navigable-edge CTEs. */
   def graphTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       beam: Int = GraphBeam, rounds: Int = GraphRounds): DataFrame =
-    graphSearchFrom(s, d, nQueries, k, beam, rounds) { (q, _) =>
-      q.select(col("qid")).withColumn("cid", lit(GraphEntry))
-    }
+    graphSearchFrom(s, d, nQueries, k, beam, rounds)(fixedEntry)
 
   /** Deterministic tombstone set for the index-deletion path: vec_ids
     * ≡ [[NavDeleteRes]] (mod [[NavDeleteMod]]) play deleted/withdrawn
@@ -2917,14 +2837,10 @@ object Similarity {
   def navDeleteTopK(s: SparkSession, d: String, nQueries: Int = 10,
       k: Int = 5, beam: Int = GraphBeam,
       rounds: Int = GraphRounds): DataFrame = {
-    val walk = graphWalk(s, d, nQueries, beam, rounds) { (q, _) =>
-      q.select(col("qid")).withColumn("cid", lit(GraphEntry))
-    }
+    val walk = graphWalk(s, d, nQueries, lit(beam), rounds)(fixedEntry)
     graft.functions.Caching.releaseAfterAction(
-      walk.states.last
-        .filter(col("cid") % NavDeleteMod =!= NavDeleteRes)
-        .withColumn("rn", row_number().over(walk.w).cast("long"))
-        .filter(col("rn") <= k)
+      walk.topK(walk.states.last
+          .filter(col("cid") % NavDeleteMod =!= NavDeleteRes), k)
         .orderBy("qid", "rn"),
       (walk.caches ++ walk.states): _*)
   }
@@ -3055,22 +2971,8 @@ object Similarity {
     * count at plan time) — the r16 fix for the fixed-budget recall
     * cliff; explicit values override (sweeps, evals). */
   def graphLayeredTopK(s: SparkSession, d: String, nQueries: Int = 10,
-      k: Int = 5, beam: Int = 0, rounds: Int = 0): DataFrame = {
-    val n = if (beam > 0 && rounds > 0) 0L else corpusCount(s, d)
-    graphSearchFrom(s, d, nQueries, k,
-      if (beam > 0) beam else graphBeamFor(n),
-      if (rounds > 0) rounds else layeredRoundsFor(n)) { (q, c) =>
-      val coarse = c.filter(col("vec_id") % CoarseMod === 0)
-        .select(col("vec_id").as("cc"), col("v").as("cv"), col("nrm").as("cn"))
-      val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
-      q.crossJoin(broadcast(coarse))
-        .select(col("qid"), col("cc"),
-          e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-        .withColumn("rn", row_number().over(wEnt))
-        .filter(col("rn") <= LayeredEntryK)
-        .select(col("qid"), col("cc").as("cid"))
-    }
-  }
+      k: Int = 5, beam: Int = 0, rounds: Int = 0): DataFrame =
+    layeredSearchFrom(s, d, nQueries, k, beam, rounds)(layeredExactEntry)
 
   /** LAYERED search with a BANDED entry (`sim_graph_layered_banded`) —
     * the 100 TB serving form of [[graphLayeredTopK]]: that operator's
@@ -3095,39 +2997,59 @@ object Similarity {
     * so it is exactly the one that must survive corpus growth. */
   def graphLayeredBandedTopK(s: SparkSession, d: String,
       nQueries: Int = 10, k: Int = 5, beam: Int = 0,
-      rounds: Int = 0): DataFrame = {
-    val n = if (beam > 0 && rounds > 0) 0L else corpusCount(s, d)
-    graphSearchFrom(s, d, nQueries, k,
-      if (beam > 0) beam else graphBeamFor(n),
-      if (rounds > 0) rounds else layeredRoundsFor(n)) { (q, c) =>
-      val coarse = c.filter(col("vec_id") % CoarseMod === 0)
-      // Entry geometry: the band rule over the COARSE layer, so the
-      // per-query entry candidate set stays occupancy-bounded at any n
-      // (4 at every contract corpus — oracles unchanged).
-      val eRows = entryBandRowsFor(coarse.count())
-      val ck = bandedKeys(coarse.select("vec_id", "v"), 8, eRows)
-        .select(col("vec_id").as("cc"), col("band_idx"), col("band_key"))
-      val qk = bandedKeys(
-        q.select(col("qid").as("vec_id"), col("qv").as("v")), 8, eRows)
-        .select(col("vec_id").as("qid"), col("band_idx"), col("band_key"))
-      val cand = ck.join(broadcast(qk), Seq("band_idx", "band_key"))
-        .filter(col("qid") =!= col("cc"))
-        .select("qid", "cc").distinct()
-      val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
-      val banded = cand
-        .join(coarse.select(col("vec_id").as("cc"), col("v").as("cv"),
-          col("nrm").as("cn")), "cc")
-        .join(broadcast(q), "qid")
-        .select(col("qid"), col("cc"),
-          e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-        .withColumn("rn", row_number().over(wEnt))
-        .filter(col("rn") <= LayeredEntryK)
-        .select(col("qid"), col("cc").as("cid"))
-      val fallback = q.select(col("qid"))
-        .join(banded.select(col("qid")).distinct(), Seq("qid"), "left_anti")
-        .withColumn("cid", lit(GraphEntry))
-      banded.unionAll(fallback)
-    }
+      rounds: Int = 0): DataFrame =
+    layeredSearchFrom(s, d, nQueries, k, beam, rounds)(layeredBandedEntry)
+
+  /** The fixed entry rule ([[graphTopK]]): every query starts at
+    * [[GraphEntry]]. Entry rules map (queries, corpus) to (qid, cid). */
+  private def fixedEntry(q: DataFrame, c: DataFrame): DataFrame =
+    q.select(col("qid")).withColumn("cid", lit(GraphEntry))
+
+  /** The coarse layer an entry rule picks from: vec_id ≡ 0 mod
+    * [[CoarseMod]], columns (cc, cv, cn). */
+  private def coarseLayer(c: DataFrame): DataFrame =
+    c.filter(col("vec_id") % CoarseMod === 0)
+      .select(col("vec_id").as("cc"), col("v").as("cv"), col("nrm").as("cn"))
+
+  /** The best [[LayeredEntryK]] coarse nodes per query among candidate
+    * (query, coarse node) pairs, by e4 cosine with id ties. */
+  private def bestEntries(pairs: DataFrame): DataFrame = {
+    val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
+    pairs.select(col("qid"), col("cc"),
+        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
+      .withColumn("rn", row_number().over(wEnt))
+      .filter(col("rn") <= LayeredEntryK)
+      .select(col("qid"), col("cc").as("cid"))
+  }
+
+  /** The exact layered entry rule ([[graphLayeredTopK]]): an exact scan
+    * of the whole coarse layer per query. */
+  private def layeredExactEntry(q: DataFrame, c: DataFrame): DataFrame =
+    bestEntries(q.crossJoin(broadcast(coarseLayer(c))))
+
+  /** The banded layered entry rule ([[graphLayeredBandedTopK]]): the
+    * query's coarse bucket-mates under the band rule over the COARSE
+    * layer (so the per-query candidate set stays occupancy-bounded at any
+    * n; 4 rows at every contract corpus), falling back to [[GraphEntry]]
+    * when every band misses. */
+  private def layeredBandedEntry(q: DataFrame, c: DataFrame): DataFrame = {
+    val coarse = coarseLayer(c)
+    val eRows = entryBandRowsFor(coarse.count())
+    val ck = bandedKeys(coarse.select(col("cc").as("vec_id"), col("cv").as("v")),
+        8, eRows)
+      .select(col("vec_id").as("cc"), col("band_idx"), col("band_key"))
+    val qk = bandedKeys(q.select(col("qid").as("vec_id"), col("qv").as("v")),
+        8, eRows)
+      .select(col("vec_id").as("qid"), col("band_idx"), col("band_key"))
+    val banded = bestEntries(ck.join(broadcast(qk), Seq("band_idx", "band_key"))
+      .filter(col("qid") =!= col("cc"))
+      .select("qid", "cc").distinct()
+      .join(coarse, "cc")
+      .join(broadcast(q), "qid"))
+    val fallback = q.select(col("qid"))
+      .join(banded.select(col("qid")).distinct(), Seq("qid"), "left_anti")
+      .withColumn("cid", lit(GraphEntry))
+    banded.unionAll(fallback)
   }
 
   /** Third-layer stride: every [[CoarseMod]]²-th vector forms L2 — the
@@ -3188,11 +3110,8 @@ object Similarity {
     * stays declared as the measured baseline that proves it
     * (`bench/scaling_r16.json` fixture_64k). */
   def graphHierTopK(s: SparkSession, d: String, nQueries: Int = 10,
-      k: Int = 5, beam: Int = 0, rounds: Int = 0): DataFrame = {
-    val n = if (beam > 0 && rounds > 0) 0L else corpusCount(s, d)
-    graphSearchFrom(s, d, nQueries, k,
-      if (beam > 0) beam else graphBeamFor(n),
-      if (rounds > 0) rounds else layeredRoundsFor(n)) { (q, c) =>
+      k: Int = 5, beam: Int = 0, rounds: Int = 0): DataFrame =
+    layeredSearchFrom(s, d, nQueries, k, beam, rounds) { (q, c) =>
       val coarse = c.filter(col("vec_id") % CoarseMod === 0)
       val rc = hierCoarseRoundsFor(coarse.count())
       // L2 entry: exact argmax over the n/L2Mod top-layer nodes — the
@@ -3244,7 +3163,6 @@ object Similarity {
         .filter(col("rn") <= LayeredEntryK)
         .select("qid", "cid")
     }
-  }
 
   /** ENTRY-STRATEGY DECISION TABLE (`eval_graph_entry`) — the graph
     * tier's serving-config table, next to the round-budget sweep
@@ -3267,9 +3185,9 @@ object Similarity {
     * corpora the rule reproduces the fixed constants, so all three
     * share rounds-4/6 × beam-24 and the oracle is unchanged).
     *
-    * ONE walk serves all three rows: the beam state is keyed by
-    * (strategy, qid) — the [[evalNavInsert]] trick sideways — run to
-    * the MAX budget with a PER-STRATEGY beam width (a literal
+    * ONE [[graphWalk]] keyed by (strategy, qid) serves all three rows,
+    * each strategy entering by the same rule as its own query: it runs
+    * to the MAX budget with a PER-STRATEGY beam width (a literal
     * when/otherwise on the strategy column — resolved at plan time),
     * and each strategy's row reads the walk's state at its own round
     * prefix, so the table costs one keyed walk, not three.
@@ -3283,172 +3201,164 @@ object Similarity {
     val layeredBeam = if (beam > 0) beam else graphBeamFor(nCorpus)
     val layeredRounds =
       if (beam > 0) LayeredRounds else layeredRoundsFor(nCorpus)
-    val c = hold(corpus(s, d))
-    val edges = hold(navGraphShared(s, d).select(col("src"), col("dst")))
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val coarse = c.filter(col("vec_id") % CoarseMod === 0)
-      .select(col("vec_id").as("cc"), col("v").as("cv"), col("nrm").as("cn"))
-    val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
-    // fixed: the constant entry.
-    val fixedEnt = q.select(col("qid"))
-      .withColumn("cid", lit(GraphEntry))
-      .withColumn("st", lit("fixed"))
-    // layered_exact: graphLayeredTopK's entry rule.
-    val exactEnt = q.crossJoin(broadcast(coarse))
-      .select(col("qid"), col("cc"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-      .withColumn("rn", row_number().over(wEnt))
-      .filter(col("rn") <= LayeredEntryK)
-      .select(col("qid"), col("cc").as("cid"))
-      .withColumn("st", lit("layered_exact"))
-    // layered_banded: graphLayeredBandedTopK's entry rule (same coarse
-    // band geometry).
-    val eRows = entryBandRowsFor(coarse.count())
-    val ck = bandedKeys(coarse.select(col("cc").as("vec_id"), col("cv").as("v")),
-        8, eRows)
-      .select(col("vec_id").as("cc"), col("band_idx"), col("band_key"))
-    val qk = bandedKeys(q.select(col("qid").as("vec_id"), col("qv").as("v")),
-        8, eRows)
-      .select(col("vec_id").as("qid"), col("band_idx"), col("band_key"))
-    val bandedBest = ck.join(broadcast(qk), Seq("band_idx", "band_key"))
-      .filter(col("qid") =!= col("cc"))
-      .select("qid", "cc").distinct()
-      .join(coarse, "cc")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cc"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-      .withColumn("rn", row_number().over(wEnt))
-      .filter(col("rn") <= LayeredEntryK)
-      .select(col("qid"), col("cc").as("cid"))
-    val bandedEnt = bandedBest
-      .unionAll(q.select(col("qid"))
-        .join(bandedBest.select(col("qid")).distinct(), Seq("qid"),
-          "left_anti")
-        .withColumn("cid", lit(GraphEntry)))
-      .withColumn("st", lit("layered_banded"))
-    // ONE keyed walk to the max budget; each strategy reads its prefix.
-    // Bounded-side broadcasts, as in [[graphWalk]] (guide §3.1, §2.4).
-    def score(cand: DataFrame): DataFrame = broadcast(cand)
-      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("st"), col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("st", "qid").orderBy(desc("sim_e4"), asc("cid"))
-    val budgets = Map("fixed" -> GraphRounds,
-      "layered_exact" -> layeredRounds, "layered_banded" -> layeredRounds)
-    // Per-strategy beam width, a plan-time literal on the strategy key —
-    // one keyed walk still serves all three rows.
+    val strategies = Seq(("fixed", fixedEntry _, GraphRounds),
+      ("layered_exact", layeredExactEntry _, layeredRounds),
+      ("layered_banded", layeredBandedEntry _, layeredRounds))
     val beamOf = when(col("st") === "fixed", lit(fixedBeam))
       .otherwise(lit(layeredBeam))
-    var beamDf = score(fixedEnt.unionAll(exactEnt).unionAll(bandedEnt)
-      .select("st", "qid", "cid")).localCheckpoint(true)
-    val states = scala.collection.mutable.ArrayBuffer(beamDf)
-    for (_ <- 1 to budgets.values.max) {
-      val nbrs = broadcast(beamDf.select(col("st"), col("qid"), col("cid").as("src")))
-        .join(edges, "src")
-        .select(col("st"), col("qid"), col("dst").as("cid"))
-      val cand = beamDf.select("st", "qid", "cid").unionAll(nbrs).distinct()
-      beamDf = score(cand)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beamOf)
-        .select("st", "qid", "cid", "sim_e4")
-        .localCheckpoint(true)
-      states += beamDf
+    val walk = graphWalk(s, d, nQueries, beamOf, strategies.map(_._3).max,
+        key = Seq("st")) { (q, c) =>
+      strategies.map { case (st, entry, _) =>
+        entry(q, c).withColumn("st", lit(st)) }.reduce(_ unionAll _)
     }
     val brute = hold(bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid")))
-    val rows = budgets.toSeq.sortBy(_._1).map { case (st, r) =>
-      val sel = states(r).filter(col("st") === st)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col("cid"), lit(1L).as("hit"))
-      brute.join(broadcast(sel), Seq("qid", "cid"), "left")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-          count(lit(1)).as("n_brute"))
+    val rows = strategies.sortBy(_._1).map { case (st, _, r) =>
+      recallOf(brute, walk.topK(walk.states(r).filter(col("st") === st), k))
         .select(lit(st).as("strategy"), lit(r.toLong).as("rounds"),
-          col("hits"), col("n_brute"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"))
+          col("hits"), col("n_brute"), col("recall_e4"))
     }
     // The rounds no strategy reads as its prefix go at once; the budget
     // states stay alive until the consumer's terminal action.
     graft.functions.Caching.releaseAfterAction(
       rows.reduce(_ unionAll _).orderBy("strategy"),
-      (Seq(c, edges, brute) ++ states): _*)
+      (walk.caches ++ walk.states :+ brute): _*)
   }
 
   /** The walk's full trace: per-round beam states (index 0 = the scored
     * entries), the per-round candidate frames (what each round scored),
     * the ranking window, and the persisted frames the consumer releases
     * after its terminal action. ONE loop produces every graph-tier
-    * result — the search tail, the layered variant, and the budget
-    * sweep all read this trace, so "a budget row is a prefix of the
-    * same walk" is true by construction, not by keeping copies in sync. */
-  private case class GraphWalkTrace(
+    * result — the searches, the tombstone filter, the entry and budget
+    * tables and the insert evals all read this trace, so "a budget row
+    * is a prefix of the same walk" is true by construction, not by
+    * keeping copies in sync. */
+  private[graft] case class GraphWalkTrace(
       states: IndexedSeq[DataFrame],
       cands: IndexedSeq[DataFrame],
       w: org.apache.spark.sql.expressions.WindowSpec,
-      caches: Seq[DataFrame])
+      caches: Seq[DataFrame]) {
+    /** A beam state's top `k` per walk key and query, ranked `rn` from 1. */
+    def topK(state: DataFrame, k: Int): DataFrame = state
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= k)
+  }
 
-  /** The shared beam loop: entries(q, corpus) → fixed-round best-first
-    * walk over the navigable-graph product ([[navGraphShared]]). Each
-    * round reads the previous beam TWICE (expansion + union), so the
-    * beam is checkpointed per round — without it the declarative plan
-    * doubles per round (measured: rounds ≥ 8 ran minutes instead of
-    * seconds). Same O(1)-plan recipe as the k-core/LPA loops. Every
-    * per-round state is returned ALIVE; callers pass them all to
-    * releaseAfterAction, which frees at once the ones their result does
-    * not read. */
-  private def graphWalk(s: SparkSession, d: String, nQueries: Int,
-      beam: Int, rounds: Int)(
+  /** THE beam loop of the graph tier: entries(q, corpus) → fixed-round
+    * best-first walk. Each round reads the previous beam TWICE
+    * (expansion + union), so the beam is checkpointed per round —
+    * without it the declarative plan doubles per round (measured: rounds
+    * ≥ 8 ran minutes instead of seconds). Same O(1)-plan recipe as the
+    * k-core/LPA loops. Every per-round state is returned ALIVE; callers
+    * pass them all to releaseAfterAction, which frees at once the ones
+    * their result does not read.
+    *
+    * `key` names walk-state columns beside `qid` (a graph state, an
+    * entry strategy): the ranking window and every join carry them, so
+    * each key value walks exactly as it would alone while all of them
+    * share each round's jobs and checkpoint. `beam` may be a per-key
+    * column. `step` joins a beam frame (key, qid, src) to its out-edges
+    * (any frame with key, qid and dst); the default walks the
+    * navigable-graph product ([[navGraphShared]]), shared by every state.
+    * `held` is the caller's held corpus when it already holds one (each
+    * fresh read of the table costs a schema job); the trace's caches
+    * include it either way.
+    *
+    * Only that shared edge set hints the beam and candidate sides as
+    * broadcasts: they are BOUNDED (nQueries × beam × out-degree rows per
+    * key) while edges and the corpus scale with n, and the checkpointed
+    * beam's LogicalRDD carries no usable size estimate, so without the
+    * hint the planner shuffles the corpus-sized side every round (guide
+    * §3.1, §2.4). A per-state `step` runs unhinted: measured A/B (r16,
+    * bench protocol, 2×2 interleave) put the hinted two-state insert
+    * eval at 5.0-5.9 s vs 3.5-3.7 s unhinted — forcing a
+    * driver-collected broadcast build per round over several graph
+    * states serializes work AQE otherwise overlaps. */
+  private[graft] def graphWalk(s: SparkSession, d: String, nQueries: Int,
+      beam: Column, rounds: Int, key: Seq[String] = Nil,
+      step: Option[DataFrame => DataFrame] = None,
+      held: Option[DataFrame] = None)(
       entries: (DataFrame, DataFrame) => DataFrame): GraphWalkTrace = {
-    val c = hold(corpus(s, d))
-    val edges = hold(navGraphShared(s, d).select(col("src"), col("dst")))
+    val c = held.getOrElse(hold(corpus(s, d)))
+    val edges = if (step.isDefined) None
+      else Some(hold(navGraphShared(s, d).select(col("src"), col("dst"))))
+    val hint: DataFrame => DataFrame = if (edges.isDefined) broadcast(_) else identity
+    val reach = step.getOrElse((b: DataFrame) => hint(b).join(edges.get, "src"))
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // The beam/candidate side of every per-round join is BOUNDED
-    // (nQueries × beam × out-degree rows — corpus-size-independent),
-    // while edges and the corpus scale with n. The explicit broadcast
-    // pins the build side: the checkpointed beam's LogicalRDD carries no
-    // usable size estimate, so without the hint the planner shuffles the
-    // corpus-sized side every round (guide §3.1, §2.4).
-    def scoreOf(cands: DataFrame): DataFrame = broadcast(cands)
+    val ids = (key :+ "qid").map(col)
+    def scoreOf(cands: DataFrame): DataFrame = hint(cands)
       .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
       .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
-    var beamDf = scoreOf(entries(q, c).select("qid", "cid"))
+      .select(ids ++ Seq(col("cid"),
+        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4")): _*)
+    val w = Window.partitionBy(ids: _*).orderBy(desc("sim_e4"), asc("cid"))
+    var beamDf = scoreOf(entries(q, c).select(ids :+ col("cid"): _*))
       .localCheckpoint(true)
     val states = scala.collection.mutable.ArrayBuffer(beamDf)
     val cands = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (_ <- 1 to rounds) {
-      val nbrs = broadcast(beamDf.select(col("qid"), col("cid").as("src")))
-        .join(edges, "src")
-        .select(col("qid"), col("dst").as("cid"))
-      val cand = beamDf.select("qid", "cid").unionAll(nbrs).distinct()
+      val nbrs = reach(beamDf.select(ids :+ col("cid").as("src"): _*))
+        .select(ids :+ col("dst").as("cid"): _*)
+      val cand = beamDf.select(ids :+ col("cid"): _*).unionAll(nbrs).distinct()
       cands += cand
       beamDf = scoreOf(cand)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= beam)
-        .select("qid", "cid", "sim_e4")
+        .select(ids ++ Seq(col("cid"), col("sim_e4")): _*)
         .localCheckpoint(true)
       states += beamDf
     }
-    GraphWalkTrace(states.toIndexedSeq, cands.toIndexedSeq, w, Seq(c, edges))
+    GraphWalkTrace(states.toIndexedSeq, cands.toIndexedSeq, w, c +: edges.toSeq)
   }
+
+  /** Recall tail of a keyed walk over graph states: the final beam's
+    * top-k per (gs, qid) against the brute top-k, one row per label in
+    * `labels` (gs, hits, n_brute, recall_e4). */
+  private def stateRecall(s: SparkSession, d: String, walk: GraphWalkTrace,
+      labels: DataFrame, nQueries: Int, k: Int): DataFrame = {
+    val sel = walk.topK(walk.states.last, k)
+      .select(col("gs"), col("qid"), col("cid"), lit(1L).as("hit"))
+    bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
+      .crossJoin(broadcast(labels))
+      .join(sel, Seq("gs", "qid", "cid"), "left")
+      .groupBy("gs")
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
+        count(lit(1)).as("n_brute"))
+      .withColumn("recall_e4", recallE4)
+  }
+
+  /** Recall of one top-k selection against brute (qid, cid) rows:
+    * (hits, n_brute, recall_e4). */
+  private def recallOf(brute: DataFrame, top: DataFrame): DataFrame =
+    brute.join(broadcast(top.select(col("qid"), col("cid"), lit(1L).as("hit"))),
+        Seq("qid", "cid"), "left")
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
+        count(lit(1)).as("n_brute"))
+      .withColumn("recall_e4", recallE4)
+
+  private def recallE4: Column =
+    round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
 
   /** Search tail over [[graphWalk]]: rank the final beam, top-k. */
   private def graphSearchFrom(s: SparkSession, d: String, nQueries: Int,
       k: Int, beam: Int, rounds: Int)(
       entries: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val walk = graphWalk(s, d, nQueries, beam, rounds)(entries)
+    val walk = graphWalk(s, d, nQueries, lit(beam), rounds)(entries)
     graft.functions.Caching.releaseAfterAction(
-      walk.states.last
-        .withColumn("rn", row_number().over(walk.w).cast("long"))
-        .filter(col("rn") <= k)
-        .orderBy("qid", "rn"),
+      walk.topK(walk.states.last, k).orderBy("qid", "rn"),
       (walk.caches ++ walk.states): _*)
+  }
+
+  /** [[graphSearchFrom]] at the log-layer rule's budget
+    * ([[graphBeamFor]]/[[layeredRoundsFor]], resolved from the corpus
+    * count); an explicit `beam` or `rounds` > 0 overrides its half. */
+  private def layeredSearchFrom(s: SparkSession, d: String, nQueries: Int,
+      k: Int, beam: Int, rounds: Int)(
+      entries: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val n = if (beam > 0 && rounds > 0) 0L else corpusCount(s, d)
+    graphSearchFrom(s, d, nQueries, k,
+      if (beam > 0) beam else graphBeamFor(n),
+      if (rounds > 0) rounds else layeredRoundsFor(n))(entries)
   }
 
   /** The round budgets the beam sweep prices (ascending; max sets the
@@ -3473,9 +3383,7 @@ object Similarity {
     // budget row is a prefix of the same deterministic walk by shared
     // code, not by a hand-copied loop kept in sync (the round-13 advice).
     import s.implicits._
-    val walk = graphWalk(s, d, nQueries, beam, sweep.max) { (q, _) =>
-      q.select(col("qid")).withColumn("cid", lit(GraphEntry))
-    }
+    val walk = graphWalk(s, d, nQueries, lit(beam), sweep.max)(fixedEntry)
     val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
     // The cumulative scanned-candidate counts for EVERY budget come from
     // ONE first-round-tagged aggregate: tag each round's candidate frame
@@ -3498,16 +3406,8 @@ object Similarity {
       .groupBy("rounds")
       .agg(sum(coalesce(col("cnt"), lit(0L))).as("scored_rows"))
     val hitRows = sweep.map { r =>
-      val sel = walk.states(r)
-        .withColumn("rn", row_number().over(walk.w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col("cid"), lit(1L).as("hit"))
-      brute.join(broadcast(sel), Seq("qid", "cid"), "left")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-          count(lit(1)).as("n_brute"))
-        .select(lit(r.toLong).as("rounds"), col("hits"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"))
+      recallOf(brute, walk.topK(walk.states(r), k))
+        .select(lit(r.toLong).as("rounds"), col("hits"), col("recall_e4"))
     }
     graft.functions.Caching.releaseAfterAction(
       hitRows.reduce(_ unionAll _)

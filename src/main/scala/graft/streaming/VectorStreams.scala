@@ -160,11 +160,7 @@ object VectorStreams {
     // so an arriving vector can never fan out quadratically into a dense
     // mode AND the streamed evidence stays consistent with the capped
     // batch graph on skewed corpora (inert on this corpus, like batch).
-    val eligible = allKeys.groupBy("band_idx", "band_key")
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") <= bucketCap)
-      .select("band_idx", "band_key")
-    val staticKeys = allKeys.join(eligible, Seq("band_idx", "band_key"))
+    val staticKeys = Similarity.cappedBuckets(allKeys, bucketCap)
     val keyRows = graft.sources.Tables.embeddings(spark, staticDir).count() *
       bands
     val staticSide =

@@ -83,6 +83,30 @@ class BenchHarnessSpec extends AnyFunSuite {
     }
   }
 
+  test("ArtifactCache: a nested build's time is not counted in the outer build") {
+    withTempRoot { _ =>
+      val f = java.nio.file.Files.createTempFile("graft-ac-self", ".parquet").toFile
+      ArtifactCache.drainBuildTimes(): Unit
+      val t0 = System.nanoTime()
+      ArtifactCache.getOrBuild(spark, "selfouter", f.getAbsolutePath, Seq(1)) {
+        ArtifactCache.getOrBuild(spark, "selfinner", f.getAbsolutePath, Seq(1)) {
+          Thread.sleep(2000); Seq((1L, 2L)).toDF("a", "b")
+        }.count(): Unit
+        Seq((3L, 4L)).toDF("a", "b")
+      }.count(): Unit
+      val wall = (System.nanoTime() - t0) / 1e9
+      val times = ArtifactCache.drainBuildTimes()
+      def timeOf(name: String): Double =
+        times.collectFirst { case (k, v) if k.startsWith(s"$name-") => v }
+          .getOrElse(fail(s"no build time for $name: ${times.keys}"))
+      val (outer, inner) = (timeOf("selfouter"), timeOf("selfinner"))
+      assert(inner >= 2.0, s"inner build time $inner misses its sleep")
+      // Self times of nested builds partition the outer build's span.
+      assert(outer + inner <= wall,
+        s"outer $outer + inner $inner exceed the wall time $wall")
+    }
+  }
+
   test("ArtifactCache: manifest gate refuses planted and mislabeled directories") {
     withTempRoot { _ =>
       val f = java.nio.file.Files.createTempFile("graft-ac-man", ".parquet").toFile

@@ -308,6 +308,49 @@ class SimilaritySpec extends AnyFunSuite {
     info(s"recall_e4 base=${base._2} post_insert=${post._2}")
   }
 
+  test("keyed insert walks: each graph state's hits equal a walk over its edges alone") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, max}
+    val emb = spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
+    val maxId = emb.agg(max("vec_id")).head().getLong(0)
+    val stored = Similarity.navGraphShared(spark, TestSpark.sf).select("src", "dst")
+    def below(cut: Long): DataFrame =
+      stored.filter(col("src") < cut && col("dst") < cut)
+    val bruteSet = brute.map(t => (t._1, t._2)).toSet
+    // One unkeyed walk over a driver-local copy of the edge set.
+    def hitsAlone(edges: DataFrame): Long = {
+      val local = edges.distinct().as[(Long, Long)].collect().toSeq.toDF("src", "dst")
+      val walk = Similarity.graphWalk(spark, TestSpark.sf, 10,
+          lit(Similarity.GraphBeam), Similarity.GraphRounds,
+          step = Some(_.join(local, "src"))) { (q, _) =>
+        q.select(col("qid")).withColumn("cid", lit(Similarity.GraphEntry))
+      }
+      graft.functions.Caching.releaseAfterAction(
+          walk.topK(walk.states.last, 5).select("qid", "cid"),
+          (walk.caches ++ walk.states): _*)
+        .as[(Long, Long)].collect().count(bruteSet.contains).toLong
+    }
+    val one = Similarity.evalNavInsert(spark, TestSpark.sf)
+      .select("graph_state", "hits").as[(String, Long)].collect().toMap
+    val cut = maxId - Similarity.NavInsertBatch + 1
+    assert(one("base") === hitsAlone(below(cut)))
+    assert(one("post_insert") === hitsAlone(below(cut)
+      .unionAll(Similarity.navInsert(spark, TestSpark.sf).select("src", "dst"))))
+    // Sequential batches: state b adds the delta of each prefix batch.
+    val size = Similarity.NavInsertBatch
+    val batches = Similarity.NavSeqBatches
+    val seq = Similarity.evalNavInsertSeq(spark, TestSpark.sf)
+      .select("batch", "hits").as[(Long, Long)].collect().toMap
+    val cut0 = maxId - batches * size + 1
+    val deltas = (1 to batches).map { b =>
+      Similarity.navInsertDf(emb.filter(col("vec_id") < cut0 + b * size), size)
+        .select("src", "dst")
+    }
+    assert(seq(0L) === hitsAlone(below(cut0)))
+    assert(seq(batches.toLong) ===
+      hitsAlone((below(cut0) +: deltas).reduce(_ unionAll _)))
+  }
+
   test("nav insert: a planted near-duplicate arrival attaches to its twin both ways") {
     import org.apache.spark.sql.functions.{col, when}
     val emb = spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
