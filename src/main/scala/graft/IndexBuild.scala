@@ -37,7 +37,7 @@ object IndexBuild {
     }
     val rest = if (mode == "build") args else args.drop(1)
     val in = if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.001"
-    val out = if (rest.length > 1) rest(1) else Similarity.ivfPqIndexDir(in)
+    val out = if (rest.length > 1) rest(1) else Similarity.ivfPqArtifact(in).dir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.sources.Sessions.local(cpus)
     val t0 = System.nanoTime()

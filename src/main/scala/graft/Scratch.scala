@@ -72,9 +72,9 @@ object Scratch {
       spark.stop(); return
     }
     if (args.length > 1 && args(1) == "explain-to") {
-      // Dump explain("formatted") for many queries into a directory —
-      // the optimization rounds' before/after plan evidence
-      // (plans/rNN/<query>_{before,after}.txt).
+      // Dump explain("formatted") for many queries into a directory, one
+      // <outDir>/<query>.txt each: before/after plan evidence for an
+      // optimization, compared outside the repository.
       val outDir = args(2)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       for (name <- args.drop(3)) {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
 import graft.functions.Caching.{drop, hold}
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Deduplication operators for LLM-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -771,12 +771,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     * unchanged. Planted-test Df variants keep computing self-contained. */
   def jaccardPairsShared(s: SparkSession, d: String,
       maxDf: Long = MaxShingleDf): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "jacpairs",
-      s"$d/documents.parquet", jacPairsParams(maxDf))(
+    jacPairsArtifact(d, maxDf).getOrBuild(s)(
       pairProductBuild(s, d, maxDf, wantJac = true))
 
-  private def jacPairsParams(maxDf: Long): Seq[Any] =
-    Seq(JacPairsBaseE4, maxDf, JacPairsVersion)
+  private[graft] def jacPairsArtifact(d: String,
+      maxDf: Long = MaxShingleDf): Artifact =
+    Artifact("jacpairs", s"$d/documents.parquet",
+      Seq(JacPairsBaseE4, maxDf, JacPairsVersion))
 
   /** The BUILDER both pair products share (guide §5: shared build
     * intermediates): jacpairs and contpairs run the IDENTICAL df-capped
@@ -784,7 +785,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * dominant cost) and differ only in the final score projection. When
     * the requested product's SIBLING is also absent, the core computes
     * once (persisted), the sibling is derived from it and published
-    * through its own [[graft.sources.ArtifactCache.getOrBuildDir]] (its
+    * through its own [[graft.sources.Artifact.getOrBuildDir]] (its
     * own key — consumers and eviction see exactly the product its own
     * builder would have written; identical rows: the score tails are
     * pure projections of the same overlap frame), and the
@@ -793,22 +794,19 @@ object Dedup extends org.apache.spark.internal.Logging {
     * sibling already exists, this is the plain single-product build. */
   private def pairProductBuild(s: SparkSession, d: String, maxDf: Long,
       wantJac: Boolean): DataFrame = {
-    import graft.sources.ArtifactCache
-    val keyFile = s"$d/documents.parquet"
-    val (sibName, sibParams) =
-      if (wantJac) ("contpairs", contPairsParams(maxDf))
-      else ("jacpairs", jacPairsParams(maxDf))
+    val sibling =
+      if (wantJac) contPairsArtifact(d, maxDf) else jacPairsArtifact(d, maxDf)
     val (ov0, sh) = pairOverlapFromShingles(
       shingles(Tables.documents(s, d)), maxDf)
     def scored(ov: DataFrame, jac: Boolean) =
       if (jac) jacScored(ov, JacPairsBaseE4) else contScored(ov, ContainmentThrE4)
-    if (ArtifactCache.exists(ArtifactCache.path(sibName, keyFile, sibParams)))
+    if (sibling.exists)
       graft.functions.Caching.releaseAfterAction(scored(ov0, wantJac), sh)
     else {
       val ov = hold(ov0)
       // The sibling's products entry prices its marginal write; the
       // shared core is inside the requester's getOrBuild timing.
-      ArtifactCache.getOrBuildDir(s, sibName, keyFile, sibParams)(tmp =>
+      sibling.getOrBuildDir(s)(tmp =>
         scored(ov, !wantJac).write.mode("overwrite").parquet(tmp)): Unit
       // The returned frame reads the shared core, so getOrBuild's own
       // parquet write of it releases the core.
@@ -930,12 +928,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     * (a short doc fully inside a long one has jac ≈ na/nb → 0). */
   def containmentPairsShared(s: SparkSession, d: String,
       maxDf: Long = MaxShingleDf): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "contpairs",
-      s"$d/documents.parquet", contPairsParams(maxDf))(
+    contPairsArtifact(d, maxDf).getOrBuild(s)(
       pairProductBuild(s, d, maxDf, wantJac = false))
 
-  private def contPairsParams(maxDf: Long): Seq[Any] =
-    Seq(ContainmentThrE4, maxDf, ContPairsVersion)
+  private[graft] def contPairsArtifact(d: String,
+      maxDf: Long = MaxShingleDf): Artifact =
+    Artifact("contpairs", s"$d/documents.parquet",
+      Seq(ContainmentThrE4, maxDf, ContPairsVersion))
 
   def containmentPairs(s: SparkSession, d: String,
       minContE4: Long = ContainmentThrE4,
@@ -1085,13 +1084,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     * cap, or algorithm version rebuilds. */
   def clusterAssignmentsShared(s: SparkSession, d: String,
       minJacE4: Long = 100L): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "dedupcc",
-      s"$d/documents.parquet",
-      // The build consumes jacpairs, so the pair product's content
-      // address is part of THIS key: any change to it (corpus, base,
-      // df cap, version) moves the assignment's key mechanically.
-      Seq(minJacE4, ClustersVersion, graft.sources.ArtifactCache.address(
-        "jacpairs", s"$d/documents.parquet", jacPairsParams(MaxShingleDf))))(
+    dedupCcArtifact(d, minJacE4).getOrBuild(s)(
       // The build itself consumes the SHARED pair product (filtered at
       // this assignment's threshold — monotone above the base, so rows
       // are identical to the self-contained Df path), so the two cached
@@ -1102,6 +1095,10 @@ object Dedup extends org.apache.spark.internal.Logging {
         assignmentsFromPairs(Tables.documents(s, d),
           jaccardPairsShared(s, d).filter(col("jac_e4") >= minJacE4))
       else clusterAssignmentsDf(Tables.documents(s, d), minJacE4))
+
+  private[graft] def dedupCcArtifact(d: String, minJacE4: Long = 100L): Artifact =
+    Artifact("dedupcc", s"$d/documents.parquet",
+      Seq(minJacE4, ClustersVersion, jacPairsArtifact(d)))
 
   /** Decision-grade near-dup threshold (Jaccard ≥ 0.8). The pair QUERY's
     * default (0.01) is exploratory — low enough to surface weak overlaps for
@@ -1258,10 +1255,11 @@ object Dedup extends org.apache.spark.internal.Logging {
     * rows are identical by construction (deterministic integer-derived
     * hyperplanes, monotone score filter above [[EmbPairsBaseE4]]). */
   def embeddingPairsShared(s: SparkSession, d: String): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "embpairs",
-      s"$d/embeddings.parquet",
-      Seq(EmbPairsBaseE4, EmbBands, EmbRowsPerBand, EmbPairsVersion))(
-      embeddingPairsLshRaw(s, d, EmbPairsBaseE4))
+    embPairsArtifact(d).getOrBuild(s)(embeddingPairsLshRaw(s, d, EmbPairsBaseE4))
+
+  private[graft] def embPairsArtifact(d: String): Artifact =
+    Artifact("embpairs", s"$d/embeddings.parquet",
+      Seq(EmbPairsBaseE4, EmbBands, EmbRowsPerBand, EmbPairsVersion))
 
   /** The unordered pair computation — the build side of the product. */
   private def embeddingPairsLshRaw(s: SparkSession, d: String,

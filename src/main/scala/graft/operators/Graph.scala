@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.{Artifact, InputFile}
 import graft.sources.Tables._
 import graft.functions.Caching.{drop, hold}
 
@@ -189,15 +190,10 @@ object Graph {
     * [[coSupplyEdges]] by construction, so consumers' oracles are
     * unchanged. */
   def coSupplyEdgesShared(s: SparkSession, d: String): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "cosupply",
-      s"$d/lineitem.parquet", coSupplyParams)(coSupplyEdges(s, d))
+    coSupplyArtifact(d).getOrBuild(s)(coSupplyEdges(s, d))
 
-  private def coSupplyParams: Seq[Any] = Seq(TriEdgesPerNode, CoSupplyVersion)
-
-  /** The cosupply product's address — part of every key built FROM it. */
-  private def coSupplyAddress(d: String): String =
-    graft.sources.ArtifactCache.address("cosupply", s"$d/lineitem.parquet",
-      coSupplyParams)
+  private[graft] def coSupplyArtifact(d: String): Artifact =
+    Artifact("cosupply", s"$d/lineitem.parquet", Seq(TriEdgesPerNode, CoSupplyVersion))
 
   /** Algorithm version of the co-supply edge product — part of the cache
     * key (like the IVF-PQ index's IvfPqIndexVersion): bump whenever
@@ -261,14 +257,11 @@ object Graph {
     * labels. Identical rows to the inline
     * computation by construction, so consumers' oracles are unchanged.
     * The build reads TWO sources — lineitem (edges) and the supplier dim
-    * (the left-join completion) — so the supplier file's identity rides
-    * in the param list: a supplier change that leaves lineitem untouched
-    * must rebuild, not serve stale labels. */
+    * (the left-join completion) — so the supplier file is an
+    * [[graft.sources.InputFile]] param: a supplier change that leaves
+    * lineitem untouched must rebuild, not serve stale labels. */
   def componentLabelsShared(s: SparkSession, d: String): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "cclabels",
-      s"$d/lineitem.parquet",
-      Seq(coSupplyAddress(d), CcLabelsVersion,
-        graft.sources.ArtifactCache.fileIdentity(s"$d/supplier.parquet"))) {
+    ccLabelsArtifact(d).getOrBuild(s) {
       val comp = graft.operators.Dedup.components(
         coSupplyEdgesShared(s, d).select(col("a").as("d1"), col("b").as("d2")))
       graft.functions.Caching.releaseAfterAction(
@@ -278,6 +271,10 @@ object Graph {
             coalesce(col("label"), col("s_suppkey")).as("component_id")),
         comp)
     }
+
+  private[graft] def ccLabelsArtifact(d: String): Artifact =
+    Artifact("cclabels", s"$d/lineitem.parquet", Seq(coSupplyArtifact(d),
+      CcLabelsVersion, InputFile(s"$d/supplier.parquet")))
 
   /** CONNECTED COMPONENTS of the co-supply graph — trading communities:
     * every supplier labeled with the smallest supplier key reachable
@@ -426,10 +423,12 @@ object Graph {
     * cosupply product's address + round count + version); community
     * sizes are a label-sized aggregate each consumer derives. */
   def lpaLabelsShared(s: SparkSession, d: String): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "lpalabels",
-      s"$d/lineitem.parquet",
-      Seq(coSupplyAddress(d), LpaRounds, LpaLabelsVersion))(
+    lpaLabelsArtifact(d).getOrBuild(s)(
       lpaDf(coSupplyEdgesShared(s, d)).select("node", "community"))
+
+  private[graft] def lpaLabelsArtifact(d: String): Artifact =
+    Artifact("lpalabels", s"$d/lineitem.parquet",
+      Seq(coSupplyArtifact(d), LpaRounds, LpaLabelsVersion))
 
   /** Same, over any canonical undirected edge list (a, b), a < b
     * (planted tests). Scale shape per round: one edge⋈label join keyed on

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
 import graft.functions.Caching.{drop, hold}
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Approximate-nearest-neighbor / similarity search over the embeddings table.
   *
@@ -495,10 +495,13 @@ object Similarity {
     * argmax ties). */
   def kmeansAssignmentsShared(s: SparkSession, d: String,
       nCells: Int = IvfCells, iters: Int = IvfKmeansIters): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "kmassign",
-      s"$d/embeddings.parquet",
-      Seq(nCells, iters, KmAssignVersion))(
+    kmAssignArtifact(d, nCells, iters).getOrBuild(s)(
       kmeansClustersRaw(s, d, nCells, iters))
+
+  private[graft] def kmAssignArtifact(d: String, nCells: Int = IvfCells,
+      iters: Int = IvfKmeansIters): Artifact =
+    Artifact("kmassign", s"$d/embeddings.parquet",
+      Seq(nCells, iters, KmAssignVersion))
 
   /** The unordered assignment computation — the build side of the product. */
   private def kmeansClustersRaw(s: SparkSession, d: String, nCells: Int,
@@ -1075,7 +1078,7 @@ object Similarity {
     * returns the index directory, content-addressed unless the caller
     * passes an explicit one. Shared by the batch served query and the
     * served streaming ingest. The content-addressed default is a plain
-    * [[graft.sources.ArtifactCache.getOrBuildDir]] product; an explicit
+    * [[graft.sources.Artifact.getOrBuildDir]] product; an explicit
     * (or swap-managed) directory builds FIRST-WINS through the same
     * publish protocol (`replace = false`), so a just-published live index
     * is never deleted under a concurrent winner's readers.
@@ -1093,19 +1096,17 @@ object Similarity {
       kCents: Int = PqK, ivfIters: Int = IvfKmeansIters,
       pqIters: Int = PqKmeansIters, eta: Int = PqEta): String = {
     import graft.sources.ArtifactCache
-    val base = indexDir.getOrElse(
-      ivfPqIndexDir(d, nCells, m, kCents, ivfIters, pqIters, eta))
+    val product = ivfPqArtifact(d, nCells, m, kCents, ivfIters, pqIters, eta)
+    val base = indexDir.getOrElse(product.dir)
     val dir = ivfPqResolveDir(base)
     if (indexDir.isEmpty && dir == base)
-      ArtifactCache.getOrBuildDir(s, "ivfpq", s"$d/embeddings.parquet",
-        ivfPqParams(nCells, m, kCents, ivfIters, pqIters, eta))(tmp =>
+      product.getOrBuildDir(s)(tmp =>
         ivfPqWriteTables(s, d, tmp, nCells, m, kCents, ivfIters, pqIters, eta))
     else {
       if (!ArtifactCache.exists(s"$dir/index"))
         ivfPqWriteIndex(s, d, dir, nCells, m, kCents, ivfIters, pqIters, eta,
           replace = false)
-      ArtifactCache.validateManifest(dir,
-        ivfPqManifestKey(d, nCells, m, kCents, ivfIters, pqIters, eta))
+      ArtifactCache.validateManifest(dir, product.key)
       dir
     }
   }
@@ -1123,18 +1124,17 @@ object Similarity {
       ArtifactCache.readSmall(cur).trim).toString
   }
 
-  /** The full (unhashed) identity a persisted index must prove at read
-    * time: corpus file identity, every training knob, layout version —
-    * written by [[ivfPqWriteIndex]], demanded by [[ensureIvfPqIndex]]. */
-  private def ivfPqManifestKey(d: String, nCells: Int, m: Int, kCents: Int,
-      ivfIters: Int, pqIters: Int, eta: Int): String =
-    graft.sources.ArtifactCache.keyString("ivfpq",
-      s"$d/embeddings.parquet",
-      ivfPqParams(nCells, m, kCents, ivfIters, pqIters, eta))
-
-  private def ivfPqParams(nCells: Int, m: Int, kCents: Int, ivfIters: Int,
-      pqIters: Int, eta: Int): Seq[Any] =
-    Seq(nCells, m, kCents, ivfIters, pqIters, eta, IvfPqIndexVersion)
+  /** The persisted index as a product: corpus file identity, every
+    * training knob, layout version. Its key is the manifest every index
+    * dir must prove at read time — written by [[ivfPqWriteIndex]],
+    * demanded by [[ensureIvfPqIndex]] and [[ivfPqSwapIfStale]]; its dir
+    * is the default index location (production deployments pass an
+    * explicit warehouse path instead). */
+  private[graft] def ivfPqArtifact(d: String, nCells: Int = IvfCells,
+      m: Int = PqM, kCents: Int = PqK, ivfIters: Int = IvfKmeansIters,
+      pqIters: Int = PqKmeansIters, eta: Int = PqEta): Artifact =
+    Artifact("ivfpq", s"$d/embeddings.parquet",
+      Seq(nCells, m, kCents, ivfIters, pqIters, eta, IvfPqIndexVersion))
 
   /** REBUILD-UNDER-READERS: build a fresh index VERSION under `baseDir`
     * and atomically flip the `CURRENT` pointer to it — the index swap the
@@ -1232,8 +1232,8 @@ object Similarity {
       if (!inPlace.exists(ArtifactCache.exists))
         ArtifactCache.removeManifest(baseDir)
     }
-    val expected = ivfPqManifestKey(d, nCells, m, kCents, ivfIters,
-      pqIters, eta)
+    val expected =
+      ivfPqArtifact(d, nCells, m, kCents, ivfIters, pqIters, eta).key
     // Freshness is the MANIFEST check alone: a valid IN-PLACE index
     // (ivfPqWriteIndex straight at baseDir, resolved == baseDir) is just
     // as fresh as a swap-managed version — the first cron call over a
@@ -1280,20 +1280,6 @@ object Similarity {
     * never be served against newer retrieval code. */
   private val IvfPqIndexVersion = 1
 
-  /** Default location for the persisted index of corpus `d`: keyed by the
-    * corpus file's identity (path, size, mtime) AND every training
-    * parameter AND [[IvfPqIndexVersion]], so a changed corpus, changed
-    * knobs, or changed code can never silently serve a stale index — the
-    * standard content-addressed cache rule. Lives under the JVM temp dir
-    * (a scratch artifact, like Spark's own local dirs); production
-    * deployments pass an explicit warehouse path instead. */
-  def ivfPqIndexDir(d: String, nCells: Int = IvfCells, m: Int = PqM,
-      kCents: Int = PqK, ivfIters: Int = IvfKmeansIters,
-      pqIters: Int = PqKmeansIters, eta: Int = PqEta): String =
-    graft.sources.ArtifactCache.path("ivfpq",
-      s"$d/embeddings.parquet",
-      ivfPqParams(nCells, m, kCents, ivfIters, pqIters, eta))
-
   /** BUILD-AND-PERSIST the trained IVF-PQ index — the production split's
     * offline half (what [[ivfPqTrainedCodes]] computes, written out): runs
     * both k-means loops once and stores three parquet tables under `dir`:
@@ -1313,7 +1299,7 @@ object Similarity {
       ivfIters: Int = IvfKmeansIters, pqIters: Int = PqKmeansIters,
       eta: Int = PqEta, replace: Boolean = true): Unit =
     graft.sources.ArtifactCache.buildAt(dir,
-      ivfPqManifestKey(d, nCells, m, kCents, ivfIters, pqIters, eta),
+      ivfPqArtifact(d, nCells, m, kCents, ivfIters, pqIters, eta).key,
       replace)(tmp =>
       ivfPqWriteTables(s, d, tmp, nCells, m, kCents, ivfIters, pqIters, eta))
 
@@ -1347,7 +1333,7 @@ object Similarity {
     * per call). Results are IDENTICAL to [[ivfPqTrainedTopK]] because the
     * stored index is the same deterministic encode (the query hash-matches
     * the same oracle). Builds the index on first use when `indexDir` is
-    * absent (content-addressed via [[ivfPqIndexDir]] — corpus or parameter
+    * absent (content-addressed via [[ivfPqArtifact]] — corpus or parameter
     * changes invalidate it); production calls [[ivfPqWriteIndex]] on its
     * own schedule and passes the path.
     *
@@ -1748,18 +1734,17 @@ object Similarity {
   def knnGraphShared(s: SparkSession, d: String, k: Int = KnnK,
       bands: Int = 8, rows: Int = 0,
       bucketCap: Long = KnnBucketCap): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
-      s"$d/embeddings.parquet", knnGraphParams(k, bands, rows, bucketCap))(
+    knnGraphArtifact(d, k, bands, rows, bucketCap).getOrBuild(s)(
       knnGraphDf(Tables.embeddings(s, d), k, bands, rows, bucketCap))
 
-  /** The knngraph key's params — ONE definition for both builders and
-    * [[navGraphShared]]'s key. `rows` = 0 keys the [[bandRowsFor]] rule
-    * itself: its input, the corpus count, is pinned by the source
-    * identity, so the key needs no count job (a rule change bumps
-    * [[KnnGraphVersion]]). */
-  private def knnGraphParams(k: Int, bands: Int, rows: Int,
-      bucketCap: Long): Seq[Any] =
-    Seq(k, bands, rows, bucketCap, KnnGraphVersion)
+  /** `rows` = 0 keys the [[bandRowsFor]] rule itself: its input, the
+    * corpus count, is pinned by the source identity, so the key needs no
+    * count job (a rule change bumps [[KnnGraphVersion]]). */
+  private[graft] def knnGraphArtifact(d: String, k: Int = KnnK,
+      bands: Int = 8, rows: Int = 0,
+      bucketCap: Long = KnnBucketCap): Artifact =
+    Artifact("knngraph", s"$d/embeddings.parquet",
+      Seq(k, bands, rows, bucketCap, KnnGraphVersion))
 
   /** Same, over any (vec_id, embedding: array<float|double>) DataFrame
     * (planted tests). `rows` = 0 resolves [[bandRowsFor]] on the
@@ -2260,16 +2245,13 @@ object Similarity {
     * Published as its own content-addressed product CONSUMING the
     * knngraph product (sim_knn_graph keeps its raw-kNN semantics). */
   def navGraphShared(s: SparkSession, d: String): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "navgraph",
-      s"$d/embeddings.parquet",
-      // The build consumes the knngraph product: its content address
-      // carries KnnK, the band geometry, KnnBucketCap (which the banded
-      // up/highway stages here also apply) and its version, so a change
-      // to any of them rebuilds this product too.
-      Seq(graft.sources.ArtifactCache.address("knngraph",
-          s"$d/embeddings.parquet", knnGraphParams(KnnK, 8, 0, KnnBucketCap)),
-        CoarseMod, NavHighwayK, NavDownCap, NavMirrorCap, NavGraphVersion))(
-      navGraphBuild(s, d))
+    navGraphArtifact(d).getOrBuild(s)(navGraphBuild(s, d))
+
+  /** Keyed on the knngraph product it consumes, whose address carries
+    * [[KnnBucketCap]] — the banded up/highway stages here apply it too. */
+  private[graft] def navGraphArtifact(d: String): Artifact =
+    Artifact("navgraph", s"$d/embeddings.parquet", Seq(knnGraphArtifact(d),
+      CoarseMod, NavHighwayK, NavDownCap, NavMirrorCap, NavGraphVersion))
 
   // private[graft] so PlanSpec can pin the BUILD's plan shape (no
   // broadcast of a non-constant-bounded frame) without a product write.
@@ -2293,9 +2275,8 @@ object Similarity {
     // for both products, guide §5); the key is [[knnGraphShared]]'s
     // default one, so a warm run scans the stored edges and the closure
     // never evaluates.
-    val knnRanked = hold(graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
-        s"$d/embeddings.parquet", knnGraphParams(KnnK, 8, 0, KnnBucketCap))(
-        knnGraphFromCapped(c, ck, KnnK)))
+    val knnRanked = hold(knnGraphArtifact(d).getOrBuild(s)(
+      knnGraphFromCapped(c, ck, KnnK)))
     val knn = knnRanked.select("src", "dst")
     val wMir = Window.partitionBy("dst").orderBy(desc("sim_e4"), asc("src"))
     val mirror = knnRanked
@@ -2422,11 +2403,14 @@ object Similarity {
     * construction. */
   def navInsert(s: SparkSession, d: String,
       batch: Long = NavInsertBatch): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "navdelta",
-      s"$d/embeddings.parquet",
-      Seq(KnnK, CoarseMod, NavHighwayK, NavDownCap, NavMirrorCap,
-        KnnBucketCap, batch, NavInsertVersion))(
+    navDeltaArtifact(d, batch).getOrBuild(s)(
       navInsertDf(Tables.embeddings(s, d), batch))
+
+  private[graft] def navDeltaArtifact(d: String,
+      batch: Long = NavInsertBatch): Artifact =
+    Artifact("navdelta", s"$d/embeddings.parquet",
+      Seq(KnnK, CoarseMod, NavHighwayK, NavDownCap, NavMirrorCap,
+        KnnBucketCap, batch, NavInsertVersion))
 
   /** Same, over any (vec_id, embedding) frame (planted tests). */
   def navInsertDf(embeddings: DataFrame,

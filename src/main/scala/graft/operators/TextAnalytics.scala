@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
 import graft.functions.Caching.{drop, hold}
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 /** Text operators: the reference engine's entire production query surface
   * (word count / top-k / distinct words — coordinator.py:62-136, worker.py:9-17)
@@ -152,14 +152,13 @@ object TextAnalytics {
     * Consumers read their table and join/order as before — rows are
     * identical by construction (the training loop is deterministic and
     * all-integer), so every consumer's oracle is unchanged. The build
-    * publishes through [[graft.sources.ArtifactCache.getOrBuildDir]]
+    * publishes through [[graft.sources.Artifact.getOrBuildDir]]
     * (crash-safe, FIRST-WINS: concurrent cold starts both train and the
     * losing copy is discarded complete). Planted-test Df variants keep
     * training self-contained. */
   private[graft] def ensureBpeProduct(s: SparkSession, d: String,
       nMerges: Int = BpeMerges, batch: Int = BpeBatch): String =
-    graft.sources.ArtifactCache.getOrBuildDir(s, "bpe",
-      s"$d/documents.parquet", Seq(nMerges, batch, BpeProductVersion)) { tmp =>
+    bpeArtifact(d, nMerges, batch).getOrBuildDir(s) { tmp =>
       import s.implicits._
       val (m, _, seg) = vocabTrainSeg(Tables.documents(s, d), nMerges, batch)
       try {
@@ -168,6 +167,10 @@ object TextAnalytics {
         seg.write.parquet(s"$tmp/seg")
       } finally org.apache.spark.sql.graft.Checkpoints.release(seg)
     }
+
+  private[graft] def bpeArtifact(d: String, nMerges: Int = BpeMerges,
+      batch: Int = BpeBatch): Artifact =
+    Artifact("bpe", s"$d/documents.parquet", Seq(nMerges, batch, BpeProductVersion))
 
   /** Same, over any (doc_id, text) DataFrame (planted tests). Each
     * pass's segmentation is an EAGER localCheckpoint: the merge fold
@@ -1517,9 +1520,10 @@ object TextAnalytics {
     * lm_mean_e4). Identical rows by construction (integer-exact scoring),
     * so consumers' oracles are unchanged. */
   def lmScoresShared(s: SparkSession, d: String): DataFrame =
-    graft.sources.ArtifactCache.getOrBuild(s, "lmscore",
-      s"$d/documents.parquet", Seq(LmScoreVersion))(
-      lmScoreDf(Tables.documents(s, d)))
+    lmScoreArtifact(d).getOrBuild(s)(lmScoreDf(Tables.documents(s, d)))
+
+  private[graft] def lmScoreArtifact(d: String): Artifact =
+    Artifact("lmscore", s"$d/documents.parquet", Seq(LmScoreVersion))
 
   /** Same, over any (doc_id, text) DataFrame (planted fluency tests). */
   def lmScoreDf(docs: DataFrame): DataFrame = {

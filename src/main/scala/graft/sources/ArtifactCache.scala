@@ -14,15 +14,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * queries consume the same product, and rebuilding it inside each
   * consumer's plan repeats the dominant cost.
   *
-  * The cache key is the identity of the SOURCE file the product derives
-  * from (qualified path, byte size, mtime) plus every build parameter plus
-  * a layout version — so a changed corpus, changed knobs, or changed code
-  * can never silently serve a stale product; invalidation is structural,
-  * not scheduled. Each published product carries a MANIFEST recording its
-  * full (unhashed) key; consumers validate it at read time and fail
-  * loudly on mismatch, so a hash collision, a mislabeled directory, or a
-  * foreign dir planted at the expected path can never be served as query
-  * results.
+  * KEYS: each product is one [[Artifact]] declaration (name, source
+  * file, ordered params), and its key is
+  * `name|<qualified source path>|<size>|<mtime>|<params…>|<CacheVersion>`
+  * — so a changed corpus, changed knobs, or changed code can never
+  * silently serve a stale product; invalidation is structural, not
+  * scheduled. Each param renders by one rule, in declaration order:
+  *
+  *  - another [[Artifact]] (a dependency) renders as its content address
+  *    `<name>-<16hex>`, so any change to it moves the dependent's key;
+  *  - an [[InputFile]] (a second input the build reads) renders as
+  *    `<path>#<size>#<mtime>`, one field;
+  *  - anything else renders with `toString`.
+  *
+  * Each published product carries a MANIFEST recording its full
+  * (unhashed) key; consumers validate it at read time and fail loudly on
+  * mismatch, so a hash collision, a mislabeled directory, or a foreign
+  * dir planted at the expected path can never be served as query results.
   *
   * LOCATION: products live under a single dedicated root, resolved (in
   * order) from the session conf `spark.graft.products.dir`, the env var
@@ -55,7 +63,7 @@ object ArtifactCache {
     * 2: dedicated per-user root + per-product manifests (round 11).
     * 3: Hadoop-FileSystem product layer — keys carry the QUALIFIED
     *    source path (round 11). */
-  private val CacheVersion = 3
+  private[sources] val CacheVersion = 3
 
   /** The Hadoop configuration FS operations resolve against: the active
     * session's (carries cluster `fs.defaultFS`, credentials); a plain
@@ -88,7 +96,7 @@ object ArtifactCache {
         s"graft-cache-${sys.props.getOrElse("user.name", "anon")}")
         .getAbsolutePath)
     // Memoized per configured value: on HDFS every exists/mkdirs/status
-    // call below is a NameNode RPC, and root() runs per path()/listing
+    // call below is a NameNode RPC, and root() runs per product dir/listing
     // row — verify once, re-verify only when the configuration changes.
     if (verifiedRoot == raw) return raw
     val p = new Path(raw)
@@ -125,62 +133,22 @@ object ArtifactCache {
 
   private def rootPath(): Path = new Path(root)
 
-  /** Full, UNHASHED content key for product `name` — what the manifest
-    * records and read-time validation compares. The source's identity is
-    * its FS-qualified path plus size and mtime (both 0 for a path that
-    * does not exist yet, matching the pre-FS semantics — the build
-    * itself will fail loudly on a truly absent corpus). */
-  def keyString(name: String, keyFile: String, params: Seq[Any]): String = {
-    // The manifest key is '|'-joined and consumers ([[evictDerivedFrom]])
-    // parse the source path back out of field 1 — a '|' in the product
-    // name would shift every field. No current name contains one; keep it
-    // that way loudly rather than silently mis-scope a future eviction.
-    require(!name.contains('|'), s"product name must not contain '|': $name")
-    val p = new Path(keyFile)
-    val fs = fsOf(p)
-    val (len, mtime) =
-      if (fs.exists(p)) {
-        val st = fs.getFileStatus(p); (st.getLen, st.getModificationTime)
-      } else (0L, 0L)
-    (Seq(name, fs.makeQualified(p).toString, len, mtime) ++
-      params :+ CacheVersion).mkString("|")
-  }
-
-  /** Identity token (qualified path + size + mtime) for an AUXILIARY
-    * input file, to be passed as an extra `params` entry when a build
-    * reads more than one source: `keyFile` carries only the primary
-    * source's identity, so a second input changing underneath would
-    * otherwise serve a stale product silently — against the layer's
-    * "never serve stale" standard. '#'-joined (not '|') so it stays one
-    * param field in the manifest key. Absent files key as 0/0, matching
-    * [[keyString]]'s pre-FS semantics. */
-  def fileIdentity(file: String): String = {
+  /** An input file's identity: FS-qualified path, size and mtime (both
+    * 0 for a path that does not exist yet — the build itself fails
+    * loudly on a truly absent input). */
+  private[sources] def identity(file: String): Seq[Any] = {
     val p = new Path(file)
     val fs = fsOf(p)
     val (len, mtime) =
       if (fs.exists(p)) {
         val st = fs.getFileStatus(p); (st.getLen, st.getModificationTime)
       } else (0L, 0L)
-    s"${fs.makeQualified(p)}#$len#$mtime"
+    Seq(fs.makeQualified(p).toString, len, mtime)
   }
 
-  private def sha8(s: String): String =
+  private[sources] def sha8(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-
-  /** The CONTENT ADDRESS `<name>-<16-hex-key>` (the product dir's
-    * basename). A product built FROM another product puts its
-    * dependency's address in its own `params`, so any change to the
-    * dependency moves the dependent's key too. */
-  def address(name: String, keyFile: String, params: Seq[Any]): String =
-    s"$name-${sha8(keyString(name, keyFile, params))}"
-
-  /** Content-addressed directory for product `name` derived from
-    * `keyFile` under `params`: `<root>/<address>`. Touches the
-    * filesystem only to read the key file's metadata and ensure the
-    * root. */
-  def path(name: String, keyFile: String, params: Seq[Any]): String =
-    new Path(root, address(name, keyFile, params)).toString
 
   // ---- small FS helpers (shared with the persisted-index machinery,
   //      which manages versioned directories outside getOrBuild) ----
@@ -380,41 +348,6 @@ object ArtifactCache {
     }
   }
 
-  /** The directory of product `name` keyed by (`keyFile`, `params`),
-    * built first through [[buildAt]] if absent (`write` may lay down
-    * any number of tables). Concurrent builders race only on the atomic
-    * publish; every reader sees one complete product. Every hit
-    * validates the manifest (see [[validateManifest]]). */
-  def getOrBuildDir(s: SparkSession, name: String, keyFile: String,
-      params: Seq[Any])(write: String => Unit): String = {
-    val key = keyString(name, keyFile, params)
-    val dir = path(name, keyFile, params)
-    def buildIfAbsent(): Unit = if (!exists(dir)) {
-      autoGc(s)
-      buildAt(dir, key, replace = false)(write)
-    }
-    buildIfAbsent()
-    try validateManifest(dir, key)
-    catch {
-      // The product VANISHED between the existence check and the read —
-      // a concurrent gc/evict got it. Eviction must never break
-      // correctness ("a consumer whose product vanished rebuilds"), so
-      // rebuild exactly once; a manifest MISMATCH on a dir that still
-      // exists stays a loud failure (stale/planted dir, never auto-fixed).
-      case _: IOException if !exists(dir) =>
-        buildIfAbsent()
-        validateManifest(dir, key)
-    }
-    dir
-  }
-
-  /** Read the one-table product `name` ([[getOrBuildDir]] with `build`
-    * as its table). */
-  def getOrBuild(s: SparkSession, name: String, keyFile: String,
-      params: Seq[Any])(build: => DataFrame): DataFrame =
-    s.read.parquet(getOrBuildDir(s, name, keyFile, params)(tmp =>
-      build.write.mode("overwrite").parquet(tmp)))
-
   /** AUTOMATIC retention, run BEFORE each miss-path build when the
     * session opts in: `spark.graft.products.gc.maxBytes` and/or
     * `spark.graft.products.gc.maxAgeDays` apply the [[gc]] policy
@@ -427,7 +360,7 @@ object ArtifactCache {
     * well above one build, as with any cache). As with manual [[gc]],
     * eviction never breaks correctness — a consumer whose product
     * vanished rebuilds. */
-  private def autoGc(s: SparkSession): Unit = {
+  private[sources] def autoGc(s: SparkSession): Unit = {
     val bytes = s.conf.getOption("spark.graft.products.gc.maxBytes")
       .flatMap(_.toLongOption)
     val ageDays = s.conf.getOption("spark.graft.products.gc.maxAgeDays")
@@ -459,8 +392,8 @@ object ArtifactCache {
   }
 
   /** The product dir string for a listed entry: `<root>/<basename>`, the
-    * same textual form [[path]] produces, so registry rows compare equal
-    * to key paths. */
+    * same textual form [[Artifact.dir]] produces, so registry rows
+    * compare equal to product dirs. */
   private def dirString(st: FileStatus): String =
     new Path(root, st.getPath.getName).toString
 
@@ -524,7 +457,7 @@ object ArtifactCache {
 
   /** Evict only products DERIVED FROM the given source directories: a
     * product's manifest records the FS-qualified path of the file its
-    * key was computed from (see [[keyString]]); a product whose manifest
+    * key was computed from (see [[Artifact.key]]); a product whose manifest
     * source sits under one of `sourceDirs` is evicted, everything else —
     * other corpora's products, manifest-less foreign dirs — is left
     * alone. This is the bench's cold-pass reset: it must re-price ITS
@@ -540,7 +473,7 @@ object ArtifactCache {
     val victims = published().filter { st =>
       readManifest(dirString(st)).exists { m =>
         // key format: name|<qualified source path>|len|mtime|params…
-        // ([[keyString]] rejects '|' in names, so field 1 IS the path).
+        // ([[Artifact]] rejects '|' in names, so field 1 IS the path).
         // Match the dir itself OR anything under it — a product whose
         // keyFile is the source dir (no trailing component) must not
         // escape the bench's cold reset.

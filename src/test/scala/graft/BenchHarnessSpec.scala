@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.ArtifactCache
+import graft.sources.{Artifact, ArtifactCache}
 
 /** Trust tests for the measurement/caching plumbing itself: the isolated
   * bench's child-JSON round trip (a silent parse gap would drop queries
@@ -63,18 +63,18 @@ class BenchHarnessSpec extends AnyFunSuite {
       val f = java.nio.file.Files.createTempFile("graft-ac-key", ".parquet").toFile
       var builds = 0
       def build() = { builds += 1; Seq((1L, 2L), (3L, 4L)).toDF("a", "b") }
-      val first = ArtifactCache.getOrBuild(spark, "acspec", f.getAbsolutePath, Seq(1))(build()).count()
-      val second = ArtifactCache.getOrBuild(spark, "acspec", f.getAbsolutePath, Seq(1))(build()).count()
+      val first = Artifact("acspec", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count()
+      val second = Artifact("acspec", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count()
       assert(first === 2L && second === 2L)
       assert(builds === 1, "second consumer rebuilt a published product")
       // the product landed under the configured root, nowhere else
-      assert(ArtifactCache.path("acspec", f.getAbsolutePath, Seq(1))
+      assert(Artifact("acspec", f.getAbsolutePath, Seq(1)).dir
         .startsWith(root.getAbsolutePath), "location knob was ignored")
       // params and the key-file identity both move the content address
-      val p1 = ArtifactCache.path("t", f.getAbsolutePath, Seq(1))
-      val p2 = ArtifactCache.path("t", f.getAbsolutePath, Seq(2))
+      val p1 = Artifact("t", f.getAbsolutePath, Seq(1)).dir
+      val p2 = Artifact("t", f.getAbsolutePath, Seq(2)).dir
       assert(p1 != p2, "param change did not move the cache key")
-      assert(ArtifactCache.path("t", f.getAbsolutePath, Seq(1)) === p1, "path is not a pure function")
+      assert(Artifact("t", f.getAbsolutePath, Seq(1)).dir === p1, "path is not a pure function")
       // the miss was timed for the bench's products section; the hit was not
       val times = ArtifactCache.drainBuildTimes()
       assert(times.keys.exists(_.startsWith("acspec-")),
@@ -88,8 +88,8 @@ class BenchHarnessSpec extends AnyFunSuite {
       val f = java.nio.file.Files.createTempFile("graft-ac-self", ".parquet").toFile
       ArtifactCache.drainBuildTimes(): Unit
       val t0 = System.nanoTime()
-      ArtifactCache.getOrBuild(spark, "selfouter", f.getAbsolutePath, Seq(1)) {
-        ArtifactCache.getOrBuild(spark, "selfinner", f.getAbsolutePath, Seq(1)) {
+      Artifact("selfouter", f.getAbsolutePath, Seq(1)).getOrBuild(spark) {
+        Artifact("selfinner", f.getAbsolutePath, Seq(1)).getOrBuild(spark) {
           Thread.sleep(2000); Seq((1L, 2L)).toDF("a", "b")
         }.count(): Unit
         Seq((3L, 4L)).toDF("a", "b")
@@ -114,24 +114,24 @@ class BenchHarnessSpec extends AnyFunSuite {
       // A directory PLANTED at the expected path without a manifest must
       // refuse to serve (the shared-host attack: pre-created dir with
       // attacker parquet inside).
-      val dir = new java.io.File(ArtifactCache.path("planted", f.getAbsolutePath, Seq(1)))
+      val dir = new java.io.File(Artifact("planted", f.getAbsolutePath, Seq(1)).dir)
       build().write.parquet(dir.getAbsolutePath) // no manifest
       val e = intercept[java.io.IOException] {
-        ArtifactCache.getOrBuild(spark, "planted", f.getAbsolutePath, Seq(1))(build()).count()
+        Artifact("planted", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count()
       }
       assert(e.getMessage.contains("no manifest"))
       // A dir whose manifest names a DIFFERENT key (mislabeled/stale) also
       // refuses.
-      val dir2 = new java.io.File(ArtifactCache.path("mislabel", f.getAbsolutePath, Seq(1)))
+      val dir2 = new java.io.File(Artifact("mislabel", f.getAbsolutePath, Seq(1)).dir)
       build().write.parquet(dir2.getAbsolutePath)
       ArtifactCache.writeManifest(dir2.getAbsolutePath, "some-other-key")
       val e2 = intercept[java.io.IOException] {
-        ArtifactCache.getOrBuild(spark, "mislabel", f.getAbsolutePath, Seq(1))(build()).count()
+        Artifact("mislabel", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count()
       }
       assert(e2.getMessage.contains("does not match"))
       // evicting the bad dir heals: the next consumer rebuilds cleanly
       assert(ArtifactCache.evict("mislabel") === 1)
-      assert(ArtifactCache.getOrBuild(spark, "mislabel", f.getAbsolutePath, Seq(1))(build())
+      assert(Artifact("mislabel", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build())
         .count() === 1L)
     }
   }
@@ -160,8 +160,8 @@ class BenchHarnessSpec extends AnyFunSuite {
       val f = java.nio.file.Files.createTempFile("graft-reg-key", ".parquet").toFile
       var builds = 0
       def build() = { builds += 1; Seq((1L, 2L), (3L, 4L)).toDF("a", "b") }
-      assert(ArtifactCache.getOrBuild(spark, "regtest", f.getAbsolutePath, Seq(1))(build()).count() === 2L)
-      val dir = ArtifactCache.path("regtest", f.getAbsolutePath, Seq(1))
+      assert(Artifact("regtest", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count() === 2L)
+      val dir = Artifact("regtest", f.getAbsolutePath, Seq(1)).dir
       val row = ArtifactCache.registry(spark).collect()
         .find(_.getString(0) == "regtest")
       assert(row.isDefined, "published product missing from the registry")
@@ -169,7 +169,7 @@ class BenchHarnessSpec extends AnyFunSuite {
       assert(row.get.getLong(3) > 0L && row.get.getLong(4) > 0L,
         "registry must report real bytes and file counts")
       // a product name CONTAINING hyphens parses whole (last-hyphen split)
-      assert(ArtifactCache.getOrBuild(spark, "two-part", f.getAbsolutePath, Seq(1))(build()).count() === 2L)
+      assert(Artifact("two-part", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count() === 2L)
       assert(ArtifactCache.registry(spark).collect()
         .exists(_.getString(0) == "two-part"), "hyphenated name mis-split")
       // ...and eviction matches names EXACTLY: evicting a hyphen-prefix
@@ -187,7 +187,7 @@ class BenchHarnessSpec extends AnyFunSuite {
       // evict removes every key of the product; the next consumer rebuilds
       assert(ArtifactCache.evict("regtest") >= 1)
       assert(!ArtifactCache.registry(spark).collect().exists(_.getString(0) == "regtest"))
-      assert(ArtifactCache.getOrBuild(spark, "regtest", f.getAbsolutePath, Seq(1))(build()).count() === 2L)
+      assert(Artifact("regtest", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count() === 2L)
       assert(builds === 3, "eviction must force exactly one rebuild")
     }
   }
@@ -204,11 +204,10 @@ class BenchHarnessSpec extends AnyFunSuite {
       val f = java.nio.file.Files.createTempFile("graft-uri-key", ".parquet").toFile
       var builds = 0
       def build() = { builds += 1; Seq((7L, 8L)).toDF("a", "b") }
-      val got = ArtifactCache.getOrBuild(spark, "urispec", f.getAbsolutePath,
-        Seq(1))(build()).as[(Long, Long)].collect().toSeq
+      val got = Artifact("urispec", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build())
+        .as[(Long, Long)].collect().toSeq
       assert(got === Seq((7L, 8L)))
-      assert(ArtifactCache.getOrBuild(spark, "urispec", f.getAbsolutePath,
-        Seq(1))(build()).count() === 1L)
+      assert(Artifact("urispec", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count() === 1L)
       assert(builds === 1, "URI-rooted product was rebuilt on a hit")
       // the product physically landed under the local dir the URI names
       val kids = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
@@ -239,21 +238,20 @@ class BenchHarnessSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.products.gc.minAgeMs", "0")
       try {
         // first build: cache is empty pre-build, so nothing to trim
-        ArtifactCache.getOrBuild(spark, "agcA", f.getAbsolutePath, Seq(1))(
+        Artifact("agcA", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(
           build(1)).count(): Unit
         assert(ArtifactCache.registry(spark).collect()
           .exists(_.getString(0) == "agcA"))
         // second build's PRE-BUILD sweep evicts A (budget 0); B itself
         // publishes after the sweep and survives
-        ArtifactCache.getOrBuild(spark, "agcB", f.getAbsolutePath, Seq(1))(
+        Artifact("agcB", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(
           build(2)).count(): Unit
         val names = ArtifactCache.registry(spark).collect()
           .map(_.getString(0)).toSet
         assert(!names.contains("agcA"), "auto-gc did not trim the stale product")
         assert(names.contains("agcB"), "auto-gc evicted the product being built")
         // a HIT never triggers the sweep: B re-reads fine under budget 0
-        assert(ArtifactCache.getOrBuild(spark, "agcB", f.getAbsolutePath,
-          Seq(1))(build(3)).count() === 1L)
+        assert(Artifact("agcB", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build(3)).count() === 1L)
       } finally {
         spark.conf.unset("spark.graft.products.gc.maxBytes")
         spark.conf.unset("spark.graft.products.gc.minAgeMs")
@@ -267,8 +265,8 @@ class BenchHarnessSpec extends AnyFunSuite {
       def build(n: Long) = Seq((n, n)).toDF("a", "b")
       // three products, with distinct publish times planted via mtime
       for ((name, age) <- Seq(("old", 10L), ("mid", 5L), ("new", 1L))) {
-        ArtifactCache.getOrBuild(spark, name, f.getAbsolutePath, Seq(1))(build(1)).count(): Unit
-        val d = new java.io.File(ArtifactCache.path(name, f.getAbsolutePath, Seq(1)))
+        Artifact(name, f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build(1)).count(): Unit
+        val d = new java.io.File(Artifact(name, f.getAbsolutePath, Seq(1)).dir)
         assert(d.setLastModified(System.currentTimeMillis() - age * 86400000L))
       }
       // an in-flight build must survive every gc
@@ -295,9 +293,9 @@ class BenchHarnessSpec extends AnyFunSuite {
       val f = java.nio.file.Files.createTempFile("graft-grace-key", ".parquet").toFile
       def build(n: Long) = Seq((n, n)).toDF("a", "b")
       for (name <- Seq("aged", "young")) {
-        ArtifactCache.getOrBuild(spark, name, f.getAbsolutePath, Seq(1))(build(1)).count(): Unit
+        Artifact(name, f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build(1)).count(): Unit
       }
-      val agedDir = new java.io.File(ArtifactCache.path("aged", f.getAbsolutePath, Seq(1)))
+      val agedDir = new java.io.File(Artifact("aged", f.getAbsolutePath, Seq(1)).dir)
       assert(agedDir.setLastModified(System.currentTimeMillis() - 2L * 3600000L))
       // default 1 h floor: budget 0 may evict only the 2 h-old product —
       // the just-published one is graced even though the budget says evict
@@ -318,11 +316,11 @@ class BenchHarnessSpec extends AnyFunSuite {
       val fA = java.io.File.createTempFile("corpus", ".parquet", dirA)
       val fB = java.io.File.createTempFile("corpus", ".parquet", dirB)
       def build(n: Long) = Seq((n, n)).toDF("a", "b")
-      ArtifactCache.getOrBuild(spark, "prodA", fA.getAbsolutePath, Seq(1))(build(1)).count(): Unit
-      ArtifactCache.getOrBuild(spark, "prodB", fB.getAbsolutePath, Seq(1))(build(2)).count(): Unit
+      Artifact("prodA", fA.getAbsolutePath, Seq(1)).getOrBuild(spark)(build(1)).count(): Unit
+      Artifact("prodB", fB.getAbsolutePath, Seq(1)).getOrBuild(spark)(build(2)).count(): Unit
       // a product whose keyFile IS the source dir itself (no trailing
       // component) must fall under the same scope — exact-dir match
-      ArtifactCache.getOrBuild(spark, "prodDir", dirA.getAbsolutePath, Seq(1))(build(3)).count(): Unit
+      Artifact("prodDir", dirA.getAbsolutePath, Seq(1)).getOrBuild(spark)(build(3)).count(): Unit
       // a manifest-less foreign dir under the root must survive too
       val foreign = new java.io.File(ArtifactCache.root, "foreign-0123456789abcdef")
       assert(foreign.mkdirs())
@@ -343,20 +341,18 @@ class BenchHarnessSpec extends AnyFunSuite {
       val f = java.nio.file.Files.createTempFile("graft-rr-key", ".parquet").toFile
       var builds = 0
       def build() = { builds += 1; Seq((1L, 2L)).toDF("a", "b") }
-      ArtifactCache.getOrBuild(spark, "rrtest", f.getAbsolutePath, Seq(1))(build()).count(): Unit
+      Artifact("rrtest", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count(): Unit
       assert(builds === 1)
-      val dir = ArtifactCache.path("rrtest", f.getAbsolutePath, Seq(1))
+      val dir = Artifact("rrtest", f.getAbsolutePath, Seq(1)).dir
       // eviction (concurrent gc's effect) ⇒ the next consumer rebuilds
       ArtifactCache.rmTree(dir)
-      assert(ArtifactCache.getOrBuild(spark, "rrtest", f.getAbsolutePath,
-        Seq(1))(build()).count() === 1L)
+      assert(Artifact("rrtest", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count() === 1L)
       assert(builds === 2, "a vanished product must rebuild, not fail")
       // but a PRESENT dir with the wrong manifest is never auto-rebuilt:
       // that is a stale/planted product, and silence would mask it
       ArtifactCache.writeManifest(dir, "not|the|right|key")
       val e = intercept[java.io.IOException] {
-        ArtifactCache.getOrBuild(spark, "rrtest", f.getAbsolutePath,
-          Seq(1))(build()).count()
+        Artifact("rrtest", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count()
       }
       assert(e.getMessage.contains("does not match"))
       assert(builds === 2, "a mismatched manifest must not trigger a silent rebuild")
@@ -368,7 +364,7 @@ class BenchHarnessSpec extends AnyFunSuite {
       val f = java.nio.file.Files.createTempFile("graft-vrfy-key", ".parquet").toFile
       def build() = Seq((1L, 2L)).toDF("a", "b")
       // a healthy product → ok
-      ArtifactCache.getOrBuild(spark, "healthy", f.getAbsolutePath, Seq(1))(build()).count(): Unit
+      Artifact("healthy", f.getAbsolutePath, Seq(1)).getOrBuild(spark)(build()).count(): Unit
       // a manifest-less foreign dir → no_manifest
       assert(new java.io.File(root, "foreign-0123456789abcdef").mkdirs())
       // a planted dir whose manifest names another product → name_mismatch
@@ -431,9 +427,9 @@ class BenchHarnessSpec extends AnyFunSuite {
     withTempRoot { root =>
       val f = java.nio.file.Files.createTempFile("graft-xrace-key", ".parquet").toFile
       var innerBuilds = 0
-      val out = ArtifactCache.getOrBuild(spark, "xrace", f.getAbsolutePath, Seq(1)) {
+      val out = Artifact("xrace", f.getAbsolutePath, Seq(1)).getOrBuild(spark) {
         // the other session wins the race while we are "still building"
-        ArtifactCache.getOrBuild(spark, "xrace", f.getAbsolutePath, Seq(1)) {
+        Artifact("xrace", f.getAbsolutePath, Seq(1)).getOrBuild(spark) {
           innerBuilds += 1; Seq((1L, 10L)).toDF("a", "b")
         }.count(): Unit
         Seq((2L, 20L)).toDF("a", "b") // our complete copy — loses the publish
@@ -445,7 +441,7 @@ class BenchHarnessSpec extends AnyFunSuite {
       assert(!root.listFiles().exists(_.getName.contains(".tmp-")),
         "losing publish left its tmp build behind")
       // a later consumer reads the winner's copy with zero rebuilds
-      assert(ArtifactCache.getOrBuild(spark, "xrace", f.getAbsolutePath, Seq(1)) {
+      assert(Artifact("xrace", f.getAbsolutePath, Seq(1)).getOrBuild(spark) {
         fail("the converged product must serve without a rebuild")
       }.as[(Long, Long)].collect().toSeq === Seq((1L, 10L)))
     }
@@ -463,7 +459,7 @@ class BenchHarnessSpec extends AnyFunSuite {
       val builds = new java.util.concurrent.atomic.AtomicInteger(0)
       def caller(tag: Long) = graft.functions.Par.async {
         org.apache.spark.sql.SparkSession.setActiveSession(spark)
-        ArtifactCache.getOrBuild(spark, "thrrace", f.getAbsolutePath, Seq(1)) {
+        Artifact("thrrace", f.getAbsolutePath, Seq(1)).getOrBuild(spark) {
           builds.incrementAndGet(): Unit
           inFlight.countDown()
           inFlight.await(30, java.util.concurrent.TimeUnit.SECONDS): Unit
@@ -480,6 +476,36 @@ class BenchHarnessSpec extends AnyFunSuite {
         s"expected exactly one published product dir: $kids")
       assert(!kids.exists(_.contains(".tmp-")), s"a tmp build was left behind: $kids")
     }
+  }
+
+  test("every product declaration renders its pinned key") {
+    // An absent source keys as size 0 and mtime 0, so these keys are the
+    // same on every machine. A product whose key changes no longer finds
+    // the products already published for it: change a literal here only
+    // together with a deliberate key change (a version bump).
+    import graft.operators.{Dedup, Graph, Similarity, TextAnalytics}
+    val d = "/graft-key-fixture"
+    val (li, docs, emb) = (s"file:$d/lineitem.parquet|0|0",
+      s"file:$d/documents.parquet|0|0", s"file:$d/embeddings.parquet|0|0")
+    val pinned = Seq(
+      Graph.coSupplyArtifact(d) -> s"cosupply|$li|25|1|3",
+      Graph.ccLabelsArtifact(d) -> (s"cclabels|$li|cosupply-5d1fbe9fa550cf70|1|" +
+        s"file:$d/supplier.parquet#0#0|3"),
+      Graph.lpaLabelsArtifact(d) -> s"lpalabels|$li|cosupply-5d1fbe9fa550cf70|4|1|3",
+      Dedup.jacPairsArtifact(d) -> s"jacpairs|$docs|100|50|1|3",
+      Dedup.contPairsArtifact(d) -> s"contpairs|$docs|8000|50|1|3",
+      Dedup.dedupCcArtifact(d) -> s"dedupcc|$docs|100|2|jacpairs-c7033248cb3dffa8|3",
+      Dedup.embPairsArtifact(d) -> s"embpairs|$emb|3500|6|6|1|3",
+      Similarity.kmAssignArtifact(d) -> s"kmassign|$emb|16|2|1|3",
+      Similarity.ivfPqArtifact(d) -> s"ivfpq|$emb|16|8|16|2|2|2|1|3",
+      Similarity.knnGraphArtifact(d) -> s"knngraph|$emb|4|8|0|400|1|3",
+      Similarity.navGraphArtifact(d) ->
+        s"navgraph|$emb|knngraph-9eef0f1e58e19135|32|8|16|16|4|3",
+      Similarity.navDeltaArtifact(d) -> s"navdelta|$emb|4|32|8|16|16|400|50|1|3",
+      TextAnalytics.bpeArtifact(d) -> s"bpe|$docs|12|8|1|3",
+      TextAnalytics.lmScoreArtifact(d) -> s"lmscore|$docs|1|3")
+    assert(pinned.map(_._1.name).distinct.size === 14)
+    for ((product, key) <- pinned) assert(product.key === key, product.name)
   }
 
   test("dependent products key on their dependency's current content address") {
