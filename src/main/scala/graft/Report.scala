@@ -21,17 +21,15 @@ import graft.sources.Tables
   */
 object Report {
 
-  /** Full frequency table (word, cnt) ordered for the TSV sink. */
-  private def ordered(counts: DataFrame): DataFrame =
-    counts.orderBy(desc("cnt"), asc("word"))
-
-  /** O12: write `word\tcount` as a single TSV part file (coalesce(1) is the
-    * single-output-file parity choice for report-sized results — the counts
-    * table is already aggregated, so one writer task is not a bottleneck). */
+  /** O12: write `word\tcount` as a single TSV part file. One exchange to a
+    * single partition, then an in-task sort: no range-partitioning sample
+    * job and no extra stage, and the counts table is already aggregated, so
+    * one writer task is not a bottleneck. `repartition`, not `coalesce`:
+    * the exchange keeps an uncomputed `counts`' final aggregate parallel. */
   def writeTsv(counts: DataFrame, outPath: String): Unit =
-    ordered(counts)
+    counts.repartition(1)
+      .sortWithinPartitions(desc("cnt"), asc("word"))
       .select(col("word"), col("cnt").cast("string"))
-      .coalesce(1)
       .write.mode("overwrite")
       .option("sep", "\t")
       .csv(outPath)
@@ -39,7 +37,7 @@ object Report {
   /** O13: the reference's top-k console block, format-compatible with
     * coordinator.py:123-129 (rank, word padded to longest+1, `%,d` count). */
   def formatTopK(counts: DataFrame, k: Int = 20): String = {
-    val top = ordered(counts).limit(k)
+    val top = counts.orderBy(desc("cnt"), asc("word")).limit(k)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val longest = if (top.nonEmpty) top.map(_._1.length).max else 5
     // Locale pinned: %,d under a non-English default locale would use that

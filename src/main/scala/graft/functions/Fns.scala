@@ -12,12 +12,18 @@ import org.apache.spark.sql.functions._
   *  - the rolling hash is plain 64-bit integer arithmetic (no engine-specific
   *    hash function), reproducible in DuckDB via list_reduce;
   *  - the tokenizer reproduces the reference engine's `\b[a-z]+\b` word regex
-  *    (reference: worker.py:6,13) via the codegen'd built-in regexp engine.
+  *    (reference: worker.py:6,13). [[tokens]] runs it through the codegen'd
+  *    built-in regexp engine; the word count reads ASCII rows with a byte
+  *    scan that yields the same tokens (TextAnalytics.wordCountsText) and
+  *    sends every other row through [[tokens]].
   */
 object Fns {
 
-  /** Reference tokenizer pattern (reference worker.py:6). JDK regex `\b` is
-    * Unicode-aware like CPython's — verified parity in FIXTURES.md §A4. */
+  /** Reference tokenizer pattern (reference worker.py:6). JDK 17's regex `\b`
+    * is Unicode-aware like CPython's — verified parity in FIXTURES.md §A4 and
+    * pinned by TokenizerSpec's boundary golden. JDK 19+ made `\b` ASCII-only
+    * (JDK-8264160), which would yield `caf` from `café`; a JDK change must
+    * pass that golden before the non-ASCII tokens can be trusted. */
   val TokenRe = "\\b[a-z]+\\b"
 
   /** lower + tokenize to array<string> (reference worker.py:13). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
 import graft.functions.Caching.{drop, hold}
@@ -13,11 +13,12 @@ import graft.sources.{Artifact, Tables}
   *
   * Scale notes (100 TB): every pipeline here is scan → narrow per-row transform
   * (tokenize = codegen'd regex, no UDF) → explode → hash partial agg → shuffle
-  * on the group key → final agg. The partial aggregate (Spark's built-in
-  * map-side combine, HashAggregateExec mode=Partial) is the same optimization
-  * the reference hand-rolls in worker.py:13-15; shuffle volume is bounded by
-  * distinct keys per task, not input size. Top-k is TakeOrderedAndProject —
-  * a per-partition heap + driver merge of k rows, never a global sort spill.
+  * on the group key → final agg, except the word count itself, whose scan
+  * tokenizes and counts in one pass per partition ([[wordCountsText]]) — the
+  * reference's worker.py:13-15 combiner — before the same partial/final agg.
+  * Shuffle volume is bounded by distinct keys per task, not input size.
+  * Top-k is TakeOrderedAndProject — a per-partition heap + driver merge of k
+  * rows, never a global sort spill.
   */
 object TextAnalytics {
 
@@ -30,11 +31,130 @@ object TextAnalytics {
     wordCountsText(docs, "text")
 
   /** word → count over any text column (documents table or raw text lines —
-    * the Report/textLines ingest path shares this exact pipeline). */
-  def wordCountsText(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(tokens(col(textCol))).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
+    * the Report/textLines ingest path and the streaming twin share this
+    * exact pipeline). Same rows as `explode(tokens(text))` → group count.
+    *
+    * Each partition tokenizes and counts in one pass, the reference
+    * worker's per-chunk dict (worker.py:9-17): it emits `(word, n)`
+    * partials and one `groupBy` sums them, so the aggregate sees one row
+    * per distinct word per partition instead of one row per token. ASCII
+    * rows go to a byte scan ([[countAscii]]) as they are. Any other row is
+    * tokenized by [[graft.functions.Fns.tokens]] itself, whose lowering
+    * follows the session's case-mapping conf and whose `\b` is the JDK's;
+    * its tokens are `[a-z]+`, so joined by spaces they make an ASCII line
+    * the same scan reads back unchanged. */
+  def wordCountsText(df: DataFrame, textCol: String): DataFrame = {
+    val t = col(textCol)
+    df.select(when(length(t) === octet_length(t), t)
+        .otherwise(array_join(tokens(t), " ")).cast("binary"))
+      .as(Encoders.BINARY)
+      .mapPartitions(combine _)(Encoders.tuple(Encoders.BINARY, Encoders.scalaLong))
+      .groupBy(col("_1").cast("string").as("word"))
+      // sum is nullable; the non-null count schema is part of the contract
+      .agg(coalesce(sum("_2"), lit(0L)).as("cnt"))
+  }
+
+  /** Most distinct words one partition's table holds before it emits its
+    * partials and starts over, so task memory stays bounded: at worst
+    * (every token distinct) a partition emits one partial row per token,
+    * as a plain partial aggregate would. */
+  private[graft] val CombineBound = 1 << 16
+
+  /** Counts the tokens of an ASCII line into `words`: maximal `[A-Za-z]`
+    * runs, lowered, kept when neither neighbour is `[0-9_]` — on ASCII
+    * exactly `lower` + `\b[a-z]+\b`, since a letter run touching a digit
+    * or `_` has no word boundary on that side. A byte ≥ 0x80 (invalid UTF-8
+    * in a row whose char and byte counts agree) separates, as the U+FFFD it
+    * decodes to does. `line` may alias the scanned row and is not written;
+    * the lowered copy goes to `scratch`, which must be as long. */
+  private def countAscii(line: Array[Byte], scratch: Array[Byte],
+      words: WordTable): Unit = {
+    def letter(c: Byte) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+    def joins(c: Byte) = (c >= '0' && c <= '9') || c == '_'
+    val n = line.length
+    var i = 0
+    while (i < n) {
+      if (letter(line(i))) {
+        val s = i
+        while (i < n && letter(line(i))) {
+          scratch(i) = (line(i) | 0x20).toByte
+          i += 1
+        }
+        if ((s == 0 || !joins(line(s - 1))) && (i == n || !joins(line(i))))
+          words.add(scratch, s, i - s)
+      } else i += 1
+    }
+  }
+
+  /** Word → count table keyed on UTF-8 bytes: an open-addressing index over
+    * words and counts kept in first-occurrence order, the order the table
+    * emits them in. A repeated word costs a probe, not an allocation; only
+    * a new word copies its bytes. */
+  private final class WordTable {
+    private var index = Array.fill(1 << 13)(-1)
+    private var words = new Array[Array[Byte]](1 << 12)
+    private var counts = new Array[Long](1 << 12)
+    var size = 0
+
+    private def slot(b: Array[Byte], off: Int, len: Int): Int = {
+      var h = 0
+      var j = off
+      while (j < off + len) { h = 31 * h + b(j); j += 1 }
+      h *= 0x9e3779b9
+      (h ^ (h >>> 16)) & (index.length - 1)
+    }
+
+    def add(b: Array[Byte], off: Int, len: Int): Unit = {
+      var i = slot(b, off, len)
+      while (index(i) >= 0 &&
+          !java.util.Arrays.equals(words(index(i)), 0, words(index(i)).length, b, off, off + len))
+        i = (i + 1) & (index.length - 1)
+      if (index(i) >= 0) counts(index(i)) += 1
+      else {
+        if (size == words.length) {
+          words = java.util.Arrays.copyOf(words, size * 2)
+          counts = java.util.Arrays.copyOf(counts, size * 2)
+        }
+        words(size) = java.util.Arrays.copyOfRange(b, off, off + len)
+        counts(size) = 1
+        index(i) = size
+        size += 1
+        if (size * 2 > index.length) reindex()
+      }
+    }
+
+    private def reindex(): Unit = {
+      index = Array.fill(index.length * 2)(-1)
+      for (id <- 0 until size) {
+        var i = slot(words(id), 0, words(id).length)
+        while (index(i) >= 0) i = (i + 1) & (index.length - 1)
+        index(i) = id
+      }
+    }
+
+    def entries: Iterator[(Array[Byte], Long)] =
+      Iterator.range(0, size).map(id => (words(id), counts(id)))
+  }
+
+  /** The per-partition word counter behind [[wordCountsText]]: counts
+    * lines into a [[WordTable]] until it holds [[CombineBound]] words,
+    * emits its (UTF-8 word, n) partials and starts a new one. */
+  private def combine(lines: Iterator[Array[Byte]]): Iterator[(Array[Byte], Long)] = {
+    var scratch = new Array[Byte](256)
+    def fill(): WordTable = {
+      val words = new WordTable
+      while (words.size < CombineBound && lines.hasNext) {
+        val line = lines.next()
+        if (line != null) {
+          if (scratch.length < line.length) scratch = new Array[Byte](line.length * 2)
+          countAscii(line, scratch, words)
+        }
+      }
+      words
+    }
+    // a table comes back empty only once the lines are exhausted
+    Iterator.continually(fill()).takeWhile(_.size > 0).flatMap(_.entries)
+  }
 
   /** Flagship: reference parity top-k (O3,O4,O5,O6,O9,O10) with the rebuild's
     * deterministic total order (count desc, word asc — SURVEY §2 R1). */

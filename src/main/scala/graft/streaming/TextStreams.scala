@@ -21,7 +21,9 @@ import graft.operators.{Dedup, Pipeline, TextAnalytics}
 object TextStreams {
 
   /** Continuous word count over a text-file directory (streaming twin of
-    * Report.wordcountTextDir — identical pipeline, streaming source). */
+    * Report.wordcountTextDir — identical pipeline, streaming source). Each
+    * trigger's partitions emit per-word partials and the aggregation state
+    * holds their running `sum` per word. */
   def wordCountStream(spark: SparkSession, dir: String): DataFrame =
     TextAnalytics.wordCountsText(spark.readStream.text(dir), "value")
 

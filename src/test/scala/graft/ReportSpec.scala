@@ -35,7 +35,7 @@ class ReportSpec extends AnyFunSuite {
     Report.writeTsv(counts, out)
     val part = Files.list(Paths.get(out)).toArray.map(_.toString)
       .filter(p => p.contains("part-") && p.endsWith(".csv"))
-    assert(part.length === 1, "coalesce(1) must yield exactly one part file")
+    assert(part.length === 1, "writeTsv must yield exactly one part file")
     val lines = scala.io.Source.fromFile(part.head).getLines().toVector
     val parsed = lines.map { l =>
       val Array(w, c) = l.split("\t"); (w, c.toLong)

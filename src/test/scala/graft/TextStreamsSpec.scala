@@ -392,6 +392,45 @@ class TextStreamsSpec extends AnyFunSuite {
     assert(streamed("the") === 3L)
   }
 
+  test("streaming word count survives a restart: resumed run equals uninterrupted and batch") {
+    // The per-word sums live in checkpointed aggregation state: a job
+    // stopped after the first drop and restarted after the second must end
+    // on the same table as one run over both drops, and as the batch count.
+    val root = Paths.get("target", "test-scratch", "textstream_restart")
+    if (Files.exists(root))
+      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+    val dir = root.resolve("in")
+    Files.createDirectories(dir)
+    def run(ck: String): Map[String, Long] = {
+      var last = Map.empty[String, Long]
+      val q = TextStreams.wordCountStream(spark, dir.toString)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          last = df.as[(String, Long)].collect().toMap
+          ()
+        }
+        .option("checkpointLocation", ck)
+        .outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      last
+    }
+    val resumedCk = root.resolve("ck_resumed").toString
+    Files.writeString(dir.resolve("a.txt"), "The quick brown fox\nnaïve café fox\n")
+    val first = run(resumedCk)
+    assert(first("fox") === 2L)
+    Files.writeString(dir.resolve("b.txt"), "the FOX again\nx2 a_b don't\n")
+    val resumed = run(resumedCk)
+    val uninterrupted = run(root.resolve("ck_once").toString)
+    val batch = Report.wordcountTextDir(spark, dir.toString)
+      .as[(String, Long)].collect().toMap
+    assert(resumed === uninterrupted, "restart lost or double-counted words")
+    assert(resumed === batch)
+    assert(resumed("fox") === 3L && resumed("the") === 2L)
+  }
+
   test("streaming packing offsets equal the batch pack_sequences layout") {
     // A doc_id-ordered replay (one parquet drop) must reproduce the
     // batch packing byte-for-byte: the stream's per-source state is the
