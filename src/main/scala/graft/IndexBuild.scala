@@ -57,7 +57,7 @@ object IndexBuild {
         }
       case _ => Similarity.ivfPqWriteIndex(spark, in, out); out
     }
-    val idx = spark.read.parquet(s"$servedDir/index")
+    val idx = graft.sources.Tables.parquet(spark, s"$servedDir/index")
     val nVecs = idx.count()
     val nCells = idx.select("cell_id").distinct().count()
     println(s"Index built at $servedDir: $nVecs vectors across $nCells cells " +

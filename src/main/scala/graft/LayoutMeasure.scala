@@ -68,7 +68,7 @@ object LayoutMeasure {
 
     def fracs(sub: String): (Long, Long, Long, Long) = {
       val audit = hold(graft.operators.Events.fileLayoutAuditDf(
-        spark.read.parquet(s"$outDir/$sub"),
+        graft.sources.Tables.parquet(spark, s"$outDir/$sub"),
         Seq("user_id", "ts_us", "c")))
       val files = audit.count()
       def e4(df: DataFrame) = df.collect().head.getAs[Long]("scan_e4")

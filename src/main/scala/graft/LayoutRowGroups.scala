@@ -124,7 +124,7 @@ object LayoutRowGroups {
     }
     val out = Seq("linear", "zorder2", "zorder3", "hilbert").map { sub =>
       val (nf, fUp, fTr) = fracs(graft.operators.Events.fileLayoutAuditDf(
-        spark.read.parquet(s"$outDir/$sub"), dims))
+        graft.sources.Tables.parquet(spark, s"$outDir/$sub"), dims))
       val (nrg, rgUp, rgTr) = fracs(rowGroupAudit(sub))
       s""""$sub":{"files":$nf,"file_user_point_e4":$fUp,"file_time_range_e4":$fTr,""" +
         s""""row_groups":$nrg,"rg_user_point_e4":$rgUp,"rg_time_range_e4":$rgTr}"""

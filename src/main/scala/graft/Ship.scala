@@ -37,7 +37,7 @@ object Ship {
       nearDup: Boolean = true): Map[String, Long] = {
     val frame = shipFrame(spark, sfDir, nearDup)
     frame.write.mode("overwrite").partitionBy("split").parquet(outDir)
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .groupBy("split").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import graft.sources.Tables
 
 /** Streaming-twin MICRO-BENCH — the round-13 verdict's missing number:
   * every twin is spec-proven EQUAL to its batch form, but parity says
@@ -207,16 +208,16 @@ object StreamBench {
     val docDir = s"$stage/documents"
     val vecDir = s"$stage/embeddings"
     val vecDirSustain = s"$stage/embeddings_sustain"
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.documents(spark, sfDir)
       .repartition(StageFiles).write.parquet(docDir)
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    Tables.embeddings(spark, sfDir)
       .repartition(StageFiles).write.parquet(vecDir)
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    Tables.embeddings(spark, sfDir)
       .repartition(SustainFiles).write.parquet(vecDirSustain)
     // Budget share: half the corpus's mean per-source token mass, so the
     // admission twin exercises BOTH outcomes (admits then rejects).
     val share = {
-      val r = spark.read.parquet(s"$sfDir/documents.parquet")
+      val r = Tables.documents(spark, sfDir)
         .select(org.apache.spark.sql.functions.size(
           graft.functions.Fns.tokens(org.apache.spark.sql.functions.col("text")))
           .cast("long").as("n"),

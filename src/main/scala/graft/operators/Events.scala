@@ -77,83 +77,64 @@ object Events {
     * per user with each stage's timestamp (-1 where the funnel stopped)
     * and the reached-stage count.
     *
-    * Scale shape: each stage is a filtered min-aggregate keyed on user_id,
-    * joined to the previous stage's result — all S stages hash-partition
-    * on the SAME key, so the exchanges reuse one partitioning and per-user
-    * state is one long per stage; no windows over full event histories.
-    * The event frame is persisted across the three stage passes. */
+    * Scale shape: one keyed pass ([[funnelPass]]). Two window minima over
+    * `partitionBy(user_id)` carry the first view and the first click after
+    * it onto each of the user's rows, and one per-user aggregate takes the
+    * first purchase after that click. The windows and the aggregate share
+    * one hash exchange on user_id plus one sort, and nothing is persisted
+    * or broadcast. A window buffers one user's rows at a time (spilling
+    * past Spark's window buffer threshold); the aggregate keeps one long
+    * per stage. */
   def funnel(s: SparkSession, d: String): DataFrame =
     funnelDf(Tables.events(s, d))
 
   /** Same, over any (user_id, event_type, ts_us) DataFrame (planted tests). */
-  def funnelDf(events: DataFrame): DataFrame = {
-    val e = hold(events.select(col("user_id"), col("event_type"), col("ts_us")))
-    val t1 = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts_us").as("t1"))
-    val t2 = e.filter(col("event_type") === "click")
-      .join(t1, "user_id").filter(col("ts_us") > col("t1"))
-      .groupBy("user_id").agg(min("ts_us").as("t2"))
-    val t3 = e.filter(col("event_type") === "purchase")
-      .join(t2, "user_id").filter(col("ts_us") > col("t2"))
-      .groupBy("user_id").agg(min("ts_us").as("t3"))
-    graft.functions.Caching.releaseAfterAction(
-      e.select("user_id").distinct()
-        .join(t1, Seq("user_id"), "left")
-        .join(t2, Seq("user_id"), "left")
-        .join(t3, Seq("user_id"), "left")
-        .select(
-          col("user_id"),
-          coalesce(col("t1"), lit(-1L)).as("view_us"),
-          coalesce(col("t2"), lit(-1L)).as("click_us"),
-          coalesce(col("t3"), lit(-1L)).as("purchase_us"),
-          when(col("t3").isNotNull, 3L).when(col("t2").isNotNull, 2L)
-            .when(col("t1").isNotNull, 1L).otherwise(0L).as("stage"))
-        .orderBy("user_id"),
-      e)
-  }
+  def funnelDf(events: DataFrame): DataFrame = funnelPass(events, None)
 
   /** Conversion window for [[funnelWindowed]] — one hour in µs. */
   val FunnelWindowUs: Long = 3600L * 1000000L
 
   /** Time-bounded funnel — [[funnelDf]]'s first-touch staging with a
     * CONVERSION WINDOW: each stage counts only if it happens within
-    * [[FunnelWindowUs]] of the previous stage's time (the form product
-    * funnels actually ship — "purchased within an hour of clicking" — a
-    * stage reached days later is a different journey). Same two-column
-    * shuffle profile as the unbounded funnel: per-stage min aggregates
-    * over one user_id partitioning; the bound is a filter inside each
-    * stage's aggregate, not a new shuffle. */
+    * [[FunnelWindowUs]] of the previous stage's time, inclusive (the form
+    * product funnels actually ship — "purchased within an hour of
+    * clicking" — a stage reached days later is a different journey). Same
+    * keyed pass as the unbounded funnel: the bound is one more condition
+    * inside each stage's minimum, not a new shuffle. */
   def funnelWindowed(s: SparkSession, d: String): DataFrame =
     funnelWindowedDf(Tables.events(s, d))
 
   /** Same, over any (user_id, event_type, ts_us) DataFrame. */
   def funnelWindowedDf(events: DataFrame,
-      windowUs: Long = FunnelWindowUs): DataFrame = {
-    val e = hold(events.select(col("user_id"), col("event_type"), col("ts_us")))
-    val t1 = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts_us").as("t1"))
-    val t2 = e.filter(col("event_type") === "click")
-      .join(t1, "user_id")
-      .filter(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + windowUs)
-      .groupBy("user_id").agg(min("ts_us").as("t2"))
-    val t3 = e.filter(col("event_type") === "purchase")
-      .join(t2, "user_id")
-      .filter(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + windowUs)
-      .groupBy("user_id").agg(min("ts_us").as("t3"))
-    graft.functions.Caching.releaseAfterAction(
-      e.select("user_id").distinct()
-        .join(t1, Seq("user_id"), "left")
-        .join(t2, Seq("user_id"), "left")
-        .join(t3, Seq("user_id"), "left")
-        .select(
-          col("user_id"),
-          coalesce(col("t1"), lit(-1L)).as("view_us"),
-          coalesce(col("t2"), lit(-1L)).as("click_us"),
-          coalesce(col("t3"), lit(-1L)).as("purchase_us"),
-          when(col("t3").isNotNull, 3L).when(col("t2").isNotNull, 2L)
-            .when(col("t1").isNotNull, 1L).otherwise(0L).as("stage"))
-        .orderBy("user_id"),
-      e)
+      windowUs: Long = FunnelWindowUs): DataFrame =
+    funnelPass(events, Some(windowUs))
+
+  /** The funnel as one pass keyed on user_id: stage k's time is the least
+    * `ts_us` of a stage-k event strictly after stage k−1's time (and at
+    * most `windowUs` after it, when bounded). A null user_id stays at
+    * stage 0, as in the oracle, where it joins no stage. */
+  private def funnelPass(events: DataFrame, windowUs: Option[Long]): DataFrame = {
+    val user = Window.partitionBy("user_id")
+    def after(prev: Column): Column = {
+      val later = col("ts_us") > prev
+      windowUs.fold(later)(w => later && col("ts_us") <= prev + w)
+    }
+    def earliest(stage: String, cond: Column): Column =
+      min(when(col("event_type") === stage && cond, col("ts_us")))
+    events.select(col("user_id"), col("event_type"), col("ts_us"))
+      .withColumn("t1", earliest("view", col("user_id").isNotNull).over(user))
+      .withColumn("t2", earliest("click", after(col("t1"))).over(user))
+      .groupBy("user_id")
+      .agg(min("t1").as("t1"), min("t2").as("t2"),
+        earliest("purchase", after(col("t2"))).as("t3"))
+      .select(
+        col("user_id"),
+        coalesce(col("t1"), lit(-1L)).as("view_us"),
+        coalesce(col("t2"), lit(-1L)).as("click_us"),
+        coalesce(col("t3"), lit(-1L)).as("purchase_us"),
+        when(col("t3").isNotNull, 3L).when(col("t2").isNotNull, 2L)
+          .when(col("t1").isNotNull, 1L).otherwise(0L).as("stage"))
+      .orderBy("user_id")
   }
 
   /** Cohort retention matrix: cohort = a user's first active day (integer

@@ -1002,7 +1002,7 @@ object Similarity {
   def ivfPqServedCodes(s: SparkSession, d: String,
       indexDir: Option[String] = None): DataFrame = {
     val dir = ensureIvfPqIndex(s, d, indexDir)
-    s.read.parquet(dir + "/index").orderBy("vec_id")
+    Tables.parquet(s, dir + "/index").orderBy("vec_id")
   }
 
   /** The (vec_id, cell_id, c0..c{M−1}) serving-index frame from an
@@ -1266,10 +1266,10 @@ object Similarity {
     * inverse of [[ivfPqWriteIndex]]'s small tables. */
   private[graft] def loadIvfPqArtifacts(s: SparkSession, dir: String):
       (Seq[(Long, Seq[Double])], Seq[(Long, Long, Seq[Double])]) = {
-    val cents = s.read.parquet(s"$dir/centroids")
+    val cents = Tables.parquet(s, s"$dir/centroids")
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
       .sortBy(_._1).toSeq
-    val cb = s.read.parquet(s"$dir/codebook")
+    val cb = Tables.parquet(s, s"$dir/codebook")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toSeq))
       .sortBy(t => (t._1, t._2)).toSeq
     (cents, cb)
@@ -1355,7 +1355,7 @@ object Similarity {
     val dir = ensureIvfPqIndex(s, d, indexDir, nCells, m, kCents,
       ivfIters, pqIters, eta)
     val (cents, cb) = loadIvfPqArtifacts(s, dir)
-    val idx = s.read.parquet(s"$dir/index")
+    val idx = Tables.parquet(s, s"$dir/index")
     val af = idx.select("vec_id", "cell_id")
     // Long-form codes from the stored pivot — posexplode, the pivot's
     // exact inverse.

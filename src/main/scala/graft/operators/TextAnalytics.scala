@@ -248,7 +248,7 @@ object TextAnalytics {
     * amortized away. */
   def vocabTrain(spark: SparkSession, dir: String,
       nMerges: Int = BpeMerges): DataFrame =
-    spark.read.parquet(ensureBpeProduct(spark, dir, nMerges) + "/merges")
+    Tables.parquet(spark, ensureBpeProduct(spark, dir, nMerges) + "/merges")
       .orderBy("merge_rank")
 
   /** On-disk layout version of the persisted BPE training product — bump
@@ -569,7 +569,7 @@ object TextAnalytics {
     // The stored `seg/` table IS the encode of every distinct word —
     // consume the SHARED training product instead of re-running the loop.
     bpeFertilityFrom(Tables.documents(spark, dir),
-      spark.read.parquet(ensureBpeProduct(spark, dir) + "/seg"))
+      Tables.parquet(spark, ensureBpeProduct(spark, dir) + "/seg"))
 
   /** Same, over any (doc_id, text) DataFrame (planted tests — trains
     * self-contained). */
@@ -601,8 +601,8 @@ object TextAnalytics {
     * shuffle total (the occurrence group-by), registry-sized output. */
   def tokenizerFertilityEval(spark: SparkSession, dir: String): DataFrame = {
     val prod = ensureBpeProduct(spark, dir)
-    val seg = spark.read.parquet(prod + "/seg")
-    val scored = spark.read.parquet(prod + "/merges")
+    val seg = Tables.parquet(spark, prod + "/seg")
+    val scored = Tables.parquet(spark, prod + "/merges")
       .orderBy("merge_rank").select("merged", "pair_cnt").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     fertilityEvalCore(Tables.documents(spark, dir), seg, scored)

@@ -72,6 +72,6 @@ final case class Artifact(name: String, source: String, params: Seq[Any]) {
   /** Read the one-table product ([[getOrBuildDir]] with `build` as its
     * table). */
   def getOrBuild(s: SparkSession)(build: => DataFrame): DataFrame =
-    s.read.parquet(getOrBuildDir(s)(tmp =>
+    Tables.parquet(s, getOrBuildDir(s)(tmp =>
       build.write.mode("overwrite").parquet(tmp)))
 }

@@ -1,20 +1,35 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 
-/** Readers for the driver-generated Parquet corpus (TESTDATA.md).
+/** Readers for the driver-generated Parquet corpus (TESTDATA.md) and every
+  * other Parquet path graft reads (products, shipped corpora, staged
+  * streams).
   *
   * All reads are plain columnar Parquet scans: Catalyst pushes filters and
   * prunes columns into the scan, which is the 100 TB-scale analog of the
   * reference's 50 MB line-aligned chunked text scan (coordinator.py:47-60 —
   * there, chunk size bounds memory; here `spark.sql.files.maxPartitionBytes`
   * bounds split size and the scan never materializes a whole file either).
+  * Every Parquet read goes through [[parquet]], which resolves the schema
+  * from one footer on the driver, so constructing a read runs no Spark job.
   */
 object Tables {
 
+  /** The one Parquet reader: `spark.read.parquet(path)` with the schema
+    * taken from one data file's footer on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.FooterSchema]])
+    * instead of Spark's schema-inference job, which is a fixed cost on
+    * every short query. Same schema as inference (one footer, same
+    * conversion, partition columns still discovered from `key=value`
+    * dirs). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FooterSchema.of(spark, path)).parquet(path)
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
@@ -41,7 +56,7 @@ object Tables {
     * legacy drop readable.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = table(spark, dir, "events")
     val tsUs = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => expr("ts div 1000")
       case _ => expr("unix_micros(cast(ts as timestamp))")

@@ -49,12 +49,13 @@ object EventStreams {
     * tests (one file per batch ⇒ the watermark advances between files).
     *
     * Branches on the drop's physical ts encoding exactly like
-    * Tables.events (one batch-reader footer peek at setup, not a data
-    * scan), so the legacy NANOS drop streams as well as it batch-reads. */
+    * Tables.events (one footer read on the driver through
+    * [[graft.sources.Tables.parquet]] at setup: no data scan and no Spark
+    * job), so the legacy NANOS drop streams as well as it batch-reads. */
   def eventStream(spark: SparkSession, path: String,
       maxFilesPerTrigger: Int = 0): DataFrame = {
     val legacy =
-      spark.read.parquet(path).schema("ts").dataType == LongType
+      graft.sources.Tables.parquet(spark, path).schema("ts").dataType == LongType
     val reader = spark.readStream.schema(
       if (legacy) eventsSchemaLegacy else eventsSchema)
     val withOpt =

@@ -57,6 +57,20 @@ class ContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"direct cache calls outside Caching:\n${hits.mkString("\n")}")
   }
 
+  test("one Parquet reader: no batch Parquet read under src/main/scala outside Tables") {
+    // Tables.parquet resolves the schema from one footer on the driver; a
+    // direct spark.read...parquet( elsewhere would launch Spark's schema
+    // inference job again on every construction.
+    val direct = """\.read\b.*\.parquet\(""".r
+    val hits = mainSources.filterNot(_._1 == "graft/sources/Tables.scala")
+      .flatMap { case (rel, lines) =>
+        lines.zipWithIndex.collect {
+          case (line, i) if direct.findFirstIn(line).nonEmpty => s"$rel:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(hits.isEmpty, s"Parquet reads outside Tables.parquet:\n${hits.mkString("\n")}")
+  }
+
   test("each build-once product is declared once, and keys come only from declarations") {
     // A product's name, source and params are written in ONE Artifact
     // declaration; every reader and dependent calls its declaring def. A

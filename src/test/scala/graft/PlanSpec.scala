@@ -437,6 +437,32 @@ class PlanSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("events_funnel / _windowed: one keyed pass — one hash exchange on user_id, nothing cached or broadcast") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    object Plans extends AdaptiveSparkPlanHelper
+    for (q <- Seq("events_funnel", "events_funnel_windowed")) {
+      val df = SparkEntry.queries(q)(spark, TestSpark.sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val shuffles = Plans.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      val hashKeys = shuffles.collect { case h: HashPartitioning =>
+        h.expressions.map { case a: AttributeReference => a.name; case e => e.sql }
+      }
+      assert(hashKeys === Seq(Seq("user_id")), s"$q hash exchanges:\n$plan")
+      assert(shuffles.count(_.isInstanceOf[RangePartitioning]) === 1,
+        s"$q needs exactly the terminal range sort besides:\n$plan")
+      assert(shuffles.size === 2, s"$q plans other exchanges:\n$plan")
+      assert(Plans.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"$q broadcasts:\n$plan")
+      assert(df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.isEmpty,
+        s"$q reads a cached frame:\n$plan")
+    }
+  }
+
   test("pack_sequences family: keyed prefix sum — bases broadcast, no per-source window") {
     // `source` has ~20 values: a flat Window.partitionBy(source) plans ONE
     // task per source — a multi-TB single-task sort at 100 TB. The keyed
