@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Similarity
 
 /** Offline ANN index build as a job — the vector-corpus sibling of
@@ -38,8 +37,7 @@ object IndexBuild {
     val rest = if (mode == "build") args else args.drop(1)
     val in = if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.001"
     val out = if (rest.length > 1) rest(1) else Similarity.ivfPqArtifact(in).dir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Sessions.local(cpus)
+    val spark = graft.sources.Sessions.localFromEnv()
     val t0 = System.nanoTime()
     val servedDir = mode match {
       case "swap" =>

@@ -29,8 +29,7 @@ object LayoutMeasure {
     val sfDir = args(0)
     val outDir = args(1)
     val nFiles = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Sessions.local(cpus, logLevel = "ERROR")
+    val spark = graft.sources.Sessions.localFromEnv(logLevel = "ERROR")
 
     // One source frame for all writers (the builder LayoutRowGroups
     // shares, so the two tools' numbers stay comparable).

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.functions.Caching.{drop, hold}
@@ -39,8 +39,7 @@ object LayoutRowGroups {
     val outDir = args(1)
     val nFiles = if (args.length > 2) args(2).toInt else 4
     val blockBytes = if (args.length > 3) args(3).toInt else 64 * 1024
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Sessions.local(cpus, logLevel = "ERROR")
+    val spark = graft.sources.Sessions.localFromEnv(logLevel = "ERROR")
     val conf = spark.sparkContext.hadoopConfiguration
 
     // Source frame: the SAME builder LayoutMeasure uses.

@@ -33,8 +33,7 @@ import graft.sources.ArtifactCache
 object Products {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Sessions.local(cpus, logLevel = "ERROR")
+    val spark = graft.sources.Sessions.localFromEnv(logLevel = "ERROR")
     args.toList match {
       case "evict" :: name :: Nil =>
         val n = ArtifactCache.evict(name)

@@ -64,15 +64,8 @@ object Report {
   def main(args: Array[String]): Unit = {
     val in = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "target/report_out/word_counts.tsv"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "50m") // CHUNK_BYTES analog
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Sessions.localFromEnv()
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "50m") // CHUNK_BYTES analog
     val t0 = System.nanoTime()
     // Hadoop FS, not java.io.File: the corpus dir may live on a DFS — the
     // same posture as the product layer (local paths resolve identically).

@@ -92,8 +92,7 @@ object Ship {
   def main(args: Array[String]): Unit = {
     val in = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "target/ship_out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Sessions.local(cpus)
+    val spark = graft.sources.Sessions.localFromEnv()
     val t0 = System.nanoTime()
     val counts = ship(spark, in, out)
     println(s"Shipped to $out: " + counts.toSeq.sortBy(_._1)

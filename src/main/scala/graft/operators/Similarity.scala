@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
@@ -132,8 +132,7 @@ object Similarity {
     * ranking is deterministic and oracle-reproducible (rule R3). */
   def bruteTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val c = corpus(s, d)
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+    val q = querySlice(c, nQueries)
     val scored = c.crossJoin(broadcast(q))
       .select(col("qid"), col("vec_id").as("cid"),
         e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
@@ -191,8 +190,7 @@ object Similarity {
   def hybridRrf(s: SparkSession, d: String, nQueries: Int = HybridNq,
       depth: Int = HybridDepth, k: Int = HybridTopK): DataFrame = {
     val c = corpus(s, d)
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+    val q = querySlice(c, nQueries)
     val wSem = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
     val sem = c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
@@ -283,9 +281,9 @@ object Similarity {
   // buys recall. Real systems train centroids with k-means; this engine
   // uses a deterministic coarse quantizer (the first nCells corpus vectors)
   // so the whole operator — assignment, probing, scoring — is reproducible
-  // in the DuckDB oracle. The IVF *shape* (broadcast centroids → linear
+  // in the DuckDB oracle. The IVF *shape* (driver-held centroids → linear
   // assignment scan → probe-cell equi-join) is exactly the production one;
-  // swapping in trained centroids changes only the `cents` frame.
+  // swapping in trained centroids changes only the centroid set.
   val IvfCells = 16
   val IvfProbe = 4
 
@@ -307,87 +305,132 @@ object Similarity {
       nCells: Int = IvfCells, nProbe: Int = IvfProbe): DataFrame = {
     // Corpus feeds assignment, scoring, and the query/centroid subsets.
     val c = hold(corpus(s, d))
-    val cents = c.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell_id"), col("v").as("cv"), col("nrm").as("cnrm"))
+    val cents = stubCentroids(c, nCells)
     graft.functions.Caching.releaseAfterAction(
-      probeAndScore(c, cents, stubAssignment(c, nCells), nQueries, k, nProbe),
+      probeAndScore(c, cents, withAssignedCell(c, cents), nQueries, k, nProbe),
       c)
   }
 
-  /** The stub quantizer's coarse assignment (vec_id, cell_id): the
-    * centroids are the first `nCells` corpus vectors, collected to the
-    * driver (nCells × Dim numbers) and unrolled by [[withAssignedCell]]
-    * — the one cell-assignment kernel every IVF path shares. */
-  private def stubAssignment(c: DataFrame, nCells: Int): DataFrame = {
-    val cents = c.filter(col("vec_id") < nCells).select("vec_id", "v")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    withAssignedCell(c, cents).select("vec_id", "cell_id")
+  /** The stub quantizer's centroids: the first `nCells` corpus vectors,
+    * collected to the driver (nCells × Dim numbers). */
+  private def stubCentroids(c: DataFrame, nCells: Int): Seq[(Long, Seq[Double])] =
+    c.filter(col("vec_id") < nCells).select("vec_id", "v").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
+
+  /** THE QUANTIZER KERNEL — the one nearest-centroid assignment of the
+    * vector tier. `cands` holds one (id, loss) per DRIVER-HELD centroid,
+    * the loss a column the caller builds with that centroid as a
+    * literal; the result is the winning struct(loss, id), the least() of
+    * one struct per centroid, so equal losses go to the lower id. Every
+    * assignment is this pure projection: the coarse cells
+    * ([[withAssignedCell]] over [[cellLoss]]), the stub and trained PQ
+    * codes and the OPQ error ([[pqCode]]) and the streaming encoder — no
+    * row expansion ×K, no per-(vector, subspace) shuffle, and the Lloyd
+    * sums ([[lloydStep]]) partial-aggregate straight off the projection.
+    * Ordering is IDENTICAL to the oracle's argmin aggregate: Spark's
+    * min(struct) updates through the same struct least(), the field-wise
+    * (loss, id) comparison. */
+  private[graft] def nearest(cands: Seq[(Long, Column)]): Column = {
+    require(cands.nonEmpty, "the quantizer kernel needs at least one centroid")
+    val structs = cands.map { case (id, loss) =>
+      struct(loss.as("loss"), lit(id).as("id"))
+    }
+    if (structs.size == 1) structs.head else least(structs: _*)
   }
 
-  /** Coarse assignment: one row per corpus vector — argmax over the
-    * centroids by e4-rounded cosine, ties to the lower cell id
-    * (identical ordering on both engines), as a PURE PROJECTION over
-    * DRIVER-HELD centroids (the stub quantizer collects its nCells
-    * vectors; the Lloyd loops hold the centroid table as a Seq between
-    * iterations): the per-cell cosines unroll to literal
-    * expressions and the argmax is one least() over (−sim_e4, cell_id)
-    * structs appended to the input frame. Replaces the r16 shape
-    * (crossJoin ×nCells expansion → per-vector argmin AGGREGATE → a
-    * corpus×corpus JOIN-BACK for the update sums): no row expansion, no
-    * per-vector shuffle, no join — the update step's per-cell sums then
-    * partial-aggregate map-side straight off this projection, so a Lloyd
-    * iteration shuffles nCells rows per task instead of the corpus
-    * (guide §2.3 "aggregate before you shuffle", §1.2 step 1).
-    * Ordering and arithmetic are IDENTICAL to the oracle's argmin
-    * aggregate: struct least() is the same (−e4 cosine, cell id)
-    * lexicographic comparison as a min-struct aggregate, and the
+  /** The coarse-cell loss: −(e4 cosine) of `v` (norm `nrm`) against a
+    * literal centroid, so the kernel's minimum is the argmax cosine. The
     * centroid norm is driver-computed with the same sequential
-    * accumulation order as the codegen dot product (acc += x_i·x_i,
-    * then Math.sqrt — both engines' sqrt is the correctly-rounded IEEE
-    * one), so the e4 cosine is bit-identical. */
+    * accumulation as the codegen dot product (acc += x_i·x_i, then
+    * Math.sqrt — both engines' sqrt is the correctly-rounded IEEE one),
+    * so the e4 cosine is bit-identical to the oracle's. */
+  private[graft] def cellLoss(v: Column, nrm: Column, cv: Seq[Double]): Column = {
+    val cnrm = math.sqrt(cv.foldLeft(0.0)((acc, x) => acc + x * x))
+    negate(e4(dotD(v, typedlit(cv)) / (nrm * lit(cnrm))))
+  }
+
+  /** Coarse assignment: the input frame (needs `v`, `nrm`) plus its
+    * nearest cell by e4 cosine, ties to the lower cell id — the
+    * [[nearest]] kernel over [[cellLoss]], appended as `cell_id` and its
+    * `sim_e4`. */
   private def withAssignedCell(c: DataFrame,
-      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    require(cents.nonEmpty, "withAssignedCell needs at least one centroid")
-    val structs = cents.sortBy(_._1).map { case (cell, cv) =>
-      val cnrm = math.sqrt(cv.foldLeft(0.0)((acc, x) => acc + x * x))
-      struct(
-        negate(e4(dotD(col("v"), typedlit(cv)) / (col("nrm") * lit(cnrm))))
-          .as("ns"),
-        lit(cell).as("cell_id"))
-    }
-    val mn = if (structs.size == 1) structs.head else least(structs: _*)
-    c.withColumn("mn", mn)
-      .withColumn("cell_id", col("mn.cell_id"))
-      .withColumn("sim_e4", negate(col("mn.ns")))
+      cents: Seq[(Long, Seq[Double])]): DataFrame =
+    c.withColumn("mn",
+        nearest(cents.map { case (cell, cv) => cell -> cellLoss(col("v"), col("nrm"), cv) }))
+      .withColumn("cell_id", col("mn.id"))
+      .withColumn("sim_e4", negate(col("mn.loss")))
       .drop("mn")
+
+  /** One LLOYD MEAN STEP — the update every k-means loop here shares:
+    * per key, the member count and the exact per-component sums of the
+    * integral vector column `x` (partial-aggregated map-side, one row per
+    * key per task), collected; each mean is one double division rounded
+    * half away from zero (DuckDB round() semantics), and a key with no
+    * members keeps its previous centroid. Returns `prev` in its own order
+    * with the means swapped in. */
+  private def lloydStep[K](assigned: DataFrame, keys: Seq[String], x: String,
+      dim: Int, prev: Seq[(K, Seq[Double])])(key: Row => K): Seq[(K, Seq[Double])] = {
+    val sums = (0 until dim).map(kk => sum(element_at(col(x), kk + 1)).as(s"s$kk"))
+    val n = keys.size
+    val means = assigned.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("cnt"), sums: _*).collect()
+      .map { r =>
+        val cnt = r.getLong(n)
+        key(r) -> (0 until dim).map { kk =>
+          val q = r.getAs[Number](n + 1 + kk).doubleValue / cnt
+          Math.copySign(Math.floor(Math.abs(q) + 0.5), q)
+        }
+      }.toMap
+    prev.map { case (k, p) => k -> means.getOrElse(k, p) }
+  }
+
+  /** The probe: each query's nProbe nearest cells by e4 cosine (ties to
+    * the lower cell id) over a (qid, qv, qn) query frame and driver-held
+    * (cell_id, cv) centroids, with the probe rank `pr` and the input
+    * columns kept. One definition for every IVF retrieval. */
+  private def probeCells(q: DataFrame, cents: Seq[(Long, Seq[Double])],
+      nProbe: Int): DataFrame = {
+    val ct = q.sparkSession.createDataFrame(cents).toDF("cell_id", "cv")
+      .withColumn("cnrm", l2Norm(col("cv")))
+    val wProbe = Window.partitionBy("qid").orderBy(desc("csim_e4"), asc("cell_id"))
+    q.crossJoin(broadcast(ct))
+      .withColumn("csim_e4",
+        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cnrm"))))
+      .withColumn("pr", row_number().over(wProbe).cast("long"))
+      .filter(col("pr") <= nProbe)
+  }
+
+  /** The (qid, qv, qn) query slice (vec_id < nQueries) of a normed frame. */
+  private def querySlice(c: DataFrame, nQueries: Int): DataFrame =
+    c.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+
+  /** Exact scoring of a (qid, cid) candidate or shortlist frame against
+    * the normed corpus `c`, ranked (sim_e4 desc, cid asc) to the top k —
+    * the last stage of every IVF/PQ retrieval. */
+  private def exactTopK(cand: DataFrame, c: DataFrame, nQueries: Int,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
+    cand
+      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
+      .join(broadcast(querySlice(c, nQueries)), "qid")
+      .select(col("qid"), col("cid"),
+        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .filter(col("rn") <= k)
+      .orderBy("qid", "rn")
   }
 
   /** Probe the nProbe nearest cells per query, exact-score only vectors in
     * probed cells, rank. Shared by the stub-quantizer and trained IVF. */
-  private def probeAndScore(c: DataFrame, cents: DataFrame, assign: DataFrame,
-      nQueries: Int, k: Int, nProbe: Int): DataFrame = {
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val wProbe = Window.partitionBy("qid").orderBy(desc("csim_e4"), asc("cell_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cell_id"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cnrm"))).as("csim_e4"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("qid"), col("cell_id"))
+  private def probeAndScore(c: DataFrame, cents: Seq[(Long, Seq[Double])],
+      assign: DataFrame, nQueries: Int, k: Int, nProbe: Int): DataFrame = {
+    val probes = probeCells(querySlice(c, nQueries), cents, nProbe)
+      .select("qid", "cell_id")
     val cand = assign.join(broadcast(probes), "cell_id")
       .select(col("qid"), col("vec_id").as("cid"))
       .distinct()
-    val scored = cand
-      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
-    scored
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy("qid", "rn")
+    exactTopK(cand, c, nQueries, k)
   }
 
   // Deterministic k-means training: fixed iteration count, fixed init (the
@@ -403,7 +446,7 @@ object Similarity {
     *  - cosine is scale-invariant, so the e6-scaled integer centroid vector
     *    is used directly (no divide-back, no float drift);
     *  - assignment/probing order by e4-rounded cosine with cell-id ties.
-    * Each iteration is the classic scale shape: broadcast centroids → one
+    * Each iteration is the classic scale shape: driver-held centroids → one
     * corpus pass (assignment) → per-cell aggregate; the driver holds only
     * nCells × Dim integers (k-means‖ would swap in here for huge nCells).
     * Cells that lose every member keep their previous centroid. Recall vs
@@ -411,28 +454,22 @@ object Similarity {
   def ivfTrainedTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       nCells: Int = IvfCells, nProbe: Int = IvfProbe,
       iters: Int = IvfKmeansIters): DataFrame = {
-    val (c, trained, centsRaw) = trainCoarse(s, d, nCells, iters)
+    val (c, cents) = trainCoarse(s, d, nCells, iters)
     graft.functions.Caching.releaseAfterAction(
-      probeAndScore(c, trained,
-        withAssignedCell(c, centsRaw).select("vec_id", "cell_id"),
-        nQueries, k, nProbe), c)
+      probeAndScore(c, cents, withAssignedCell(c, cents), nQueries, k, nProbe),
+      c)
   }
 
   /** The deterministic coarse k-means loop shared by [[ivfTrainedTopK]]
     * and [[kmeansClusters]]: returns the PERSISTED normed corpus (caller
-    * releases after its terminal action), the trained centroid frame
-    * (probe-sized consumers), and the raw driver-held centroids (the
-    * corpus-sized assignment passes unroll them — [[withAssignedCell]]).
-    * r17 iteration shape (guide §2.3/§1.2 step 1): the assignment is a
-    * literal-unrolled projection and the e6 quantization rides in the
-    * same select, so one Lloyd iteration = one corpus scan feeding a
-    * map-side-combined nCells-row aggregate — the r16 shape paid a
-    * crossJoin ×nCells expansion, a per-vector argmin shuffle AND a
-    * corpus×corpus join-back per iteration. Identical integer sums →
-    * identical centroids (oracle MATCH). */
+    * releases after its terminal action) and the trained driver-held
+    * centroids. One Lloyd iteration = one corpus scan through the
+    * [[nearest]] kernel with the e6 quantization in the same projection,
+    * feeding one [[lloydStep]] — a map-side-combined nCells-row
+    * aggregate. Identical integer sums → identical centroids (oracle
+    * MATCH). */
   private def trainCoarse(s: SparkSession, d: String, nCells: Int,
-      iters: Int): (DataFrame, DataFrame, Seq[(Long, Seq[Double])]) = {
-    import s.implicits._
+      iters: Int): (DataFrame, Seq[(Long, Seq[Double])]) = {
     val c = hold(corpus(s, d))
     // e6 fixed-point view for the exact-integer centroid sums.
     val ve6 = transform(col("v"), x => round(x * lit(1000000.0)).cast("long"))
@@ -440,27 +477,10 @@ object Similarity {
       .select(col("vec_id"), ve6.as("ve6"))
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).map(_.toDouble).toSeq)).toSeq
-    def centsDf(cs: Seq[(Long, Seq[Double])]): DataFrame =
-      cs.toDF("cell_id", "cv").withColumn("cnrm", l2Norm(col("cv")))
-    for (_ <- 1 to iters) {
-      val sums = (0 until Dim).map(kk =>
-        sum(element_at(col("ve6"), kk + 1)).as(s"s$kk"))
-      val rows = withAssignedCell(c, cents)
-        .select(col("cell_id"), ve6.as("ve6"))
-        .groupBy("cell_id")
-        .agg(count(lit(1)).as("cnt"), sums: _*).collect()
-      val updated = rows.map { r =>
-        val cnt = r.getLong(1)
-        val comps = (0 until Dim).map { kk =>
-          val q = r.getLong(2 + kk).toDouble / cnt
-          // round half away from zero — DuckDB round() semantics.
-          Math.copySign(Math.floor(Math.abs(q) + 0.5), q)
-        }
-        r.getLong(0) -> comps.toSeq
-      }.toMap
-      cents = cents.map { case (cell, prev) => (cell, updated.getOrElse(cell, prev)) }
-    }
-    (c, centsDf(cents), cents)
+    for (_ <- 1 to iters)
+      cents = lloydStep(withAssignedCell(c, cents).select(col("cell_id"), ve6.as("ve6")),
+        Seq("cell_id"), "ve6", Dim, cents)(_.getLong(0))
+    (c, cents)
   }
 
   /** FULL K-MEANS CLUSTERING as a product — the per-vector assignment
@@ -472,10 +492,11 @@ object Similarity {
     * within-cluster stage) — train once, emit the whole assignment.
     *
     * Scale shape: the training loop is the shared [[trainCoarse]]
-    * (broadcast centroids → one corpus pass → per-cell aggregate per
+    * (driver-held centroids → one corpus pass → per-cell aggregate per
     * round; driver holds nCells × Dim integers); the final assignment is
-    * one more broadcast-centroid pass (map-side argmax aggregate, no
-    * window), sizes are a cluster-count aggregate broadcast back. */
+    * one more corpus pass through the [[nearest]] kernel (a projection:
+    * no aggregate, no window), sizes are a cluster-count aggregate
+    * broadcast back. */
   def kmeansClusters(s: SparkSession, d: String, nCells: Int = IvfCells,
       iters: Int = IvfKmeansIters): DataFrame =
     kmeansAssignmentsShared(s, d, nCells, iters).orderBy("vec_id")
@@ -506,8 +527,8 @@ object Similarity {
   /** The unordered assignment computation — the build side of the product. */
   private def kmeansClustersRaw(s: SparkSession, d: String, nCells: Int,
       iters: Int): DataFrame = {
-    val (c, _, centsRaw) = trainCoarse(s, d, nCells, iters)
-    val asgn = hold(withAssignedCell(c, centsRaw)
+    val (c, cents) = trainCoarse(s, d, nCells, iters)
+    val asgn = hold(withAssignedCell(c, cents)
       .select(col("vec_id"), col("cell_id").as("cluster_id"), col("sim_e4")))
     val sizes = asgn.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     graft.functions.Caching.releaseAfterAction(
@@ -570,7 +591,8 @@ object Similarity {
     *     table entries (asymmetric distance computation) — integer sums of
     *     e4 values, so distributed order cannot perturb ranks.
     * Scale shape: the corpus streams ONCE through encoding against the
-    * broadcast codebook (M·K small dot products per vector, no shuffle);
+    * driver-held codebook (M·K small dot products per vector through the
+    * [[nearest]] kernel, no shuffle);
     * scoring shuffles only (qid, cid, partial) triples — the full vectors
     * never move after encoding, which is the entire point of PQ at 100 TB.
     * Cosine equivalence: vectors are pre-normalized, so inner-product ADC
@@ -578,35 +600,8 @@ object Similarity {
     * SimilaritySpec. */
   def pqTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       m: Int = PqM, kCents: Int = PqK): DataFrame = {
-    val sub = PqSubDim
-    val c = hold(corpus(s, d)
-      .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("vn")))
-    // (vec_id, m, xm): the M sub-vectors of each normalized vector.
-    def subVectors(df: DataFrame, idCol: String): DataFrame =
-      df.select(col("vec_id"), posexplode(
-          array((0 until m).map(i => slice(col("vn"), i * sub + 1, sub)): _*)))
-        .toDF(idCol, "m", "xm")
-    val subs = subVectors(c, "vec_id")
-    // Codebook: 128 rows (M × K), broadcast everywhere.
-    val cb = subVectors(c.filter(col("vec_id") < kCents), "j")
-      .select(col("j"), col("m"), col("xm").as("cm"))
-    // Encode: d²(x_m, c_mj) = ⟨x,x⟩ − 2⟨x,c⟩ + ⟨c,c⟩ in e4, argmin per
-    // (vec_id, m) with centroid-id ties — one linear corpus pass whose
-    // argmin partial-aggregates map-side (min over (d2, j) structs).
-    val codes = subs.join(broadcast(cb), "m")
-      .select(col("vec_id"), col("m"), col("j"),
-        e4(dotD(col("xm"), col("xm")) - lit(2.0) * dotD(col("xm"), col("cm"))
-          + dotD(col("cm"), col("cm"))).as("d2_e4"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("d2_e4"), col("j"))).as("mn"))
-      .select(col("vec_id"), col("m"), col("mn.j").as("j"))
-    // ADC lookup table: e4 inner products of each query sub-vector with
-    // every centroid — nQueries × M × K rows, broadcast.
-    val qtab = subVectors(c.filter(col("vec_id") < nQueries), "qid")
-      .select(col("qid"), col("m"), col("xm").as("qm"))
-      .join(broadcast(cb), "m")
-      .select(col("qid"), col("m"), col("j"),
-        e4(dotD(col("qm"), col("cm"))).as("t_e4"))
+    val subs = hold(subVectors(unitVectors(corpus(s, d)), col("vn"), "vec_id", m))
+    val (codes, qtab) = stubPq(subs, nQueries, kCents)
     // Score = Σ_m table[m][code_m]: an equi-join on (m, code) + one sum —
     // the compressed index is all that moves.
     val scored = codes.join(broadcast(qtab), Seq("m", "j"))
@@ -619,7 +614,66 @@ object Similarity {
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= k)
         .orderBy("qid", "rn"),
-      c)
+      subs)
+  }
+
+  /** (vec_id, vn): the unit-normalized view of a (vec_id, v, nrm) frame. */
+  private def unitVectors(c: DataFrame): DataFrame =
+    c.select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("vn"))
+
+  /** (idCol, m, xm): the M contiguous sub-vectors of the vector column
+    * `vec`, one row per (vector, subspace). */
+  private def subVectors(df: DataFrame, vec: Column, idCol: String,
+      m: Int): DataFrame =
+    df.select(col("vec_id"), posexplode(
+        array((0 until m).map(i => slice(vec, i * PqSubDim + 1, PqSubDim)): _*)))
+      .toDF(idCol, "m", "xm")
+
+  /** A (j, m, xm) sub-vector frame collected as a driver-held codebook
+    * (m, j, cm), in (j, m) order. */
+  private def toBook(subs: DataFrame): Seq[(Long, Long, Seq[Double])] =
+    subs.select(col("m").cast("long"), col("j"), col("xm")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toSeq))
+      .sortBy(t => (t._2, t._1)).toSeq
+
+  /** The PQ code of a sub-vector in subspace `m` (a column: the row's
+    * subspace in long form, or a literal for a wide encode) against the
+    * driver-held codebook `cb`: the [[nearest]] kernel over one
+    * `loss(cm)` per code j, where cm is that code's centroid in subspace
+    * `m`, picked from a per-code literal table (a literal `m` folds to
+    * the plain literal centroid). */
+  private[graft] def pqCode(cb: Seq[(Long, Long, Seq[Double])], m: Column,
+      loss: Column => Column): Column =
+    nearest(cb.groupBy(_._2).toSeq.sortBy(_._1).map { case (j, rows) =>
+      val byM = rows.sortBy(_._1)
+      require(byM.map(_._1) == byM.indices.map(_.toLong),
+        s"code $j must have a centroid in every subspace 0..M-1")
+      j -> loss(element_at(typedlit(byM.map(_._3)), m + 1))
+    })
+
+  /** The stub PQ loss: d²(x, cm) = ⟨x,x⟩ − 2⟨x,cm⟩ + ⟨cm,cm⟩ in e4,
+    * left a double (integral, so it orders as its long would): a cast
+    * per centroid would grow the kernel's generated method. */
+  private def l2E4(x: Column)(cm: Column): Column =
+    round((dotD(x, x) - lit(2.0) * dotD(x, cm) + dotD(cm, cm)) * lit(10000))
+
+  /** The stub PQ stage over a persisted (vec_id, m, xm) sub-vector frame
+    * of unit vectors, shared by [[pqTopK]] and [[ivfPqTopK]]: the
+    * codebook is the sub-vectors of the first kCents vectors, collected
+    * (M × K rows); `codes` (vec_id, m, j) encode every sub-vector through
+    * the [[nearest]] kernel under [[l2E4]] (one projection, no shuffle);
+    * `qtab` (qid, m, j, t_e4) is the ADC lookup table of e4 inner
+    * products, nQueries × M × K rows. */
+  private def stubPq(subs: DataFrame, nQueries: Int,
+      kCents: Int): (DataFrame, DataFrame) = {
+    val cb = toBook(subs.filter(col("vec_id") < kCents).withColumnRenamed("vec_id", "j"))
+    val codes = subs.select(col("vec_id"), col("m"),
+      pqCode(cb, col("m"), l2E4(col("xm"))).getField("id").as("j"))
+    val qtab = subs.filter(col("vec_id") < nQueries).withColumnRenamed("vec_id", "qid")
+      .join(broadcast(cbDf(subs.sparkSession, cb)), "m")
+      .select(col("qid"), col("m"), col("j"),
+        e4(dotD(col("xm"), col("cm"))).as("t_e4"))
+    (codes, qtab)
   }
 
   // ---- OPQ, dimension-allocation variant (Ge et al. 2013, "Optimized
@@ -676,9 +730,10 @@ object Similarity {
     *
     * Scale shape: the allocation is a Dim-row driver model off one
     * exact moments pass; each layout's error pass streams the corpus
-    * once against a broadcast codebook — the [[pqTopK]] shape, and the
-    * gathered sub-vectors are built by `element_at` projection (no
-    * explode/regroup shuffle of the corpus). */
+    * once through the [[nearest]] kernel against the collected
+    * codebook — the [[pqTopK]] shape, and the gathered sub-vectors are
+    * built by `element_at` projection (no regroup shuffle of the
+    * corpus). */
   def opqAllocationEval(s: SparkSession, d: String): DataFrame =
     opqAllocationEvalDf(corpus(s, d))
 
@@ -712,17 +767,12 @@ object Similarity {
           array((0 until m).map(k => array(asg(k).map(dd =>
             element_at(col("vn"), dd + 1)): _*)): _*)))
         .toDF(idCol, "m", "xm")
+    // each (vector, subspace) contributes its kernel-minimum loss
     def errFor(layout: String, asg: Map[Int, Seq[Int]]): DataFrame = {
-      val subs = subVectorsBy(asg, "vec_id", cn)
-      val cb = subVectorsBy(asg, "j", cn.filter(col("vec_id") < kCents))
-        .select(col("j"), col("m"), col("xm").as("cm"))
-      subs.join(broadcast(cb), "m")
-        .select(col("vec_id"), col("m"),
-          e4(dotD(col("xm"), col("xm")) - lit(2.0) * dotD(col("xm"), col("cm"))
-            + dotD(col("cm"), col("cm"))).as("d2_e4"))
-        .groupBy("vec_id", "m")
-        .agg(min(col("d2_e4")).as("mn"))
-        .agg(sum("mn").as("total_err_e4"))
+      val cb = toBook(subVectorsBy(asg, "j", cn.filter(col("vec_id") < kCents)))
+      subVectorsBy(asg, "vec_id", cn)
+        .select(pqCode(cb, col("m"), l2E4(col("xm"))).getField("loss").as("mn"))
+        .agg(sum("mn").cast("long").as("total_err_e4"))
         .select(lit(layout).as("layout"), col("total_err_e4"))
     }
     // scale-free imbalance off the driver model (exact BigInt arithmetic;
@@ -762,59 +812,22 @@ object Similarity {
   def ivfPqTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       nCells: Int = IvfCells, nProbe: Int = IvfProbe,
       m: Int = PqM, kCents: Int = PqK, rerank: Int = PqRerank): DataFrame = {
-    val sub = PqSubDim
     val c = hold(corpus(s, d))
-    val cents = c.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val assign = stubAssignment(c, nCells)
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val wProbe = Window.partitionBy("qid").orderBy(desc("csim_e4"), asc("cell_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cell_id"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cnrm"))).as("csim_e4"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("qid"), col("cell_id"))
-    val cand = assign.join(broadcast(probes), "cell_id")
+    val cents = stubCentroids(c, nCells)
+    val probes = probeCells(querySlice(c, nQueries), cents, nProbe)
+      .select("qid", "cell_id")
+    val cand = withAssignedCell(c, cents).join(broadcast(probes), "cell_id")
       .select(col("qid"), col("vec_id").as("cid")).distinct()
-    val cn = c.select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("vn"))
-    def subVectors(df: DataFrame, idCol: String): DataFrame =
-      df.select(col("vec_id"), posexplode(
-          array((0 until m).map(i => slice(col("vn"), i * sub + 1, sub)): _*)))
-        .toDF(idCol, "m", "xm")
-    val cb = subVectors(cn.filter(col("vec_id") < kCents), "j")
-      .select(col("j"), col("m"), col("xm").as("cm"))
-    val codes = subVectors(cn, "vec_id").join(broadcast(cb), "m")
-      .select(col("vec_id"), col("m"), col("j"),
-        e4(dotD(col("xm"), col("xm")) - lit(2.0) * dotD(col("xm"), col("cm"))
-          + dotD(col("cm"), col("cm"))).as("d2_e4"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("d2_e4"), col("j"))).as("mn"))
-      .select(col("vec_id").as("cid"), col("m"), col("mn.j").as("j"))
-    val qtab = subVectors(cn.filter(col("vec_id") < nQueries), "qid")
-      .select(col("qid"), col("m"), col("xm").as("qm"))
-      .join(broadcast(cb), "m")
-      .select(col("qid"), col("m"), col("j"),
-        e4(dotD(col("qm"), col("cm"))).as("t_e4"))
-    val adc = cand.join(codes, "cid")
+    val subs = hold(subVectors(unitVectors(c), col("vn"), "vec_id", m))
+    val (codes, qtab) = stubPq(subs, nQueries, kCents)
+    val adc = cand.join(codes.withColumnRenamed("vec_id", "cid"), "cid")
       .join(broadcast(qtab), Seq("qid", "m", "j"))
       .groupBy("qid", "cid").agg(sum("t_e4").as("approx_e4"))
     val wShort = Window.partitionBy("qid").orderBy(desc("approx_e4"), asc("cid"))
     val short = adc.withColumn("srn", row_number().over(wShort))
       .filter(col("srn") <= rerank).select("qid", "cid")
-    val x = c.select(col("vec_id").as("cid"), col("v").as("xv"), col("nrm").as("xn"))
-    val y = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("yv"), col("nrm").as("yn"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
     graft.functions.Caching.releaseAfterAction(
-      short.join(x, "cid").join(broadcast(y), "qid")
-        .select(col("qid"), col("cid"),
-          e4(dotD(col("xv"), col("yv")) / (col("xn") * col("yn"))).as("sim_e4"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= k)
-        .orderBy("qid", "rn"),
-      c)
+      exactTopK(short, c, nQueries, k), c, subs)
   }
 
   /** IVF-PQ with BOTH stages TRAINED and per-cell RESIDUAL encoding — the
@@ -858,94 +871,59 @@ object Similarity {
       eta: Int = PqEta): DataFrame = {
     val (cents, cb, full, nv, af, rsubs) =
       ivfPqTrainedModel(s, d, nCells, m, kCents, ivfIters, pqIters, eta)
-    val codes = residualEncode(rsubs, cbDf(s, cb), eta)
-    ivfPqTrainedQuery(s, cents, cb, full, nv, af, codes,
+    ivfPqTrainedQuery(s, cents, cb, full, nv, af, residualCodes(rsubs, cb, eta),
       nQueries, k, nProbe, m, rerank, Seq(full, nv, rsubs, af))
   }
 
   /** The trained IVF-PQ MODEL alone — both k-means loops run to
     * completion; returns the driver-sized artifacts (coarse centroids,
     * residual codebook) plus the persisted corpus frames the batch query
-    * keeps using (full, e4-normalized nv, final assignment af, residual
-    * sub-vectors rsubs). Callers that only want the artifacts (e.g. the
-    * streaming ingest twin, which serves them broadcast) must unpersist
-    * the frames. */
+    * keeps using (full, e4-normalized nv, final assignment af — with its
+    * residuals, [[withResidual]] — and the residual sub-vectors rsubs).
+    * Callers that only want the artifacts (e.g. the streaming ingest
+    * twin, which serves them as literals) must unpersist the frames. */
   private[graft] def ivfPqTrainedModel(s: SparkSession, d: String,
       nCells: Int = IvfCells, m: Int = PqM, kCents: Int = PqK,
       ivfIters: Int = IvfKmeansIters, pqIters: Int = PqKmeansIters,
       eta: Int = PqEta): (Seq[(Long, Seq[Double])],
         Seq[(Long, Long, Seq[Double])], DataFrame, DataFrame, DataFrame,
         DataFrame) = {
-    import s.implicits._
     val sub = PqSubDim
     val full = hold(corpus(s, d))
     // e4-quantized normalized corpus; its own L2 norm feeds e4 cosine.
     val nv = hold(e4Normalized(full))
-    // ---- stage 1: trained coarse quantizer (Lloyd, e4 integer domain).
-    var cents: Seq[(Long, Seq[Double])] = nv.filter(col("vec_id") < nCells)
-      .select("vec_id", "v").orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    def centsDf(cs: Seq[(Long, Seq[Double])]): DataFrame =
-      cs.toDF("cell_id", "cv").withColumn("cnrm", l2Norm(col("cv")))
-    for (_ <- 1 to ivfIters) {
-      // Literal-unrolled assignment + map-side per-cell sums: one corpus
-      // scan per Lloyd iteration, no crossJoin expansion, no argmin
-      // shuffle, no corpus×corpus join-back (guide §2.3, §1.2 step 1 —
-      // same shape as [[trainCoarse]]; identical sums → identical
-      // centroids).
-      val sums = (0 until Dim).map(kk =>
-        sum(element_at(col("v"), kk + 1)).as(s"s$kk"))
-      val rows = withAssignedCell(nv, cents).groupBy("cell_id")
-        .agg(count(lit(1)).as("cnt"), sums: _*).collect()
-      val updated = rows.map { r =>
-        val cnt = r.getLong(1)
-        val comps = (0 until Dim).map { kk =>
-          val q = r.getDouble(2 + kk) / cnt
-          Math.copySign(Math.floor(Math.abs(q) + 0.5), q) // round half away
-        }
-        r.getLong(0) -> comps.toSeq
-      }.toMap
-      cents = cents.map { case (cell, prev) => (cell, updated.getOrElse(cell, prev)) }
-    }
-    val ct = centsDf(cents)
-    // Final assignment feeds BOTH the residual computation (via rsubs) and
-    // the candidate join in the terminal action — persist it so the
-    // corpus-×-centroids argmin runs once, not twice.
-    val af = hold(withAssignedCell(nv, cents).select("vec_id", "cell_id"))
-    // ---- stage 2: residuals + their e3 anisotropy direction sub-vectors.
-    val resid = nv.join(af, "vec_id")
-      .join(broadcast(ct.select("cell_id", "cv")), "cell_id")
-      .select(col("vec_id"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"), col("v"))
-    val rsubs = hold(resid.select(col("vec_id"), posexplode(
+    // ---- stage 1: trained coarse quantizer (Lloyd, e4 integer domain),
+    // the [[trainCoarse]] loop over nv.
+    var cents = stubCentroids(nv, nCells)
+    for (_ <- 1 to ivfIters)
+      cents = lloydStep(withAssignedCell(nv, cents), Seq("cell_id"), "v", Dim,
+        cents)(_.getLong(0))
+    // Final assignment + residuals feed BOTH rsubs and the candidate join
+    // in the terminal action — persist them so the kernel runs once.
+    val af = hold(withResidual(nv, cents))
+    // ---- stage 2: residual sub-vectors + their e3 anisotropy directions.
+    val rsubs = hold(af.select(col("vec_id"), posexplode(
         array((0 until m).map(i => struct(
           slice(col("r"), i * sub + 1, sub).as("rm"),
-          transform(slice(col("v"), i * sub + 1, sub),
-            x => round(x / lit(10.0))).as("xq"))): _*)))
+          slice(col("xq"), i * sub + 1, sub).as("xq"))): _*)))
       .select(col("vec_id"), col("pos").as("m"),
         col("col.rm").as("rm"), col("col.xq").as("xq")))
-    var cb: Seq[(Long, Long, Seq[Double])] = rsubs.filter(col("vec_id") < kCents)
-      .select("vec_id", "m", "rm").orderBy("vec_id", "m").collect()
-      .map(r => (r.getInt(1).toLong, r.getLong(0), r.getSeq[Double](2).toSeq)).toSeq
-    for (_ <- 1 to pqIters) {
-      val asgn = residualEncode(rsubs, cbDf(s, cb), eta)
-      val sums = (0 until sub).map(kk =>
-        sum(element_at(col("rm"), kk + 1)).as(s"s$kk"))
-      val rows = asgn.join(rsubs, Seq("vec_id", "m")).groupBy("m", "j")
-        .agg(count(lit(1)).as("cnt"), sums: _*).collect()
-      val updated = rows.map { r =>
-        val cnt = r.getLong(2)
-        val comps = (0 until sub).map { kk =>
-          val q = r.getDouble(3 + kk) / cnt
-          Math.copySign(Math.floor(Math.abs(q) + 0.5), q)
-        }
-        (r.getInt(0).toLong, r.getLong(1)) -> comps.toSeq
-      }.toMap
-      cb = cb.map { case (mm, j, prev) =>
-        (mm, j, updated.getOrElse((mm, j), prev)) }
-    }
-    (cents, cb, full, nv, af, rsubs)
+    (cents, trainCodebook(rsubs, "rm", "xq", kCents, pqIters, eta),
+      full, nv, af, rsubs)
   }
+
+  /** IVF-PQ residual wiring, shared by the batch model and the streaming
+    * encoder: the e4-normalized frame `c` (needs `v`, `nrm`) plus its
+    * nearest cell ([[withAssignedCell]]), the exact residual
+    * r = v − c(cell) and the e3 anisotropy direction xq = round(v / 10)
+    * (x rides at e3 so the 64-bit loss cannot overflow — see
+    * [[ivfPqTrainedTopK]]). */
+  private[graft] def withResidual(c: DataFrame,
+      cents: Seq[(Long, Seq[Double])]): DataFrame =
+    withAssignedCell(c, cents)
+      .withColumn("r", zip_with(col("v"),
+        element_at(typedlit(cents.toMap), col("cell_id")), (a, b) => a - b))
+      .withColumn("xq", transform(col("v"), x => round(x / lit(10.0))))
 
   private def cbDf(s: SparkSession,
       cs: Seq[(Long, Long, Seq[Double])]): DataFrame = {
@@ -953,23 +931,52 @@ object Similarity {
     cs.toDF("m", "j", "cm")
   }
 
-  /** Anisotropic residual encode — same argmin-aggregate plan shape as
-    * pqTrainedScored's, with e = rm − cm measured against direction xq.
-    * Input needs (vec_id, m, rm, xq); codebook (m, j, cm). */
-  private def residualEncode(rsubs: DataFrame, codebook: DataFrame,
-      eta: Int): DataFrame =
-    rsubs.join(broadcast(codebook), "m")
-      .select(col("vec_id"), col("m"), col("j"),
-        (dotD(col("rm"), col("rm")) - lit(2.0) * dotD(col("rm"), col("cm"))
-          + dotD(col("cm"), col("cm"))).as("d2"),
-        (dotD(col("rm"), col("xq")) - dotD(col("cm"), col("xq"))).as("ex"),
-        dotD(col("xq"), col("xq")).as("xx"))
-      .withColumn("loss",
-        lit((eta - 1).toLong) * col("ex").cast("long") * col("ex").cast("long") +
-          col("xx").cast("long") * col("d2").cast("long"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("loss"), col("j"))).as("mn"))
-      .select(col("vec_id"), col("m"), col("mn.j").as("j"))
+  /** The anisotropic (score-aware, ScaNN) encode loss of residual `r`
+    * against centroid `cm`, measured along direction `xq`, exact in
+    * 64-bit integers: with e = r − cm,
+    *   L = (η−1)·⟨e,xq⟩² + ⟨xq,xq⟩·⟨e,e⟩
+    * — the component along xq (which shifts every inner product ⟨q, ·⟩
+    * for queries near x, the MIPS-relevant error) weighted η× the
+    * orthogonal one, scaled by ‖xq‖² to stay integral. The trained PQ
+    * passes r = xq = x; IVF-PQ passes the cell residual and x at e3.
+    * η = 1 degenerates to MSE·‖xq‖², whose argmin is plain MSE's (‖xq‖²
+    * is constant per sub-vector). Bounds in [[pqTrainedTopK]]. */
+  private[graft] def anisoLoss(r: Column, xq: Column, eta: Int)(cm: Column): Column = {
+    val d2 = dotD(r, r) - lit(2.0) * dotD(r, cm) + dotD(cm, cm)
+    val ex = dotD(r, xq) - dotD(xq, cm)
+    lit((eta - 1).toLong) * ex.cast("long") * ex.cast("long") +
+      dotD(xq, xq).cast("long") * d2.cast("long")
+  }
+
+  /** `subs` — long form (vec_id, m, <x>, <xq>) — plus `j`, each
+    * sub-vector's code under [[anisoLoss]]: one projection through the
+    * [[nearest]] kernel. */
+  private def anisoCodes(subs: DataFrame, x: String, xq: String,
+      cb: Seq[(Long, Long, Seq[Double])], eta: Int): DataFrame =
+    subs.withColumn("j",
+      pqCode(cb, col("m"), anisoLoss(col(x), col(xq), eta)).getField("id"))
+
+  /** The residual index's long-form codes (vec_id, m, j). */
+  private def residualCodes(rsubs: DataFrame,
+      cb: Seq[(Long, Long, Seq[Double])], eta: Int): DataFrame =
+    anisoCodes(rsubs, "rm", "xq", cb, eta).select("vec_id", "m", "j")
+
+  /** Per-subspace anisotropic Lloyd over a long-form sub-vector frame —
+    * the trained codebook of [[pqTrainedTopK]] (x = xq) and of the IVF-PQ
+    * residuals: init = the first kCents vectors' sub-vectors, and each
+    * round encodes through the kernel ([[anisoCodes]]) and takes one
+    * [[lloydStep]] per (m, j) straight off that projection. */
+  private def trainCodebook(subs: DataFrame, x: String, xq: String,
+      kCents: Int, iters: Int, eta: Int): Seq[(Long, Long, Seq[Double])] = {
+    var cb = toBook(subs.filter(col("vec_id") < kCents)
+      .select(col("vec_id").as("j"), col("m"), col(x).as("xm")))
+    for (_ <- 1 to iters)
+      cb = lloydStep(anisoCodes(subs, x, xq, cb, eta), Seq("m", "j"), x,
+          PqSubDim, cb.map(t => (t._1, t._2) -> t._3))(
+          r => (r.getInt(0).toLong, r.getLong(1)))
+        .map { case ((mm, j), cm) => (mm, j, cm) }
+    cb
+  }
 
   /** The trained serving INDEX itself — one row per corpus vector with
     * its assigned coarse cell and the M residual PQ codes: exactly what a
@@ -985,9 +992,8 @@ object Similarity {
       pqIters: Int = PqKmeansIters, eta: Int = PqEta): DataFrame = {
     val (_, cb, full, nv, af, rsubs) =
       ivfPqTrainedModel(s, d, nCells, m, kCents, ivfIters, pqIters, eta)
-    val codes = residualEncode(rsubs, cbDf(s, cb), eta)
     graft.functions.Caching.releaseAfterAction(
-      trainedIndexDf(af, codes, m), full, nv, af, rsubs)
+      trainedIndexDf(af, residualCodes(rsubs, cb, eta), m), full, nv, af, rsubs)
   }
 
   /** The serving-index CONTENT from the PERSISTED artifact — what the
@@ -1031,25 +1037,11 @@ object Similarity {
       full: DataFrame, nv: DataFrame, af: DataFrame, codes: DataFrame,
       nQueries: Int, k: Int, nProbe: Int, m: Int, rerank: Int,
       cached: Seq[DataFrame]): DataFrame = {
-    import s.implicits._
-    val sub = PqSubDim
-    val ct = cents.toDF("cell_id", "cv").withColumn("cnrm", l2Norm(col("cv")))
-    val qsubs = nv.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), posexplode(
-        array((0 until m).map(i => slice(col("v"), i * sub + 1, sub)): _*)))
-      .toDF("qid", "m", "qm")
-    val qtab = qsubs.join(broadcast(cbDf(s, cb)), "m")
-      .select(col("qid"), col("m"), col("j"), dotD(col("qm"), col("cm")).as("t"))
-    val wProbe = Window.partitionBy("qid").orderBy(desc("csim_e4"), asc("cell_id"))
-    val probes = nv.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-      .crossJoin(broadcast(ct))
-      .select(col("qid"), col("cell_id"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cnrm"))).as("csim_e4"),
-        dotD(col("qv"), col("cv")).as("pdot"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("qid"), col("cell_id"), col("pdot"))
+    val qtab = subVectors(nv.filter(col("vec_id") < nQueries), col("v"), "qid", m)
+      .join(broadcast(cbDf(s, cb)), "m")
+      .select(col("qid"), col("m"), col("j"), dotD(col("xm"), col("cm")).as("t"))
+    val probes = probeCells(querySlice(nv, nQueries), cents, nProbe)
+      .select(col("qid"), col("cell_id"), dotD(col("qv"), col("cv")).as("pdot"))
     val cand = af.join(broadcast(probes), "cell_id")
       .select(col("qid"), col("vec_id").as("cid"), col("pdot"))
     val adc = cand.join(codes.withColumnRenamed("vec_id", "cid"), "cid")
@@ -1060,18 +1052,8 @@ object Similarity {
     val wShort = Window.partitionBy("qid").orderBy(desc("approx"), asc("cid"))
     val short = adc.withColumn("srn", row_number().over(wShort))
       .filter(col("srn") <= rerank).select("qid", "cid")
-    val q = full.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
-    val ranked =
-      short.join(full.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-        .join(broadcast(q), "qid")
-        .select(col("qid"), col("cid"),
-          e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= k)
-        .orderBy("qid", "rn")
-    graft.functions.Caching.releaseAfterAction(ranked, cached: _*)
+    graft.functions.Caching.releaseAfterAction(
+      exactTopK(short, full, nQueries, k), cached: _*)
   }
 
   /** Resolve (and build on miss) the persisted index for corpus `d`:
@@ -1311,8 +1293,7 @@ object Similarity {
     val (cents, cb, full, nv, af, rsubs) =
       ivfPqTrainedModel(s, d, nCells, m, kCents, ivfIters, pqIters, eta)
     try {
-      val codes = residualEncode(rsubs, cbDf(s, cb), eta)
-      trainedIndexDf(af, codes, m)
+      trainedIndexDf(af, residualCodes(rsubs, cb, eta), m)
         .write.mode("overwrite").parquet(s"$out/index")
       cents.toDF("cell_id", "cv")
         .coalesce(1).write.mode("overwrite").parquet(s"$out/centroids")
@@ -1372,10 +1353,10 @@ object Similarity {
   }
 
   /** The e4-quantized normalized view of a (vec_id, v, nrm) frame — ONE
-    * definition shared by the trained model build and the served query
-    * slice, so serve-time quantization can never drift from the encode
-    * that built the index it serves. */
-  private def e4Normalized(c: DataFrame): DataFrame =
+    * definition shared by the trained model build, the served query
+    * slice and the streaming encoder, so serve-time quantization can
+    * never drift from the encode that built the index it serves. */
+  private[graft] def e4Normalized(c: DataFrame): DataFrame =
     c.select(col("vec_id"),
         transform(col("v"), x => round(x / col("nrm") * lit(10000.0))).as("v"))
       .withColumn("nrm", l2Norm(col("v")))
@@ -1388,8 +1369,9 @@ object Similarity {
   val PqRerank = 25
   /** Anisotropic assignment weight η (ScaNN, Guo et al. 2020): the parallel
     * residual component is weighted η× the orthogonal one in the encoding
-    * loss. η = 1 is plain MSE; the shipped value is picked by the measured
-    * raw-ADC recall sweep in Scratch (documented at [[pqTrainedTopK]]). */
+    * loss. η = 1 is plain MSE; the shipped value is picked by a measured
+    * raw-ADC recall sweep over η (its numbers are at [[pqTrainedTopK]];
+    * [[pqTrainedAdcTopK]] is the surface to re-run it on). */
   val PqEta = 2
 
   /** PQ with a TRAINED codebook and an exact re-rank stage — the full
@@ -1407,9 +1389,10 @@ object Similarity {
     *    round-half-away; empty codes keep their previous centroid.
     * Driver state is the M×K×SubDim codebook — 1 K integers here, and
     * still only M·K·SubDim at billion-vector scale (k-means‖ swaps in for
-    * the init if K grows). Each iteration is one corpus pass against the
-    * broadcast codebook + one M·K-row aggregate — identical profile to
-    * production PQ training (OPQ/IVF-PQ add rotations, same loop).
+    * the init if K grows). Each iteration is one corpus pass through the
+    * [[nearest]] kernel against the driver-held codebook + one M·K-row
+    * aggregate ([[lloydStep]]) — identical profile to production PQ
+    * training (OPQ/IVF-PQ add rotations, same loop).
     *
     * The assignment loss is ANISOTROPIC (ScaNN — Guo et al. 2020,
     * arXiv:1908.10396): plain MSE training is not inner-product-rank
@@ -1449,25 +1432,12 @@ object Similarity {
       .filter(col("srn") <= rerank)
       .select("qid", "cid")
     // Exact re-rank: only nQueries × rerank vectors are ever read back.
-    val full = corpus(s, d)
-    val q = full.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact = shortlist
-      .join(full.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
     graft.functions.Caching.releaseAfterAction(
-      exact
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= k)
-        .orderBy("qid", "rn"),
-      subs)
+      exactTopK(shortlist, corpus(s, d), nQueries, k), subs)
   }
 
   /** Raw trained-ADC ranking (no re-rank) — the measurement surface
-    * SimilaritySpec and the eta sweep use to compare codebook quality
+    * SimilaritySpec and an η sweep use to compare codebook quality
     * directly. Same training + encoding as [[pqTrainedTopK]]. */
   private[graft] def pqTrainedAdcTopK(s: SparkSession, d: String,
       nQueries: Int = 10, k: Int = 5, m: Int = PqM, kCents: Int = PqK,
@@ -1484,78 +1454,27 @@ object Similarity {
 
   /** Training + encoding + ADC scoring core shared by the re-ranked and
     * raw retrievers: returns (scored = qid/cid/approx, the persisted
-    * sub-vector frame for the caller to release after its action). */
+    * sub-vector frame for the caller to release after its action).
+    * Assignment is the anisotropic loss ([[anisoLoss]] with r = xq = x)
+    * through the [[nearest]] kernel — a projection of the persisted
+    * sub-vectors, so neither an encode nor a Lloyd round shuffles per
+    * (vector, subspace) or joins codes back to their sub-vectors. At the
+    * e4 scale every loss term stays under 2^63 (see [[pqTrainedTopK]]),
+    * so the comparison runs in plain LONG arithmetic — the DuckDB oracle
+    * mirrors it with overflow-checked BIGINT. */
   private def pqTrainedScored(s: SparkSession, d: String, nQueries: Int,
       m: Int, kCents: Int, iters: Int, eta: Int): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val sub = PqSubDim
-    val c = corpus(s, d)
-      .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("vn"))
     // (vec_id, m, xm): e4-quantized sub-vectors, integral doubles.
-    val subs = hold(c.select(col("vec_id"), posexplode(
-        array((0 until m).map(i => transform(
-          slice(col("vn"), i * sub + 1, sub),
-          x => round(x * lit(10000.0)).cast("double"))): _*)))
-      .toDF("vec_id", "m", "xm"))
-    var cb: Seq[(Long, Long, Seq[Double])] = subs.filter(col("vec_id") < kCents)
-      .orderBy("vec_id", "m").collect()
-      .map(r => (r.getInt(1).toLong, r.getLong(0), r.getSeq[Double](2).toSeq)).toSeq
-    def cbDf(cs: Seq[(Long, Long, Seq[Double])]): DataFrame =
-      cs.toDF("m", "j", "cm")
-    // Anisotropic (score-aware) assignment, exact in 64-bit integers:
-    // residual e = x − c splits into a component along x (which shifts
-    // every inner product ⟨q, ·⟩ for queries near x — the MIPS-relevant
-    // error) and an orthogonal one; the ScaNN loss up-weights the first.
-    // Scaled by ‖x‖² to stay integral:
-    //   L = (η−1)·⟨e,x⟩² + ⟨x,x⟩·⟨e,e⟩
-    // with ⟨e,x⟩ = ⟨x,x⟩−⟨x,c⟩. At the e4 scale every term and the full
-    // loss stay under 2^63 (see the class doc), so the comparison runs in
-    // plain LONG arithmetic — the DuckDB oracle mirrors with
-    // overflow-checked BIGINT. η = 1 degenerates to MSE·‖x‖², whose
-    // argmin matches plain MSE (‖x‖² is constant within a (vec_id, m)
-    // group).
-    // The argmin is a partial-aggregatable min over (loss, j) struct pairs
-    // (field-wise ordering = loss first, centroid-id tie-break) — a
-    // map-side-combining HashAggregate, NOT a row_number window: the
-    // window formulation shuffle-SORTED all n·M·K scored rows per encode
-    // pass, which dominated the trained-PQ cost.
-    def encode(codebook: DataFrame): DataFrame =
-      subs.join(broadcast(codebook), "m")
-        .select(col("vec_id"), col("m"), col("j"),
-          (dotD(col("xm"), col("xm")) - lit(2.0) * dotD(col("xm"), col("cm"))
-            + dotD(col("cm"), col("cm"))).as("d2"),
-          (dotD(col("xm"), col("xm")) - dotD(col("xm"), col("cm"))).as("ex"),
-          dotD(col("xm"), col("xm")).as("xx"))
-        .withColumn("loss",
-          lit((eta - 1).toLong) * col("ex").cast("long") * col("ex").cast("long") +
-            col("xx").cast("long") * col("d2").cast("long"))
-        .groupBy("vec_id", "m")
-        .agg(min(struct(col("loss"), col("j"))).as("mn"))
-        .select(col("vec_id"), col("m"), col("mn.j").as("j"))
-    for (_ <- 1 to iters) {
-      val asgn = encode(cbDf(cb))
-      val sums = (0 until sub).map(kk =>
-        sum(element_at(col("xm"), kk + 1)).as(s"s$kk"))
-      val rows = asgn.join(subs, Seq("vec_id", "m")).groupBy("m", "j")
-        .agg(count(lit(1)).as("cnt"), sums: _*).collect()
-      val updated = rows.map { r =>
-        val cnt = r.getLong(2)
-        val comps = (0 until sub).map { kk =>
-          val q = r.getDouble(3 + kk) / cnt
-          Math.copySign(Math.floor(Math.abs(q) + 0.5), q) // round half away
-        }
-        (r.getInt(0).toLong, r.getLong(1)) -> comps.toSeq
-      }.toMap
-      cb = cb.map { case (mm, j, prev) =>
-        (mm, j, updated.getOrElse((mm, j), prev)) }
-    }
-    val trained = cbDf(cb)
-    val codes = encode(trained)
+    val subs = hold(subVectors(unitVectors(corpus(s, d)),
+      transform(col("vn"), x => round(x * lit(10000.0)).cast("double")),
+      "vec_id", m))
+    val cb = trainCodebook(subs, "xm", "xm", kCents, iters, eta)
+    val codes = anisoCodes(subs, "xm", "xm", cb, eta)
     // ADC in the e4 integer domain: table entries and scores are exact
     // e8-unit integers — sums, not rounds, so ranks are engine-exact.
     val qtab = subs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("m"), col("xm").as("qm"))
-      .join(broadcast(trained), "m")
+      .join(broadcast(cbDf(s, cb)), "m")
       .select(col("qid"), col("m"), col("j"),
         dotD(col("qm"), col("cm")).as("t"))
     val scored = codes.join(broadcast(qtab), Seq("m", "j"))
@@ -2044,8 +1963,7 @@ object Similarity {
     val c = hold(embeddings
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
       .withColumn("nrm", l2Norm(col("v"))))
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+    val q = querySlice(c, nQueries)
     val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
     val cands = hold(c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
@@ -3267,8 +3185,7 @@ object Similarity {
       else Some(hold(navGraphShared(s, d).select(col("src"), col("dst"))))
     val hint: DataFrame => DataFrame = if (edges.isDefined) broadcast(_) else identity
     val reach = step.getOrElse((b: DataFrame) => hint(b).join(edges.get, "src"))
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+    val q = querySlice(c, nQueries)
     val ids = (key :+ "qid").map(col)
     def scoreOf(cands: DataFrame): DataFrame = hint(cands)
       .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
@@ -3451,22 +3368,13 @@ object Similarity {
       sweep: Seq[Long] = NprobeSweep): DataFrame = {
     val maxP = sweep.max.toInt
     val c = hold(corpus(s, d))
-    val cents = c.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell_id"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+    val cents = stubCentroids(c, nCells)
+    val q = querySlice(c, nQueries)
     // Probe ranking once, to the sweep's maximum depth.
-    val wProbe = Window.partitionBy("qid").orderBy(desc("csim_e4"), asc("cell_id"))
-    val probeRanks = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cell_id"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cnrm"))).as("csim_e4"))
-      .withColumn("pr", row_number().over(wProbe).cast("long"))
-      .filter(col("pr") <= maxP)
-      .select("qid", "cell_id", "pr")
+    val probeRanks = probeCells(q, cents, maxP).select("qid", "cell_id", "pr")
     // Each candidate carries the probe depth at which it first appears
     // (one row per (qid, cid): a vector is assigned to exactly one cell).
-    val cand = stubAssignment(c, nCells).join(broadcast(probeRanks), "cell_id")
+    val cand = withAssignedCell(c, cents).join(broadcast(probeRanks), "cell_id")
       .select(col("qid"), col("vec_id").as("cid"), col("pr"))
     // cand is occupancy × nprobe × nQueries rows at any corpus size —
     // broadcast it so the vector join-back streams the corpus instead of
@@ -3545,8 +3453,7 @@ object Similarity {
     // Exact-score each DISTINCT pair once, whatever geometries found it.
     // The candidate-pair side is occupancy-bounded — broadcast it and
     // stream the corpus for the vector join-back.
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+    val q = querySlice(c, nQueries)
     val scores = broadcast(cand.select("qid", "cid").distinct())
       .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
       .join(broadcast(q), "qid")

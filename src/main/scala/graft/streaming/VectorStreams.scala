@@ -221,56 +221,98 @@ object VectorStreams {
   }
 
   /** Stateless per-row IVF-PQ encode of (vec_id, embedding) rows against
-    * driver-held artifacts: normalized e4 quantization, coarse argmax,
-    * exact residual, per-subspace anisotropic argmin — all as literal-array
-    * column expressions (works on static frames and streams alike). */
+    * driver-held artifacts (works on static frames and streams alike):
+    * the batch index's own e4 normalization and residual wiring
+    * ([[Similarity.e4Normalized]], [[Similarity.withResidual]]) around
+    * the one quantizer kernel, then each subspace's code through
+    * [[Similarity.pqCode]] under the anisotropic loss — one output column
+    * per subspace, the codebook riding as literals. */
   def ivfPqEncodeColumns(vecs: DataFrame, cents: Seq[(Long, Seq[Double])],
       cb: Seq[(Long, Long, Seq[Double])], m: Int = Similarity.PqM,
       eta: Int = Similarity.PqEta): DataFrame = {
     val sub = Similarity.PqSubDim
-    val ordered = cents.sortBy(_._1)
-    require(ordered.map(_._1) == ordered.indices.map(_.toLong),
-      "cell ids must be 0..nCells-1 (stub-init contract)")
     val base = vecs
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
       .withColumn("nrm", l2Norm(col("v")))
-      .select(col("vec_id"),
-        transform(col("v"), x => round(x / col("nrm") * lit(10000.0))).as("ve"))
-      .withColumn("vn", l2Norm(col("ve")))
-    // Coarse argmax = min over (−e4cosine, cell_id) structs — the same
-    // ordering as the batch cell-assignment kernel (withAssignedCell), one
-    // struct per literal centroid.
-    val simStructs = ordered.map { case (cellId, cv) =>
-      val cvLit = typedlit(cv)
-      struct(
-        negate(e4(dotD(col("ve"), cvLit) / (col("vn") * l2Norm(cvLit)))).as("ns"),
-        lit(cellId).as("cell_id"))
+    def code(i: Int): Column = {
+      def part(c: String) = slice(col(c), i * sub + 1, sub)
+      Similarity.pqCode(cb, lit(i),
+        Similarity.anisoLoss(part("r"), part("xq"), eta)).getField("id")
     }
-    val cvArr = typedlit(ordered.map(_._2))
-    val withR = base
-      .withColumn("cell_id", least(simStructs: _*).getField("cell_id"))
-      .withColumn("cvs", element_at(cvArr, col("cell_id").cast("int") + 1))
-      .withColumn("r", zip_with(col("ve"), col("cvs"), (a, b) => a - b))
-      .withColumn("xq", transform(col("ve"), x => round(x / lit(10.0))))
-    val byM: Map[Long, Seq[(Long, Seq[Double])]] =
-      cb.groupBy(_._1).view
-        .mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap
-    def codeFor(mm: Int): Column = {
-      val rm = slice(col("r"), mm * sub + 1, sub)
-      val xm = slice(col("xq"), mm * sub + 1, sub)
-      val losses = byM(mm.toLong).map { case (j, cm) =>
-        val cmL = typedlit(cm)
-        val d2 = dotD(rm, rm) - lit(2.0) * dotD(rm, cmL) + dotD(cmL, cmL)
-        val ex = dotD(rm, xm) - dotD(cmL, xm)
-        val xx = dotD(xm, xm)
-        val loss = lit((eta - 1).toLong) * ex.cast("long") * ex.cast("long") +
-          xx.cast("long") * d2.cast("long")
-        struct(loss.as("loss"), lit(j).as("j"))
-      }
-      least(losses: _*).getField("j")
+    Similarity.withResidual(Similarity.e4Normalized(base), cents)
+      .select(col("vec_id") +: col("cell_id") +:
+        (0 until m).map(i => code(i).as(s"c$i")): _*)
+  }
+
+  /** REPLICA-SIZE GUARD — the loud-failure standard every other
+    * artifact path here has (manifest validation, under-admit
+    * requires): a serving replica is RAM-resident BY DESIGN, so a
+    * corpus past driver memory must fail with the deployment answer in
+    * the message, not as an opaque OOM mid-collect. Each replica's
+    * estimate is its own arithmetic, computed from cheap distributed
+    * aggregates BEFORE anything is collected; JVM overhead beyond the
+    * modeled terms (map load factor, object padding) is absorbed by the
+    * bound's safety margin: `spark.graft.serving.maxReplicaBytes`
+    * defaults to a QUARTER of driver heap precisely so a few-× estimate
+    * undershoot cannot turn into an OOM. One rule, one knob for every
+    * replica. */
+  private def requireReplicaFits(spark: SparkSession, estBytes: Long,
+      what: String, remedy: String): Unit = {
+    val maxReplicaBytes = spark.conf
+      .getOption("spark.graft.serving.maxReplicaBytes")
+      .map(_.toLong)
+      .getOrElse(Runtime.getRuntime.maxMemory / 4)
+    require(estBytes <= maxReplicaBytes,
+      s"$what estimate ${estBytes} B exceeds " +
+        s"spark.graft.serving.maxReplicaBytes=$maxReplicaBytes B: $remedy")
+  }
+
+  /** (vector count, dim) of an embeddings frame in one aggregate, and the
+    * replica bytes of those vectors: dim doubles + array/boxing overhead
+    * each. max() over zero rows is null — an empty corpus estimates to
+    * 0 bytes and builds the (empty) replica. */
+  private def vectorStats(embDf: DataFrame): (Long, Long, Long) = {
+    val r = embDf.select(count(lit(1)), max(size(col("embedding")))).head()
+    val (nVecs, dim) = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getInt(1).toLong)
+    (nVecs, dim, nVecs * (dim * 8L + 64L))
+  }
+
+  /** The corpus vectors of an embeddings frame, collected (id → vector). */
+  private def collectVectors(embDf: DataFrame): Map[Long, Array[Double]] = {
+    import embDf.sparkSession.implicits._
+    embDf.select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
+      .as[(Long, Array[Double])].collect().toMap
+  }
+
+  /** The graph probes' RAM replica, guarded then loaded: the nav
+    * adjacency (src → sorted dsts), the vectors with their norms, and
+    * the corpus count (the layered probe's log-layer rule resolves from
+    * it). The estimate adds one 8-byte long per edge and a
+    * per-distinct-src term for the adjacency Map's entry + boxed key +
+    * value array header (~48 B each on a 64-bit JVM) to the vectors'
+    * bytes. Shared by both graph probes. */
+  private def graphReplica(spark: SparkSession, staticDir: String):
+      (Map[Long, Array[Long]], Map[Long, (Array[Double], Double)], Long) = {
+    import spark.implicits._
+    val edgesDf = Similarity.navGraphShared(spark, staticDir)
+    val embDf = graft.sources.Tables.embeddings(spark, staticDir)
+    val (nEdges, nSrcs) = {
+      val r = edgesDf.select(count(lit(1)),
+        count_distinct(col("src"))).head()
+      (r.getLong(0), r.getLong(1))
     }
-    withR.select(col("vec_id") +: col("cell_id") +:
-      (0 until m).map(i => codeFor(i).as(s"c$i")): _*)
+    val (nVecs, dim, vecBytes) = vectorStats(embDf)
+    requireReplicaFits(spark, nEdges * 8L + nSrcs * 48L + vecBytes,
+      s"graph-serving replica ($nVecs vectors x dim $dim + $nEdges edges " +
+        s"over $nSrcs sources)",
+      "shard the graph across serving replicas or store SQ8 codes " +
+        "instead of raw doubles (the standard memory/recall trade) " +
+        "before serving this corpus from one RAM replica")
+    val adj = edgesDf.select("src", "dst").as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (s0, es) => s0 -> es.map(_._2).sorted }
+    val vecs = collectVectors(embDf)
+      .map { case (id, v) => id -> (v, math.sqrt(Replica.dot(v, v))) }
+    (adj, vecs, nVecs)
   }
 
   /** Streaming GRAPH-ANN PROBE — the THIRTY-FIRST twin, the online
@@ -296,71 +338,13 @@ object VectorStreams {
     * round (Spark's `round` semantics, NOT Math.round, which differs on
     * negative halves) — so a replayed corpus query returns the batch
     * rows verbatim (VectorStreamsSpec asserts it). */
-  /** REPLICA-SIZE GUARD — the loud-failure standard every other
-    * artifact path here has (manifest validation, under-admit
-    * requires): the serving replica is RAM-resident BY DESIGN, so a
-    * corpus past driver memory must fail with the deployment answer in
-    * the message, not as an opaque OOM mid-collect. The estimate is the
-    * replica's own arithmetic: one 8-byte long per edge, dim doubles +
-    * array/boxing overhead per vector, plus a per-distinct-src term for
-    * the adjacency Map's entry + boxed key + value array header (~48 B
-    * each on a 64-bit JVM) — computed from four cheap distributed
-    * aggregates BEFORE anything is collected. JVM overhead beyond the
-    * modeled terms (map load factor, object padding) is absorbed by the
-    * bound's safety margin: `spark.graft.serving.maxReplicaBytes`
-    * defaults to a QUARTER of driver heap precisely so a few-× estimate
-    * undershoot cannot turn into an OOM. Shared by both graph probes —
-    * one definition, one knob, no silent divergence. Returns the corpus
-    * count too: the layered probe's log-layer rule resolves from it. */
-  private def replicaGuard(spark: SparkSession,
-      staticDir: String): (DataFrame, DataFrame, Long) = {
-    val edgesDf = Similarity.navGraphShared(spark, staticDir)
-    val embDf = graft.sources.Tables.embeddings(spark, staticDir)
-    val (nEdges, nSrcs) = {
-      val r = edgesDf.select(count(lit(1)),
-        count_distinct(col("src"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val (nVecs, dim) = {
-      val r = embDf.select(count(lit(1)),
-        max(size(col("embedding")))).head()
-      // max() over zero rows is null — an empty corpus estimates to 0
-      // bytes and builds the (empty) replica, as it did pre-guard.
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getInt(1).toLong)
-    }
-    val estBytes = nEdges * 8L + nSrcs * 48L + nVecs * (dim * 8L + 64L)
-    val maxReplicaBytes = spark.conf
-      .getOption("spark.graft.serving.maxReplicaBytes")
-      .map(_.toLong)
-      .getOrElse(Runtime.getRuntime.maxMemory / 4)
-    require(estBytes <= maxReplicaBytes,
-      s"graph-serving replica estimate ${estBytes} B ($nVecs vectors x " +
-        s"dim $dim + $nEdges edges over $nSrcs sources) exceeds " +
-        s"spark.graft.serving.maxReplicaBytes=$maxReplicaBytes B: shard " +
-        "the graph across serving replicas or store SQ8 codes instead " +
-        "of raw doubles (the standard memory/recall trade) before " +
-        "serving this corpus from one RAM replica")
-    (edgesDf, embDf, nVecs)
-  }
-
   def graphProbeStream(spark: SparkSession, path: String, staticDir: String,
       k: Int = 5, beam: Int = Similarity.GraphBeam,
       rounds: Int = Similarity.GraphRounds,
       maxFilesPerTrigger: Int = 0,
       tombstones: Set[Long] = Set.empty): DataFrame = {
     import spark.implicits._
-    val (edgesDf, embDf, _) = replicaGuard(spark, staticDir)
-    val adj: Map[Long, Array[Long]] =
-      edgesDf
-        .select("src", "dst").as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (s, es) => s -> es.map(_._2).sorted }
-    val vecs: Map[Long, (Array[Double], Double)] =
-      embDf
-        .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-        .as[(Long, Array[Double])].collect()
-        .map { case (id, v) =>
-          id -> (v, math.sqrt(GraphProbe.dot(v, v)))
-        }.toMap
+    val (adj, vecs, _) = graphReplica(spark, staticDir)
     val badj = spark.sparkContext.broadcast(adj)
     val bvec = spark.sparkContext.broadcast(vecs)
     val entry = Similarity.GraphEntry
@@ -404,17 +388,9 @@ object VectorStreams {
       maxFilesPerTrigger: Int = 0,
       tombstones: Set[Long] = Set.empty): DataFrame = {
     import spark.implicits._
-    val (edgesDf, embDf, nVecs) = replicaGuard(spark, staticDir)
+    val (adj, vecs, nVecs) = graphReplica(spark, staticDir)
     val beamN = if (beam > 0) beam else Similarity.graphBeamFor(nVecs)
     val roundsN = if (rounds > 0) rounds else Similarity.layeredRoundsFor(nVecs)
-    val adj: Map[Long, Array[Long]] = edgesDf
-      .select("src", "dst").as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (s0, es) => s0 -> es.map(_._2).sorted }
-    val vecs: Map[Long, (Array[Double], Double)] = embDf
-      .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .as[(Long, Array[Double])].collect()
-      .map { case (id, v) => id -> (v, math.sqrt(GraphProbe.dot(v, v))) }
-      .toMap
     // Coarse key index: band keys of the n/CoarseMod coarse vectors —
     // the maintained registry a live deployment keeps beside the graph.
     // Geometry = the entry band rule over the coarse layer, exactly the
@@ -423,19 +399,7 @@ object VectorStreams {
       .filter(_ % Similarity.CoarseMod == 0).sorted
     val eRows = Similarity.entryBandRowsFor(coarseIds.length.toLong)
     val coarseIdx: Map[(Int, Long), Array[Long]] = coarseIds
-      .flatMap { cc =>
-        val cv = vecs(cc)._1
-        (0 until 8).map { b =>
-          var key = 0L
-          var r = 0
-          while (r < eRows) {
-            if (GraphProbe.dot(cv, Similarity.plane(b * eRows + r)) > 0)
-              key |= (1L << r)
-            r += 1
-          }
-          (b, key) -> cc
-        }
-      }
+      .flatMap(cc => Replica.bandKeys(vecs(cc)._1, eRows).map(_ -> cc))
       .groupBy(_._1).map { case (bk, ccs) => bk -> ccs.map(_._2).toArray }
     val badj = spark.sparkContext.broadcast(adj)
     val bvec = spark.sparkContext.broadcast(vecs)
@@ -484,31 +448,17 @@ object VectorStreams {
   def navInsertStream(spark: SparkSession, path: String, staticDir: String,
       maxFilesPerTrigger: Int = 0): DataFrame = {
     import spark.implicits._
-    // Size guard, [[replicaGuard]]'s arithmetic minus the edge terms:
-    // this replica is vectors + band-key registry only (no adjacency —
-    // the insert path never walks), so the estimate is dim doubles +
-    // overhead per vector plus 8 registry entries per vector (~16 B
-    // each boxed). Same knob, same remedy, same heap/4 margin.
+    // Size guard: this replica is vectors + band-key registry only (no
+    // adjacency — the insert path never walks), so the estimate is the
+    // vectors' bytes plus 8 registry entries per vector (~16 B each
+    // boxed). Same knob, same margin as the graph replica.
     val embDf = graft.sources.Tables.embeddings(spark, staticDir)
-    val (nVecs, dim) = {
-      val r = embDf.select(count(lit(1)),
-        max(size(col("embedding")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getInt(1).toLong)
-    }
-    val estBytes = nVecs * (dim * 8L + 64L + 8L * 16L)
-    val maxReplicaBytes = spark.conf
-      .getOption("spark.graft.serving.maxReplicaBytes")
-      .map(_.toLong)
-      .getOrElse(Runtime.getRuntime.maxMemory / 4)
-    require(estBytes <= maxReplicaBytes,
-      s"insert-replica estimate ${estBytes} B ($nVecs vectors x dim $dim " +
-        s"+ key registry) exceeds " +
-        s"spark.graft.serving.maxReplicaBytes=$maxReplicaBytes B: shard " +
-        "the ingest by key range or store SQ8 codes in the attach " +
+    val (nVecs, dim, vecBytes) = vectorStats(embDf)
+    requireReplicaFits(spark, vecBytes + nVecs * 8L * 16L,
+      s"insert-replica ($nVecs vectors x dim $dim + key registry)",
+      "shard the ingest by key range or store SQ8 codes in the attach " +
         "replica before running continuous inserts on one node")
-    val vecs: Map[Long, Array[Double]] = embDf
-      .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
-      .as[(Long, Array[Double])].collect().toMap
+    val vecs = collectVectors(embDf)
     // Base band-key registry with occupancy — the maintained artifact a
     // live deployment keeps beside the graph (here derived once from
     // the base corpus, like every other replica input). Geometry = the
@@ -520,7 +470,7 @@ object VectorStreams {
     // practice (equal at the parity corpus, asserted in the spec).
     val rowsN = Similarity.bandRowsFor(nVecs)
     val baseBuckets: Map[(Int, Long), Array[Long]] = vecs.keys.toSeq.sorted
-      .flatMap { id => NavDelta.bandKeys(vecs(id), rowsN).map(bk => bk -> id) }
+      .flatMap { id => Replica.bandKeys(vecs(id), rowsN).map(bk => bk -> id) }
       .groupBy(_._1).map { case (bk, xs) => bk -> xs.map(_._2).toArray }
     val bvec = spark.sparkContext.broadcast(vecs)
     val bbuck = spark.sparkContext.broadcast(baseBuckets)
@@ -537,10 +487,12 @@ object VectorStreams {
   }
 }
 
-/** The per-row beam walk behind [[VectorStreams.graphProbeStream]] —
-  * plain-Scala replica of the batch loop's schedule and arithmetic. */
-private[streaming] object GraphProbe {
+/** The plain-Scala replica kit the per-row serving paths share
+  * ([[GraphProbe]], [[NavDelta]]): the batch expressions' arithmetic
+  * replayed on driver-collected arrays, one definition each. */
+private[streaming] object Replica {
 
+  /** Sequential dot product — the codegen `dotD`'s accumulation order. */
   def dot(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
@@ -550,10 +502,31 @@ private[streaming] object GraphProbe {
 
   /** sim_e4 with Spark's `round` semantics: HALF_UP via BigDecimal —
     * Math.round floors negative halves and would desync the oracle. */
-  private def simE4(qv: Array[Double], qn: Double,
-      cv: Array[Double], cn: Double): Long =
-    java.math.BigDecimal.valueOf(dot(qv, cv) / (qn * cn) * 10000.0)
+  def simE4(a: Array[Double], an: Double, b: Array[Double], bn: Double): Long =
+    java.math.BigDecimal.valueOf(dot(a, b) / (an * bn) * 10000.0)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+
+  /** The 8 × rows-bit sign-projection band keys (band, key) of one
+    * vector — [[graft.operators.Similarity.bandedKeys]] replayed per row
+    * (same planes, strict `> 0` sign; rows from the band-geometry rule
+    * at the caller). */
+  def bandKeys(v: Array[Double], rows: Int): Seq[(Int, Long)] =
+    (0 until 8).map { b =>
+      var key = 0L
+      var r = 0
+      while (r < rows) {
+        if (dot(v, graft.operators.Similarity.plane(b * rows + r)) > 0)
+          key |= (1L << r)
+        r += 1
+      }
+      (b, key)
+    }
+}
+
+/** The per-row beam walk behind [[VectorStreams.graphProbeStream]] —
+  * plain-Scala replica of the batch loop's schedule and arithmetic. */
+private[streaming] object GraphProbe {
+  import Replica.{dot, simE4}
 
   def walk(qid: Long, qv: Array[Double], entry: Long, beam: Int,
       rounds: Int, k: Int, adj: Map[Long, Array[Long]],
@@ -606,16 +579,9 @@ private[streaming] object GraphProbe {
       vecs: Map[Long, (Array[Double], Double)],
       rows: Int = 4): Array[Long] = {
     val qn = math.sqrt(dot(qv, qv))
-    val cands = (0 until 8).flatMap { b =>
-      var key = 0L
-      var r = 0
-      while (r < rows) {
-        if (dot(qv, graft.operators.Similarity.plane(b * rows + r)) > 0)
-          key |= (1L << r)
-        r += 1
-      }
-      coarseIdx.getOrElse((b, key), Array.empty[Long])
-    }.distinct.filterNot(_ == qid)
+    val cands = Replica.bandKeys(qv, rows)
+      .flatMap(coarseIdx.getOrElse(_, Array.empty[Long]))
+      .distinct.filterNot(_ == qid)
     if (cands.isEmpty) Array(fallback)
     else {
       val ord = Ordering.by[(Long, Long), (Long, Long)] { case (s, c) => (-s, c) }
@@ -642,22 +608,9 @@ case class NavDeltaEdge(src: Long, dst: Long, edge_class: String)
   * so a batch replayed as one trigger reproduces the `navdelta` product
   * rows exactly. */
 private[streaming] object NavDelta {
-  import graft.operators.Similarity.{plane, KnnK, KnnBucketCap, CoarseMod,
+  import graft.operators.Similarity.{KnnK, KnnBucketCap, CoarseMod,
     NavMirrorCap, NavDownCap, NavHighwayK, GraphEntry}
-
-  /** The 8 × rows-bit sign-projection band keys —
-    * [[Similarity.bandedKeys]] replayed per row (rows from the
-    * band-geometry rule at the caller). */
-  def bandKeys(v: Array[Double], rows: Int = 4): Seq[(Int, Long)] =
-    (0 until 8).map { b =>
-      var key = 0L
-      var r = 0
-      while (r < rows) {
-        if (GraphProbe.dot(v, plane(b * rows + r)) > 0) key |= (1L << r)
-        r += 1
-      }
-      (b, key)
-    }
+  import Replica.{bandKeys, dot}
 
   def delta(arrivals: Array[(Long, Array[Double])],
       base: Map[Long, Array[Double]],
@@ -668,12 +621,9 @@ private[streaming] object NavDelta {
     def vecOf(id: Long): Array[Double] = arr.getOrElse(id, base(id))
     def nrmOf(id: Long): Double =
       nrms.getOrElseUpdate(id,
-        math.sqrt(GraphProbe.dot(vecOf(id), vecOf(id))))
-    // HALF_UP e4 — Spark round() semantics, as everywhere in the family.
+        math.sqrt(dot(vecOf(id), vecOf(id))))
     def sim(a: Long, b: Long): Long =
-      java.math.BigDecimal.valueOf(
-          GraphProbe.dot(vecOf(a), vecOf(b)) / (nrmOf(a) * nrmOf(b)) * 10000.0)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+      Replica.simE4(vecOf(a), nrmOf(a), vecOf(b), nrmOf(b))
     val arrKeys: Map[Long, Seq[(Int, Long)]] =
       arr.map { case (id, v) => id -> bandKeys(v, rows) }
     val arrBuckets: Map[(Int, Long), Array[Long]] = arrKeys.toSeq

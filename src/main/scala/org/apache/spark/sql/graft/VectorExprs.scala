@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * evaluated by interpreting a lambda per element and allocating an
   * intermediate array per row — fine for one-off scalar queries, ruinous
   * inside an all-pairs similarity loop (O(n²) rows × 64 elements). This
-  * expression participates in whole-stage codegen: the generated Java is a
-  * single primitive loop over the two `ArrayData` buffers, no allocation.
+  * expression participates in whole-stage codegen: the generated Java
+  * calls one compiled primitive loop over the two `ArrayData` buffers
+  * ([[DotProductDouble.dot]]), the same one interpreted eval runs.
   *
   * Semantics match the HOF formulation it replaces exactly:
   *  - accumulation is ascending-index sequential (bit-identical to DuckDB's
@@ -38,9 +39,33 @@ case class DotProductDouble(left: Expression, right: Expression)
   // input columns themselves are non-nullable.
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProductDouble.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  // The generated code CALLS the one compiled loop instead of inlining it:
+  // a projection holding many dot products (the quantizer kernel unrolls
+  // K centroids × 3 per row) would otherwise carry one loop per call site
+  // and grow past the JVM's 8,000-byte JIT limit, leaving the whole
+  // generated method interpreted.
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val d = ctx.freshName("dot")
+      s"""
+         |java.lang.Double $d =
+         |  org.apache.spark.sql.graft.DotProductDouble$$.MODULE$$.dot($x, $y);
+         |if ($d == null) { ${ev.isNull} = true; } else { ${ev.value} = $d; }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProductDouble =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProductDouble {
+  /** Σ xᵢ·yᵢ in ascending index order; null on a length mismatch or a
+    * null element. */
+  def dot(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var acc = 0.0
@@ -52,30 +77,6 @@ case class DotProductDouble(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += $x.getDouble($i) * $y.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductDouble =
-    copy(left = newLeft, right = newRight)
 }
 
 object VectorExprs {

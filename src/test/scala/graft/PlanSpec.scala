@@ -238,6 +238,33 @@ class PlanSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("PQ encodes are projections: no exchange hash-partitioned on (vec_id, m)") {
+    // Every PQ code comes from the quantizer kernel, a projection over the
+    // driver-held codebook — an argmin aggregate per (vector, subspace)
+    // would show up as a shuffle keyed on exactly those two columns.
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    for (q <- Seq("sim_pq_topk", "sim_pq_trained", "sim_ivfpq_topk",
+        "sim_ivfpq_trained")) {
+      val df = SparkEntry.queries(q)(spark, TestSpark.sf)
+      val keys = Plans.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }.collect { case h: HashPartitioning =>
+        h.expressions.map {
+          case a: AttributeReference => a.name
+          case other => other.sql
+        }
+      }
+      assert(keys.nonEmpty, s"$q: no hash exchange found at all — the plan walk is broken")
+      assert(!keys.contains(Seq("vec_id", "m")),
+        s"$q: a per-(vec_id, m) shuffle is back — keys $keys")
+      spark.catalog.clearCache()
+    }
+  }
+
   test("sim_ivfpq_served: probe/qtab broadcast; NO training scan of the corpus") {
     // The serve path must read the persisted index plus ONLY the query
     // slice of the corpus: probes/qtab/q broadcast (model/query-sized),
